@@ -99,8 +99,9 @@ object Bench {
     // the one-line JSON the process's final output for the driver's
     // extractor (r13 verdict item 1 — every BENCH_r*.json parsed null
     // because the line arrived sbt-"[info]"-prefixed and non-final).
-    // The timed region and the line's content are unchanged.
-    spark.stop()
+    // The timed region and the line's content are unchanged. A
+    // failing stop() must not swallow the line: the results are final.
+    try spark.stop() catch { case scala.util.control.NonFatal(_) => () }
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","reps":$reps,"n_queries":${results.size},"errors":$errs,"queries":$qs,"sf":"$sfDir"}""")
     Console.out.flush()
   }

@@ -950,14 +950,20 @@ object TxnLog {
     * per commit across the whole txn family, which the r13/r14 stage
     * profiles showed is commit-protocol driver latency, not data
     * work. This is exactly how a real table format derives its
-    * manifest ranges — from write-time file stats, never a re-read. */
-  private def fileRanges(spark: SparkSession, path: String): KeyRanges = {
-    val _ = spark // kept for call-site symmetry; the walk is driver-side
+    * manifest ranges — from write-time file stats, never a re-read.
+    * A file whose footer has no `key` min/max (statistics disabled,
+    * a non-LONG key) gets its range from the [[range]] aggregate
+    * instead: dropping it would hide its writes from
+    * [[rangesOverlap]], a lost update. */
+  private[graft] def fileRanges(spark: SparkSession,
+      path: String): KeyRanges =
     FooterStats.read(new java.io.File(path))
-      .flatMap(fs => fs.cols.get("key").flatMap(c =>
-        for (mn <- c.min; mx <- c.max) yield (mn, mx)))
+      .flatMap { fs =>
+        fs.cols.get("key")
+          .flatMap(c => for (mn <- c.min; mx <- c.max) yield Seq((mn, mx)))
+          .getOrElse(range(spark.read.parquet(fs.path)))
+      }
       .sortBy(_._1)
-  }
 
   /** Apply a keyed delta (key, …value cols…, op ∈ upsert|delete) to
     * a snapshot (key, …value cols…): upserts replace the columns the

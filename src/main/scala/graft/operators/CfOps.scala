@@ -505,6 +505,19 @@ object CfOps {
        |JOIN norms nb ON p.user_b = nb.user_id
        |ORDER BY user_a, user_b""".stripMargin
 
+  /** Add one candidate term to `acc(item)` = (Σ term micros, Σ
+    * weight), the per-key accumulator of the local scoring folds.
+    * Both sums are exact: past Long range they throw, the fail-loud
+    * contract of [[Exact.xsumFast]]'s overflow guard, instead of
+    * wrapping into a wrong score. */
+  private[graft] def foldMicros(acc: java.util.HashMap[Long, Array[Long]],
+      item: Long, termMicros: Long, weight: Long): Unit = {
+    var a = acc.get(item)
+    if (a == null) { a = Array(0L, 0L); acc.put(item, a) }
+    a(0) = Math.addExact(a(0), termMicros)
+    a(1) = Math.addExact(a(1), weight)
+  }
+
   /** User-based kNN prediction — the transpose of [[predictKnn]]:
     * for each user, the k most-similar users (from the capped
     * user–user cosine pairs) vote with their ratings; score is the
@@ -566,12 +579,9 @@ object CfOps {
           if (!isOwn) {
             val simAbsMicros = Exact.quantize6(math.abs(sim))
             rl.foreach { case (item, rating) =>
-              if (!seen.contains(item)) {
-                var a = acc.get(item)
-                if (a == null) { a = Array(0L, 0L); acc.put(item, a) }
-                a(0) += Exact.quantize6(sim * rating)
-                a(1) += simAbsMicros
-              }
+              if (!seen.contains(item))
+                foldMicros(acc, item, Exact.quantize6(sim * rating),
+                  simAbsMicros)
             }
           }
         }
@@ -1140,13 +1150,8 @@ object CfOps {
             var x = 0
             while (x < ps.length) {
               val (j, diff, c) = ps(x)
-              if (!seen.contains(j)) {
-                val term = Exact.quantize6(diff + rating * c)
-                var a = acc.get(j)
-                if (a == null) { a = Array(0L, 0L); acc.put(j, a) }
-                a(0) += term
-                a(1) += c
-              }
+              if (!seen.contains(j))
+                foldMicros(acc, j, Exact.quantize6(diff + rating * c), c)
               x += 1
             }
           }

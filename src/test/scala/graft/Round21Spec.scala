@@ -73,6 +73,18 @@ class Round21Spec extends SparkSpec {
     }
   }
 
+  test("the local folds' micro accumulators throw on overflow, not wrap") {
+    val acc = new java.util.HashMap[Long, Array[Long]]()
+    graft.operators.CfOps.foldMicros(acc, 7L, 2500000L, 3L)
+    graft.operators.CfOps.foldMicros(acc, 7L, -500000L, 4L)
+    assert(acc.get(7L).toSeq == Seq(2000000L, 7L))
+    graft.operators.CfOps.foldMicros(acc, 9L, Long.MaxValue - 1L, 1L)
+    intercept[ArithmeticException](
+      graft.operators.CfOps.foldMicros(acc, 9L, 2L, 1L))
+    intercept[ArithmeticException](
+      graft.operators.CfOps.foldMicros(acc, 7L, 0L, Long.MaxValue))
+  }
+
   test("reworked slope_one reproduces the join+aggregate formulation") {
     val got = graft.operators.CfOps.slopeOne(spark, sfDir).collect()
     // the OLD formulation, inlined: join ratings to the capped

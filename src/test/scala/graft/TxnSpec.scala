@@ -58,8 +58,10 @@ class TxnSpec extends SparkSpec {
     TxnLog.destroy(root)
   }
 
-  test("overlapping racers: loser is conflict-rejected, final state is serial") {
-    val root = freshRoot("race")
+  /** Two writers race increments of keys {1, 2} and {2, 3} over a
+    * seeded table: the loser must take the conflict re-run (key 2
+    * overlaps) and the final state must be the serial one. */
+  private def overlappingRace(root: String): Unit = {
     TxnLog.commit(spark, root, _ => (upserts(1L -> 100L, 2L -> 200L), Seq((1L, 2L))))
     val barrier = new CyclicBarrier(2)
     val stats = new java.util.concurrent.ConcurrentLinkedQueue[TxnLog.TxnStats]()
@@ -77,6 +79,31 @@ class TxnSpec extends SparkSpec {
     assert(all.map(_.version).toSet == Set(1L, 2L))
     // serial outcome regardless of winner order (increments commute)
     assert(state(root) == Map(1L -> 107L, 2L -> 218L, 3L -> 11L))
+  }
+
+  test("overlapping racers: loser is conflict-rejected, final state is serial") {
+    val root = freshRoot("race")
+    overlappingRace(root)
+    TxnLog.destroy(root)
+  }
+
+  test("delta files without key stats still conflict: no silent lost update") {
+    // with parquet statistics off no delta footer carries a key
+    // min/max; the old footer-only ranges dropped every such file, so
+    // the loser rebased over the overlap and lost an increment of key 2
+    val root = freshRoot("nostats")
+    spark.conf.set("parquet.column.statistics.enabled", "false")
+    try {
+      overlappingRace(root)
+      val delta = s"$root/delta_v0"
+      val footers = graft.engine.FooterStats.read(new java.io.File(delta))
+      assert(footers.nonEmpty &&
+        footers.forall(_.cols.get("key").forall(_.min.isEmpty)),
+        "premise: the delta's footers carry no key stats")
+      val written = TxnLog.fileRanges(spark, delta)
+      assert(Seq(1L, 2L).forall(k => TxnLog.rangesOverlap(written, Seq((k, k)))),
+        s"written ranges $written must cover keys 1 and 2")
+    } finally spark.conf.unset("parquet.column.statistics.enabled")
     TxnLog.destroy(root)
   }
 
