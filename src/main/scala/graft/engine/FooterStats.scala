@@ -15,7 +15,7 @@ import scala.jdk.CollectionConverters._
 object FooterStats {
 
   /** Per-column footer stats: min/max (absent when the writer left
-    * no stats or the file is empty), the null count, and the column
+    * no stats or every value is null), the null count, and the column
     * chunks' UNCOMPRESSED byte total (decoded codec, still
     * parquet-encoded) — the per-column half of width-aware join
     * pricing: a projection that keeps 2 of 40 columns must be priced
@@ -57,11 +57,13 @@ object FooterStats {
                   case s: org.apache.parquet.column.statistics
                       .LongStatistics => s
                 }
-                val nonEmpty = sts.filterNot(_.isEmpty)
+                // an all-null chunk's stats are not empty (they carry
+                // its null count) but its min/max read as 0
+                val valued = sts.filter(_.hasNonNullValue)
                 name -> ColStat(
-                  if (nonEmpty.nonEmpty) Some(nonEmpty.map(_.getMin).min)
+                  if (valued.nonEmpty) Some(valued.map(_.getMin).min)
                   else None,
-                  if (nonEmpty.nonEmpty) Some(nonEmpty.map(_.getMax).max)
+                  if (valued.nonEmpty) Some(valued.map(_.getMax).max)
                   else None,
                   sts.map(s => math.max(s.getNumNulls, 0L)).sum,
                   chunks.map(_.getTotalUncompressedSize).sum)

@@ -112,32 +112,17 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Memoized base relations per (application, sfDir, table). This
-    * reuses the analyzed LogicalRelation OBJECT — file listing and
-    * schema resolution happen once per session — while each query
-    * still plans its own scan on top, so column pruning and filter
-    * pushdown remain per-query (no data is cached here).
-    *
-    * Same sfDir-scoped lifecycle as [[DfCache]]: touching a NEW
-    * (application, sfDir) scope drops every other scope's relations,
-    * so a session sweeping many scale-factor directories holds one
-    * directory's file listings, not all of them (re-resolution is a
-    * footer read — interleaved callers only pay that, never
-    * correctness). */
-  private val relCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val scope = s"${spark.sparkContext.applicationId}|$sfDir"
-    relCache.keys.filter(!_.startsWith(scope + "|"))
-      .foreach(relCache.remove)
-    relCache.getOrElseUpdate(s"$scope|$name",
+  /** Base relation per (application, sfDir, table), memoized in
+    * [[DfCache]]. This reuses the analyzed LogicalRelation OBJECT —
+    * file listing and schema resolution happen once per session —
+    * while each query still plans its own scan on top, so column
+    * pruning and filter pushdown remain per-query (no data is cached
+    * here). */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    DfCache.memo(spark, sfDir, s"table_$name") {
       if (name == "events") eventsRaw(spark, sfDir)
-      else spark.read.schema(schemas(name)).parquet(s"$sfDir/$name.parquet"))
-  }
-
-  /** Test hook: live relation-cache keys. */
-  private[graft] def relCacheKeys: Seq[String] = relCache.keys.toSeq
+      else spark.read.schema(schemas(name)).parquet(s"$sfDir/$name.parquet")
+    }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
@@ -154,20 +139,13 @@ object Tables {
     * column as TimestampType. Wiring the unit to the FILE rather than
     * the build means a driver-side fixture regeneration can never
     * silently shift every event timestamp by 1000×. */
-  private val tsUnitCache =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
-  def eventsTsIsNanos(s: SparkSession, d: String): Boolean = {
-    // one boolean per (application, sfDir) — bounded in any sane run,
-    // but capped anyway so a pathological many-directory sweep cannot
-    // grow it without limit (re-sniffing is one footer read)
-    if (tsUnitCache.size > 64) tsUnitCache.clear()
-    tsUnitCache.getOrElseUpdate(
-      s"${s.sparkContext.applicationId}|$d", {
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        s.read.parquet(s"$d/events.parquet").schema("ts").dataType ==
-          LongType
-      })
-  }
+  def eventsTsIsNanos(s: SparkSession, d: String): Boolean =
+    DfCache.memo(s, d, "events_ts_nanos") {
+      // session-wide, never restored: the caller's action plans the
+      // returned events frame lazily, after any scoped restore
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      s.read.parquet(s"$d/events.parquet").schema("ts").dataType == LongType
+    }
 
   private def eventsRaw(s: SparkSession, d: String): DataFrame =
     if (eventsTsIsNanos(s, d))

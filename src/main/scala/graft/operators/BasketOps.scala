@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.fpm.FPGrowth
-import graft.engine.{Exact, Tables}
+import graft.engine.{DfCache, Exact, Tables}
 import graft.functions.Udfs
 import graft.functions.Udfs.rnd6
 
@@ -42,7 +42,7 @@ object BasketOps {
     * quantity. Cached — both queries and their one FPGrowth fit share
     * it. */
   private def baskets(spark: SparkSession, sfDir: String): DataFrame =
-    CfOps.cache(spark, sfDir, "baskets") {
+    DfCache(spark, sfDir, "baskets") {
       import spark.implicits._
       val byBrand = Tables.orders(spark, sfDir)
         .select($"o_orderkey", $"o_custkey")

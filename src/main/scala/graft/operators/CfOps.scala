@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Exact, Tables}
+import graft.engine.{DfCache, Exact, Tables}
 import graft.functions.Udfs.{rnd6, sqlRnd6}
 
 /** Item-based collaborative-filtering recommender chain (SURVEY.md
@@ -50,17 +50,6 @@ object CfOps {
     * ratings; only the similarity estimate is capped. */
   private val USER_ITEM_CAP = 32
 
-  /** Persist-once cache for genuine reuse points (the normalized-
-    * ratings and similarity intermediates are consumed by several
-    * downstream queries, and by several subtrees WITHIN one query).
-    * Shared [[graft.engine.DfCache]] semantics: per-(application,
-    * sfDir) scope, other scopes evicted + unpersisted on first use of
-    * a new one — see its doc for the lifecycle rationale. */
-  private[graft] val cache = new graft.engine.DfCache
-  private def cached(spark: SparkSession, sfDir: String, name: String)(
-      build: => DataFrame): DataFrame =
-    cache(spark, sfDir, name)(build)
-
   /** (user_id, item_id, rating) from orders⋈lineitem. Reads the shared
     * persisted intermediate — the whole CF chain derives ratings exactly
     * once per session. */
@@ -77,7 +66,7 @@ object CfOps {
 
   /** Ratings as a persisted intermediate (same values minus the sort). */
   private def ratings(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "ratings") {
+    DfCache(spark, sfDir, "ratings") {
       import spark.implicits._
       Tables.orders(spark, sfDir).select($"o_orderkey", $"o_custkey")
         .join(Tables.lineitem(spark, sfDir).select($"l_orderkey", $"l_partkey", $"l_quantity"),
@@ -151,7 +140,7 @@ object CfOps {
     * self-join + pair aggregation runs ONCE per session instead of
     * once per similarity measure. */
   private def pairMoments(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "pairMoments") {
+    DfCache(spark, sfDir, "pairMoments") {
       import spark.implicits._
       // Mean-centered deviations ride the SAME pair pass (round 13):
       // adjusted cosine previously ran a SECOND capped self-join over
@@ -199,7 +188,7 @@ object CfOps {
   // private[operators]: the hybrid recommender (ContentOps) blends
   // these collaborative pairs with content pairs
   private[operators] def simPairs(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "simPairs") {
+    DfCache(spark, sfDir, "simPairs") {
       import spark.implicits._
       val r = cappedRatings(spark, sfDir)
       val norms = r.groupBy($"item_id")
@@ -447,7 +436,7 @@ object CfOps {
     * ([[userSimPairs]], [[GraphOps]]' pair graph and HITS). Cached:
     * several consumers, one window pass. */
   private[operators] def itemCappedRatings(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "itemCappedRatings") {
+    DfCache(spark, sfDir, "itemCappedRatings") {
       import spark.implicits._
       import org.apache.spark.sql.expressions.Window
       val capW = Window.partitionBy($"item_id")
@@ -459,7 +448,7 @@ object CfOps {
     }
 
   private[operators] def userSimPairs(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "userSimPairs") {
+    DfCache(spark, sfDir, "userSimPairs") {
       import spark.implicits._
       val capped = itemCappedRatings(spark, sfDir)
       val norms = capped.groupBy($"user_id")
@@ -673,7 +662,7 @@ object CfOps {
 
   /** Unsorted, persisted k-NN neighbor lists (reused by predict). */
   private def neighbors(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "neighbors") {
+    DfCache(spark, sfDir, "neighbors") {
       import spark.implicits._
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy($"item_a").orderBy($"sim".desc, $"item_b".asc)
@@ -730,7 +719,7 @@ object CfOps {
     // coverage / novelty / diversity evaluations), so the whole
     // scoring chain persists once per (app, sfDir): the bench-all
     // sweep measured each eval re-paying the scored-join otherwise.
-    cached(spark, sfDir, "recsTopN") {
+    DfCache(spark, sfDir, "recsTopN") {
       import org.apache.spark.sql.expressions.Window
       val r = ratings(spark, sfDir)
       // neighbor lists are k·n_items rows — broadcast-sized, but let
@@ -973,6 +962,24 @@ object CfOps {
     math.max(1, math.min(math.max(bySize, floor), par))
   }
 
+  /** Fit `als` on `r` and pin each user's top-10 recs, then release
+    * the `userFactors`/`itemFactors` RDDs the fit left persisted:
+    * MLlib keeps them for the model's lifetime, and the pinned recs
+    * no longer read them, so every call used to leak both. */
+  private def alsRecs(spark: SparkSession, r: DataFrame,
+      als: org.apache.spark.ml.recommendation.ALS): DataFrame = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val recs = graft.engine.IterativeTuning.withSmallIterative(spark) {
+      als.fit(r).recommendForAllUsers(10).localCheckpoint(true)
+    }
+    sc.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before(id) && Set("userFactors", "itemFactors")(rdd.name))
+        rdd.unpersist(blocking = false)
+    }
+    recs
+  }
+
   /** MLlib ALS factorization (the driver-sanctioned modern path for
     * the reference's CF core). Seeded for rerun stability; output is
     * the exploded top-10 recommendations per user. No SQL oracle
@@ -1014,16 +1021,11 @@ object CfOps {
     // minimum at BOTH core counts (fit+rec 1.6 s warm at each), so
     // the r13 driver read of q_cf_als "slower at 32 cores" was
     // fleet-context noise, not a plan property.
-    val recs = graft.engine.IterativeTuning.withSmallIterative(spark) {
-      val model = new ALS()
-        .setUserCol("user").setItemCol("item").setRatingCol("rating")
-        .setRank(8).setMaxIter(4).setRegParam(0.1).setSeed(42L)
-        .setNumUserBlocks(blocks).setNumItemBlocks(blocks)
-        .setImplicitPrefs(false).setColdStartStrategy("drop")
-        .fit(r)
-      model.setPredictionCol("prediction")
-      model.recommendForAllUsers(10).localCheckpoint(true)
-    }
+    val recs = alsRecs(spark, r, new ALS()
+      .setUserCol("user").setItemCol("item").setRatingCol("rating")
+      .setRank(8).setMaxIter(4).setRegParam(0.1).setSeed(42L)
+      .setNumUserBlocks(blocks).setNumItemBlocks(blocks)
+      .setImplicitPrefs(false).setColdStartStrategy("drop"))
     recs
       .select($"user".as("user_id"),
         posexplode($"recommendations").as(Seq("rk0", "rec")))
@@ -1053,15 +1055,11 @@ object CfOps {
         $"rating".cast("float").as("rating"))
     val blocks = alsBlocks(spark, r.count())
     // Same iterative-tuning + pinned-recs shape as [[als]] (see there).
-    val recs = graft.engine.IterativeTuning.withSmallIterative(spark) {
-      val model = new ALS()
-        .setUserCol("user").setItemCol("item").setRatingCol("rating")
-        .setRank(8).setMaxIter(4).setRegParam(0.1).setSeed(42L)
-        .setNumUserBlocks(blocks).setNumItemBlocks(blocks)
-        .setImplicitPrefs(true).setAlpha(1.0).setColdStartStrategy("drop")
-        .fit(r)
-      model.recommendForAllUsers(10).localCheckpoint(true)
-    }
+    val recs = alsRecs(spark, r, new ALS()
+      .setUserCol("user").setItemCol("item").setRatingCol("rating")
+      .setRank(8).setMaxIter(4).setRegParam(0.1).setSeed(42L)
+      .setNumUserBlocks(blocks).setNumItemBlocks(blocks)
+      .setImplicitPrefs(true).setAlpha(1.0).setColdStartStrategy("drop"))
     recs
       .select($"user".as("user_id"),
         posexplode($"recommendations").as(Seq("rk0", "rec")))
@@ -1459,7 +1457,7 @@ object CfOps {
     // production chain's pairMoments/recsTopN — without this the
     // heaviest plan in the fleet (a full second kNN train) rebuilds
     // on every evaluation query
-    val recs = cached(spark, sfDir, "evalRecs")(knnTopNOn(train))
+    val recs = DfCache(spark, sfDir, "evalRecs")(knnTopNOn(train))
     val marked = recs
       .join(test, $"user_id" === $"tu" && $"item_id" === $"ti", "left")
       .select($"user_id", $"rk",

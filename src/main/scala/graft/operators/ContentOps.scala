@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{DfCache, Tables}
 
 /** Content-based item similarity — the cold-start complement of the
   * collaborative chain in [[CfOps]]: a brand-new item has no ratings,
@@ -85,13 +85,10 @@ object ContentOps {
        |  JOIN attrs ab ON ab.item_id = c.item_b AND ab.a = aa.a
        |  GROUP BY 1, 2)""".stripMargin
 
-  /** Verified candidate pairs are consumed by BOTH contentSim and
-    * contentKnn — persist once per (application, sfDir) scope, same
-    * lifecycle as the CF/dedup intermediates. */
-  private[graft] val cache = new graft.engine.DfCache
-
+  /** Verified candidate pairs, consumed by BOTH contentSim and
+    * contentKnn — persisted once per (application, sfDir) scope. */
   private def candidates(spark: SparkSession, sfDir: String): DataFrame =
-    cache(spark, sfDir, "content_candidates") {
+    DfCache(spark, sfDir, "content_candidates") {
       candidatesUncached(spark, sfDir)
     }
 

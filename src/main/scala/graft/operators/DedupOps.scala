@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{DfCache, Tables}
 import graft.functions.Udfs.{rnd6, sqlRnd6}
 
 /** Deduplication family over `documents` (north-star LLM-pipeline
@@ -35,19 +35,6 @@ import graft.functions.Udfs.{rnd6, sqlRnd6}
 object DedupOps {
 
   private val P31 = Int.MaxValue.toLong // 2^31 − 1, prime
-
-  /** Persist-once cache for the shared dedup intermediates (same
-    * pattern as the CF chain): the shingle inverted index feeds
-    * near-dup, MinHash-LSH (twice per plan), and clustering; the
-    * near-pair edge set feeds near-dup AND clustering. Without this,
-    * every dedup query re-explodes the corpus. Shared
-    * [[graft.engine.DfCache]] semantics: per-(application, sfDir)
-    * scope, other scopes evicted + unpersisted on first use of a new
-    * one — see its doc for the lifecycle rationale. */
-  private[graft] val cache = new graft.engine.DfCache
-  private def cached(spark: SparkSession, sfDir: String, name: String)(
-      build: => DataFrame): DataFrame =
-    cache(spark, sfDir, name)(build)
 
   /** Spark-side token explode of lower(text) (whitespace tokens). */
   private def tokens(spark: SparkSession, sfDir: String): DataFrame = {
@@ -106,7 +93,7 @@ object DedupOps {
   }
 
   private def shingles(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "shingles") {
+    DfCache(spark, sfDir, "shingles") {
       informativeShingles(Tables.documents(spark, sfDir))
     }
 
@@ -177,7 +164,7 @@ object DedupOps {
     * ([[dedupContainment]], which needs pairs a Jaccard threshold
     * would discard: a small doc fully inside a big one). */
   private def sharedPairs(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "sharedPairs") {
+    DfCache(spark, sfDir, "sharedPairs") {
       import spark.implicits._
       val sh = shingles(spark, sfDir)
       val counts = sh.groupBy($"doc_id").agg(count(lit(1)).as("n_sh"))
@@ -194,7 +181,7 @@ object DedupOps {
     * inverted shingle index) — shared by [[dedupNear]] and the
     * connected-components clustering in [[dedupCluster]]. */
   private def nearPairs(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "nearPairs") {
+    DfCache(spark, sfDir, "nearPairs") {
       import spark.implicits._
       sharedPairs(spark, sfDir)
         .select($"doc_a", $"doc_b", $"shared",
@@ -346,7 +333,7 @@ object DedupOps {
     * band-bucketed exactly like MinHash-LSH; here the per-doc
     * signature is the verified output. */
   private def simhashSigs(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "simhashSigs") {
+    DfCache(spark, sfDir, "simhashSigs") {
       import spark.implicits._
       tokens(spark, sfDir)
         .withColumn("h", expr("cast(conv(substring(md5(tok), 1, 8), 16, 10) as bigint)"))
@@ -451,7 +438,7 @@ object DedupOps {
     * convergence loop feeds [[dedupCluster]] and [[dedupSurvivors]] —
     * without this each would pay its own fixpoint iteration. */
   private def clusterLabels(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "clusterLabels") {
+    DfCache(spark, sfDir, "clusterLabels") {
       import spark.implicits._
       hashMinLabels(
         Tables.documents(spark, sfDir).select($"doc_id"),
@@ -884,16 +871,16 @@ object DedupOps {
     // 8 shuffle partitions halve the fixed per-exchange overhead and
     // at 100 TB this is the same per-query sizing decision as the
     // HNSW/streaming harness notes (restored before returning)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try dedupPrefixFilterInner(spark, sfDir)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    graft.engine.IterativeTuning.withConf(spark,
+        Seq("spark.sql.shuffle.partitions" -> "8")) {
+      dedupPrefixFilterInner(spark, sfDir)
+    }
   }
 
   private def dedupPrefixFilterInner(spark: SparkSession,
       sfDir: String): DataFrame = {
     import spark.implicits._
-    val sh = cached(spark, sfDir, "rawShingleUniverse") {
+    val sh = DfCache(spark, sfDir, "rawShingleUniverse") {
       rawShingles(Tables.documents(spark, sfDir))
     }
     // dfreq (one row per distinct shingle), per-doc counts, and the
@@ -954,7 +941,7 @@ object DedupOps {
     // the single hottest stage in the fleet bench). Past the budget
     // the set table degrades to a shuffle join keyed by doc, same
     // shape — now decided by the stats, not by hand.
-    val sets = cached(spark, sfDir, "prefixFilterSets") {
+    val sets = DfCache(spark, sfDir, "prefixFilterSets") {
       sh.groupBy($"doc_id")
         .agg(sort_array(collect_list($"shingle")).as("shs"))
     }

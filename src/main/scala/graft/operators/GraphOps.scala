@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.DfCache
 import graft.engine.Exact.sqlXsum
 
 /** Iterative graph analytics over derived similarity graphs — the
@@ -49,15 +50,6 @@ object GraphOps {
     * out-degree. */
   private val SCALE = 1000000000000L
 
-  /** Persist-once cache shared by the whole graph family — the same
-    * lifecycle as [[CfOps.cache]]/[[DedupOps.cache]]. Replaces the
-    * old per-key persist + unpersist-before-return pattern, which
-    * silently UNDID itself: the unpersist ran before the caller
-    * executed the returned frame, so iterative consumers (pagerank's
-    * 5 rounds, the k-core peel) recomputed the edge list once per
-    * plan reference at action time. */
-  private[graft] val cache = new graft.engine.DfCache
-
   /** Undirected edge list (both directions) from the capped user–user
     * cosine pairs. NOT separately cached (r14, from the r13 ADVICE):
     * its only consumer is [[edgesBySrc]]'s one-shot build, so a
@@ -94,7 +86,7 @@ object GraphOps {
     * which graph key (wrapped or not) first populates the cache. */
   private def edgesBySrc(spark: SparkSession, sfDir: String): DataFrame =
     graft.engine.IterativeTuning.withSmallIterative(spark) {
-      cache(spark, sfDir, "graphEdgesBySrc") {
+      DfCache(spark, sfDir, "graphEdgesBySrc") {
         edges(spark, sfDir).repartition(col("src"))
       }
     }
@@ -108,7 +100,7 @@ object GraphOps {
     * and the cached result keeps the src layout. */
   private def edgesWithOutdeg(spark: SparkSession, sfDir: String): DataFrame =
     graft.engine.IterativeTuning.withSmallIterative(spark) {
-      cache(spark, sfDir, "graphEdgesOutdeg") {
+      DfCache(spark, sfDir, "graphEdgesOutdeg") {
         val e = edgesBySrc(spark, sfDir)
         val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
         e.join(deg, "src")
@@ -957,11 +949,11 @@ object GraphOps {
     // half-step's static side exchange-free — only the node-sized
     // score table moves (guide §2.4; same round-13 profile evidence as
     // [[edgesBySrc]]).
-    val eU = cache(spark, sfDir, "hitsEdgesByUser") {
+    val eU = DfCache(spark, sfDir, "hitsEdgesByUser") {
       CfOps.itemCappedRatings(spark, sfDir)
         .select($"user_id", $"item_id").repartition($"user_id")
     }
-    val eI = cache(spark, sfDir, "hitsEdgesByItem") {
+    val eI = DfCache(spark, sfDir, "hitsEdgesByItem") {
       CfOps.itemCappedRatings(spark, sfDir)
         .select($"user_id", $"item_id").repartition($"item_id")
     }

@@ -203,12 +203,7 @@ object JoinOps {
           spec.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       def clearStale(table: String): Unit = {
         spark.sql(s"DROP TABLE IF EXISTS $table")
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(); ()
-        }
-        val dir = new java.io.File(whPath, table)
-        if (dir.exists()) rm(dir)
+        graft.engine.TxnLog.destroy(new java.io.File(whPath, table).getPath)
       }
       def attach(table: String, cols: String, key: String): Unit =
         spark.sql(

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{Exact, Tables}
+import graft.engine.{DfCache, Exact, Tables}
 
 /** Closed-form model fitting — the "classical ML on a warehouse"
   * family: models whose sufficient statistics are plain aggregates, so
@@ -432,14 +432,6 @@ object MlOps {
   private val DB_MIN_PTS = 12
   private val DB_SAMPLE_MOD = 3
 
-  /** Persist-once scope for the DBSCAN++ probe (see [[mlDbscan]]): the
-    * returned frame's border subtree re-reads the probe at the
-    * CALLER's action time, so a try/finally unpersist inside the
-    * builder would evict it before that action and recompute the
-    * dominant n×(n/m) stage from scratch. Same lifecycle convention
-    * as the CF/graph chains — scope-evicted when a new sfDir arrives. */
-  private[graft] val cache = new graft.engine.DfCache
-
   /** DBSCAN++ (sampled-core DBSCAN, Jang & Jiang ICML 2019) over the
     * embedding corpus — the SCALE-SAFE density clustering shape.
     *
@@ -478,8 +470,11 @@ object MlOps {
     val sample = e.filter($"vec_id" % DB_SAMPLE_MOD === 0)
       .select($"vec_id".as("vb"), $"embedding".as("eb"))
     // n × (n/m) probe: every point against the broadcast sample —
-    // the only pairwise stage, sized by the sample, not the corpus
-    val nbr = cache(spark, sfDir, "dbscan_nbr") {
+    // the only pairwise stage, sized by the sample, not the corpus.
+    // Persisted in the scoped registry, never unpersisted here: the
+    // returned frame's border subtree re-reads it at the CALLER's
+    // action time (CacheLifecycleSpec pins the InMemoryTableScan).
+    val nbr = DfCache(spark, sfDir, "dbscan_nbr") {
       e.select($"vec_id".as("va"), $"embedding".as("ea"))
         .crossJoin(broadcast(sample))
         .filter($"va" =!= $"vb")
@@ -900,9 +895,9 @@ object MlOps {
     // classify above re-runs once per reference (measured 3.87 →
     // 2.25 s min at sf0.1). Eager localCheckpoint on a ≤ labels² row
     // frame is the same tiny-aggregate convention as giniBestSplit;
-    // riding the MlOps cache on top bounds the checkpoint count at
+    // riding the scoped DfCache on top bounds the checkpoint count at
     // one per (application, sfDir) scope instead of one per call.
-    val cm = cache(spark, sfDir, "confusion_cm") {
+    val cm = DfCache(spark, sfDir, "confusion_cm") {
       broadcast(pred).join(truth, "doc_id")
         .groupBy($"true_lang", $"pred_lang").agg(count(lit(1)).as("n"))
         .localCheckpoint(true)

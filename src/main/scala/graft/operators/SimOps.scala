@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{DfCache, Tables}
 import graft.functions.Udfs
 import graft.functions.Udfs.{rnd6, sqlRnd6}
 
@@ -438,11 +438,6 @@ object SimOps {
     * float32 so per-round drift cannot compound. Distances are
     * rnd6'd with (d, cid) tiebreaks — the ITERATIVE fit bit-matches
     * the unrolled-CTE oracle like the kmeans/PageRank precedents. */
-  /** Persist-once cache for the PQ fit (same lifecycle as
-    * [[DedupOps.cache]]): codebooks + final assignment feed both
-    * [[embedPq]] and [[simsearchPq]]. */
-  private[graft] val pqCache = new graft.engine.DfCache
-
   /** (vec_id, sub, sv) — every vector sliced into its [[PQ_M]]
     * subvectors, map-side. */
   private def pqSubOf(e: DataFrame): DataFrame = {
@@ -490,7 +485,7 @@ object SimOps {
   /** Trained codebooks (sub, cid, c) after [[PQ_ITERS]] Lloyd
     * rounds, session-cached. */
   private def pqCents(spark: SparkSession, sfDir: String): DataFrame =
-    pqCache(spark, sfDir, "pqCents") {
+    DfCache(spark, sfDir, "pqCents") {
       import spark.implicits._
       val sub = pqSub(spark, sfDir)
       var cent = sub.filter($"vec_id" < PQ_K)
@@ -510,7 +505,7 @@ object SimOps {
 
   /** Final assignment (vec_id, sub, cid, dist2), session-cached. */
   private def pqCodes(spark: SparkSession, sfDir: String): DataFrame =
-    pqCache(spark, sfDir, "pqCodes") {
+    DfCache(spark, sfDir, "pqCodes") {
       pqAssign(pqSub(spark, sfDir), pqCents(spark, sfDir))
     }
 
@@ -1013,28 +1008,18 @@ object SimOps {
     * as ALS).
     */
   def simsearchHnsw(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     graft.functions.CosineSim.register(spark)
     // the build/search frames are (corpus × M) and (queries × EF)
     // rows — 32 shuffle partitions would be pure per-round fixed
-    // overhead across the ~9 iterative jobs. 8 is plenty at fixture
-    // scale; at cluster scale this is the per-query sizing decision
-    // every iterative graph job makes (same note as the streaming
-    // harness). Restored before the RESULT is built, so the caller's
-    // plan is unaffected.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // AQE re-plans every stage of every one of the ~10 iterative
-    // jobs — pure driver latency on frames this small (measured: the
-    // search is job-count-bound, not data-bound). A 100 TB run wants
-    // AQE back ON for the build (skew in bucket joins); the search's
-    // per-round frames stay beam-sized at any corpus scale.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try simsearchHnswInner(spark, sfDir)
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    // overhead across the ~9 iterative jobs, and AQE would re-plan
+    // every stage of the ~10 iterative jobs: pure driver latency on
+    // frames this small (measured: the search is job-count-bound, not
+    // data-bound). A 100 TB run wants AQE back ON for the build (skew
+    // in bucket joins); the search's per-round frames stay beam-sized
+    // at any corpus scale. Restored before the RESULT is built, so
+    // the caller's plan is unaffected.
+    graft.engine.IterativeTuning.withSmallIterative(spark) {
+      simsearchHnswInner(spark, sfDir)
     }
   }
 

@@ -147,7 +147,6 @@ object SourceOps {
     * Iceberg/Delta bucket transforms buy under DSv2. */
   def sourceSpjAgg(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     synth(spark)
       .filter($"id" >= 2000L)
       .groupBy($"bucket")
@@ -176,12 +175,14 @@ object SourceOps {
     * cost (re-shuffling both fact tables) deleted by layout. */
   def sourceSpjJoin(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     // join keys (bucket, id) are a SUPERSET of the partition key
     // (bucket): co-partitioning on the subset is exactly what SPJ
-    // exploits, so relax the all-keys requirement (the conf pair
-    // Iceberg's SPJ guide prescribes). Purely a plan relaxation —
-    // Spark only elides an exchange where distribution still holds.
+    // exploits, so relax the all-keys requirement (the conf Iceberg's
+    // SPJ guide prescribes; v2 bucketing itself is on by default).
+    // Purely a plan relaxation — Spark only elides an exchange where
+    // distribution still holds. Session-wide, never restored: the
+    // caller's action plans the returned frame lazily, after any
+    // scoped restore.
     spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
     val a = synth(spark)
     val b = synthSized(spark, 45000L)

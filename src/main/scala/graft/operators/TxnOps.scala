@@ -5,7 +5,7 @@ import java.util.concurrent.CyclicBarrier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Tables, TxnLog}
+import graft.engine.{DfCache, Tables, TxnLog}
 
 /** Transactional-table operators over [[graft.engine.TxnLog]] — the
   * lakehouse capabilities plain versioned parquet lacks: optimistic
@@ -22,38 +22,6 @@ import graft.engine.{Tables, TxnLog}
   * exercised on every execution, not just under lucky scheduling. */
 object TxnOps {
 
-  /** Scratch names embed the applicationId, so every JVM mints fresh
-    * dirs and a killed JVM (timeout, SIGKILL) abandons its set — left
-    * alone they accumulate without bound across sessions. Sweep ONCE
-    * per JVM at first scratch use: siblings under this project's
-    * scratch prefixes whose mtime is stale by hours can only belong
-    * to dead sessions (no single gate run approaches that), while a
-    * concurrently LIVE session's dirs are recent and untouched. */
-  private lazy val sweepStaleScratch: Unit = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val cutoff = System.currentTimeMillis() - 6L * 3600 * 1000
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-      f.delete(); ()
-    }
-    Option(tmp.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory &&
-        (f.getName.startsWith("graft_txn_") ||
-          f.getName.startsWith("graft_cat")) &&
-        f.lastModified < cutoff)
-      .foreach(f => try deleteRec(f) catch { case _: Exception => () })
-  }
-
-  private[graft] def scratch(spark: SparkSession, sfDir: String,
-      tag: String): String = {
-    sweepStaleScratch
-    val id = (spark.sparkContext.applicationId + sfDir + tag)
-      .replaceAll("[^A-Za-z0-9]", "_")
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_txn_$id").getAbsolutePath
-  }
-
   /** Build-once scratch fixtures for READ-ONLY txn metadata keys
     * ($history/$files/ANALYZE): the fixture is a pure function of
     * (application, sfDir), and the key only READS the log after
@@ -62,21 +30,18 @@ object TxnOps {
     * its 4.3 s pinned time rebuilding an identical fixture). Keys
     * that MUTATE their table mid-query (restore, vacuum, partitions'
     * staged re-layouts, ...) must NOT route through this — they keep
-    * the destroy+rebuild discipline. Scope includes applicationId, so
-    * a fresh session never trusts another process's leftovers. */
-  private val fixtureCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
+    * the destroy+rebuild discipline. Memoized in [[DfCache]], so a
+    * new scope forgets it and a fresh session never trusts another
+    * process's leftovers. */
   private def fixtureOnce(spark: SparkSession, sfDir: String,
       tag: String)(build: String => Unit): String =
-    fixtureCache.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir|$tag", {
-        val root = scratch(spark, sfDir, tag)
-        TxnLog.destroy(root)
-        TxnLog.init(root)
-        build(root)
-        root
-      })
+    DfCache.memo(spark, sfDir, s"txn_fixture_$tag") {
+      val root = DfCache.scratch(spark, sfDir, tag)
+      TxnLog.destroy(root)
+      TxnLog.init(root)
+      build(root)
+      root
+    }
 
   /** Per-user event-type counts — the commit payloads. */
   private def typeCounts(spark: SparkSession, sfDir: String,
@@ -117,7 +82,7 @@ object TxnOps {
     * re-runs (exactly 1 — the loser), proving the OCC path ran. */
   def txnCommit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "commit")
+    val root = DfCache.scratch(spark, sfDir, "commit")
     TxnLog.destroy(root)
     TxnLog.init(root)
     // version 0: per-user 'click' counts as the base balances
@@ -175,17 +140,9 @@ object TxnOps {
     * severely-error-tainted users (error value > 200 — a slice, so
     * the final state is NON-empty; see the v3 comment below). Shared
     * by the time-travel key and the catalog `VERSION AS OF` key. */
-  private val ttBuilt =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[graft] def ttTable(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
-    val scope = s"${spark.sparkContext.applicationId}|$sfDir"
-    ttBuilt.keys.filter(_ != scope).foreach(ttBuilt.remove)
-    ttBuilt.getOrElseUpdate(scope, {
-      val root = scratch(spark, sfDir, "tt")
-      TxnLog.destroy(root)
-      TxnLog.init(root)
+    fixtureOnce(spark, sfDir, "tt") { root =>
       Seq("click", "view", "purchase").foreach { et =>
         TxnLog.commit(spark, root, addCounts(spark, sfDir, et))
       }
@@ -204,8 +161,8 @@ object TxnOps {
           .select($"key", lit(0L).as("value"), lit("delete").as("op"))
         (delta, TxnLog.range(errs))
       })
-      root
-    })
+      ()
+    }
   }
 
   def txnTimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
@@ -241,7 +198,7 @@ object TxnOps {
     * oracle evaluates all three clauses in closed form. */
   def txnMerge(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "merge")
+    val root = DfCache.scratch(spark, sfDir, "merge")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -552,7 +509,7 @@ object TxnOps {
     * oracle checks both. */
   def txnRestore(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "restore")
+    val root = DfCache.scratch(spark, sfDir, "restore")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -599,7 +556,7 @@ object TxnOps {
     * snapshot — proving content survived and layout changed. */
   def txnOptimize(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "optimize")
+    val root = DfCache.scratch(spark, sfDir, "optimize")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -638,7 +595,7 @@ object TxnOps {
     * default semantics, never a table rewrite. */
   def txnSchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "schema")
+    val root = DfCache.scratch(spark, sfDir, "schema")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -750,7 +707,7 @@ object TxnOps {
     * defaults) in a single commit; closed-form oracle. */
   def txnMergeEvolving(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "mergeevo")
+    val root = DfCache.scratch(spark, sfDir, "mergeevo")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -844,7 +801,7 @@ object TxnOps {
   def txnConstraint(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val check = col("value") >= 0L
-    val root = scratch(spark, sfDir, "check")
+    val root = DfCache.scratch(spark, sfDir, "check")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"),
@@ -913,7 +870,7 @@ object TxnOps {
   def txnConcurrentDisjoint(spark: SparkSession, sfDir: String)
       : DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "disjoint")
+    val root = DfCache.scratch(spark, sfDir, "disjoint")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -968,8 +925,8 @@ object TxnOps {
     * a shallow clone is two file writes. */
   def txnClone(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val src = scratch(spark, sfDir, "clone_src")
-    val dst = scratch(spark, sfDir, "clone_dst")
+    val src = DfCache.scratch(spark, sfDir, "clone_src")
+    val dst = DfCache.scratch(spark, sfDir, "clone_dst")
     TxnLog.destroy(src)
     TxnLog.init(src)
     TxnLog.commit(spark, src, addCounts(spark, sfDir, "click"))
@@ -1025,7 +982,7 @@ object TxnOps {
     * (latest = click+view+purchase, baseline = click) from events. */
   def txnVacuum(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "vacuum")
+    val root = DfCache.scratch(spark, sfDir, "vacuum")
     TxnLog.destroy(root)
     TxnLog.init(root)
     Seq("click", "view", "purchase").foreach { et =>
@@ -1075,7 +1032,7 @@ object TxnOps {
     * conflict validation never notices the difference. */
   def txnCheckpoint(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "ckpt")
+    val root = DfCache.scratch(spark, sfDir, "ckpt")
     TxnLog.destroy(root)
     TxnLog.init(root)
     Seq("click", "view", "purchase").foreach { et =>
@@ -1129,7 +1086,7 @@ object TxnOps {
     * table to change a header string. */
   def txnRenameMapping(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "rename")
+    val root = DfCache.scratch(spark, sfDir, "rename")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -1181,7 +1138,7 @@ object TxnOps {
     * the original scores (`score_at_v1`). */
   def txnDropColumn(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "dropcol")
+    val root = DfCache.scratch(spark, sfDir, "dropcol")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -1234,7 +1191,7 @@ object TxnOps {
     * layout-free. */
   def txnOptimizeCluster(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "optcluster")
+    val root = DfCache.scratch(spark, sfDir, "optcluster")
     TxnLog.destroy(root)
     TxnLog.init(root)
     Seq("click", "view", "purchase").foreach { et =>
@@ -1277,7 +1234,7 @@ object TxnOps {
     * pins that the DML became exactly one new commit. */
   def txnSqlInsert(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "sqlinsert")
+    val root = DfCache.scratch(spark, sfDir, "sqlinsert")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -1321,7 +1278,7 @@ object TxnOps {
     * `n_versions` = 3. */
   def txnSqlConcurrent(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "sqlconc")
+    val root = DfCache.scratch(spark, sfDir, "sqlconc")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -1384,7 +1341,7 @@ object TxnOps {
     * instead of deleting the wrong rows. */
   def txnSqlDelete(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "sqldelete")
+    val root = DfCache.scratch(spark, sfDir, "sqldelete")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -1418,7 +1375,7 @@ object TxnOps {
     * now runs against the log with no Scala in the loop. */
   def txnSqlCtas(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "ctas")
+    val root = DfCache.scratch(spark, sfDir, "ctas")
     TxnLog.destroy(root)
     graft.sources.GraftCatalog.register(spark)
     val parts = root.split("/").filter(_.nonEmpty).toSeq
@@ -1464,7 +1421,7 @@ object TxnOps {
     * is SQL text with no Scala in the loop. */
   def txnSqlAlter(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "sqlalter")
+    val root = DfCache.scratch(spark, sfDir, "sqlalter")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -1523,7 +1480,7 @@ object TxnOps {
   def txnSqlAlterType(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.types.{IntegerType, LongType}
-    val root = scratch(spark, sfDir, "sqlaltertype")
+    val root = DfCache.scratch(spark, sfDir, "sqlaltertype")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, { _ =>
@@ -1589,7 +1546,7 @@ object TxnOps {
   def txnSqlInsertOverwrite(spark: SparkSession,
       sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "sqlow")
+    val root = DfCache.scratch(spark, sfDir, "sqlow")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -1624,7 +1581,7 @@ object TxnOps {
     * `n_versions` pins one commit for the whole DML. */
   def txnSqlUpdate(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "sqlupdate")
+    val root = DfCache.scratch(spark, sfDir, "sqlupdate")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -1660,7 +1617,7 @@ object TxnOps {
     * merge-on-read reconciliation the write relies on. */
   def txnSqlMerge(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "sqlmerge")
+    val root = DfCache.scratch(spark, sfDir, "sqlmerge")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -1702,7 +1659,7 @@ object TxnOps {
     * latest read rides along for contrast. */
   def txnTimeTravelTs(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "ttts")
+    val root = DfCache.scratch(spark, sfDir, "ttts")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -1853,7 +1810,7 @@ object TxnOps {
     * the Delta/Iceberg added-with-default semantic end to end. */
   def txnSqlAddDefault(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "sqladddef")
+    val root = DfCache.scratch(spark, sfDir, "sqladddef")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
@@ -1935,8 +1892,8 @@ object TxnOps {
     * from different transactions, the counts could not agree. */
   def txnMultiCommit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val corpus = scratch(spark, sfDir, "mtx_corpus")
-    val manifest = scratch(spark, sfDir, "mtx_manifest")
+    val corpus = DfCache.scratch(spark, sfDir, "mtx_corpus")
+    val manifest = DfCache.scratch(spark, sfDir, "mtx_manifest")
     Seq(corpus, manifest).foreach { r =>
       TxnLog.destroy(r); TxnLog.init(r)
     }
@@ -2018,7 +1975,7 @@ object TxnOps {
     * sampler places cut points nondeterministically). */
   def txnPartitions(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "partitions")
+    val root = DfCache.scratch(spark, sfDir, "partitions")
     TxnLog.destroy(root)
     TxnLog.init(root)
     Seq("click", "view", "purchase").foreach { et =>
@@ -2163,7 +2120,7 @@ object TxnOps {
     * shape DuckDB recomputes directly. */
   def joinCbo(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(spark, sfDir, "cbo")
+    val root = DfCache.scratch(spark, sfDir, "cbo")
     TxnLog.destroy(root)
     TxnLog.init(root)
     TxnLog.commit(spark, root, addCounts(spark, sfDir, "purchase"))

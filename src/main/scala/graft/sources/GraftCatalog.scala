@@ -1319,7 +1319,9 @@ object GraftCatalog {
   val NAME = "graft"
 
   /** Idempotent per-session registration + the catalog-qualified SQL
-    * identifier for `<sfDir>/<table>.parquet`. */
+    * identifier for `<sfDir>/<table>.parquet`. Registration is
+    * session-wide, never restored: every later query that names the
+    * catalog resolves through it. */
   def register(spark: SparkSession): Unit =
     if (!spark.conf.getOption(s"spark.sql.catalog.$NAME").isDefined)
       spark.conf.set(s"spark.sql.catalog.$NAME",

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues,
   TTLConfig, ValueState}
-import graft.engine.{Exact, Tables}
+import graft.engine.{DfCache, Exact, IterativeTuning, Tables, TxnLog}
 
 /** Structured Streaming surface (SURVEY.md §2.9) over the `events`
   * stream surrogate. Each query REALLY runs the incremental engine —
@@ -93,13 +93,6 @@ object StreamOps {
     }
   }
 
-  /** Staged-batch directory cache: ONE staging job per (application,
-    * sfDir, variant) feeds every offset-source key of a sweep — a
-    * re-run reuses the layout, and switching sfDir drops the old
-    * scope (same lifecycle as [[graft.engine.DfCache]]). */
-  private val stageCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Stage an events-shaped frame CARRYING a `batch` column as
     * batch-partitioned CSV for the OFFSET-BASED source
     * ([[EventsFileStreamProvider]]): one Spark job, executors write
@@ -118,18 +111,17 @@ object StreamOps {
     * [[offsetSource]]. This is what makes the offset source a general
     * connector rather than an events-table special case. */
   private def stageRawBatched(spark: SparkSession, sfDir: String,
-      variant: String, df: => DataFrame): String = {
-    val scope = s"${spark.sparkContext.applicationId}|$sfDir"
-    stageCache.keys.filter(!_.startsWith(scope)).foreach(stageCache.remove)
-    stageCache.getOrElseUpdate(s"$scope|$variant", {
-      val dir = scratchDir(spark, sfDir, s"graft_evsrc_${variant}_")
+      variant: String, df: => DataFrame): String =
+    // ONE staging job per (application, sfDir, variant) feeds every
+    // offset-source key of a sweep; a re-run reuses the layout
+    DfCache.memo(spark, sfDir, s"stream_stage_$variant") {
+      val dir = scratchDir(spark, sfDir, s"evsrc_$variant")
       val d = df
       d.select(d.columns.filter(_ != "batch").map(col) :+ col("batch"): _*)
         .repartition(8, col("batch"))
         .write.mode("overwrite").partitionBy("batch").csv(dir)
       dir
-    })
-  }
+    }
 
   /** Deterministic TIME-RANGE batch assignment: batch i holds rows
     * strictly no older than every row of batch i−1 (closed form from
@@ -223,12 +215,6 @@ object StreamOps {
     java.nio.file.Files.createTempDirectory(base, "graft_ckpt_").toFile
   }
 
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete(); ()
-  }
-
   /** The state-store provider transformWithState requires. */
   private val RocksDbState: Seq[(String, String)] = Seq(
     "spark.sql.streaming.stateStore.providerClass" ->
@@ -245,19 +231,11 @@ object StreamOps {
     *    processes on every rename and create, which was most of a
     *    small trigger's wall time. */
   private def withStreamConf[T](spark: SparkSession,
-      extra: Seq[(String, String)] = Nil)(body: => T): T = {
-    val confs = Seq(
+      extra: Seq[(String, String)] = Nil)(body: => T): T =
+    IterativeTuning.withConf(spark, Seq(
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.streaming.checkpointFileManagerClass" ->
-        classOf[LocalCheckpointFileManager].getName) ++ extra
-    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+        classOf[LocalCheckpointFileManager].getName) ++ extra)(body)
 
   private def drainToTable(spark: SparkSession, out: DataFrame,
       mode: OutputMode, extraConf: Seq[(String, String)] = Nil): DataFrame = {
@@ -269,7 +247,7 @@ object StreamOps {
         .option("checkpointLocation", ckpt.getAbsolutePath)
         .outputMode(mode).start()
       try q.processAllAvailable() finally q.stop()
-    } finally deleteRec(ckpt)
+    } finally TxnLog.destroy(ckpt.getPath)
     spark.table(sinkName)
   }
 
@@ -342,7 +320,7 @@ object StreamOps {
     import spark.implicits._
     val staged = stageBatched(spark, sfDir, "t4",
       timeBatched(eventsShaped(spark, sfDir), 4))
-    val root = scratchDir(spark, sfDir, "graft_osr_")
+    val root = scratchDir(spark, sfDir, "osr")
     val sink = new java.io.File(root, "sink").getAbsolutePath
     val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
     def start(cap: Option[Long]) = {
@@ -959,7 +937,7 @@ object StreamOps {
     // transits the driver.
     val staged = stageBatched(spark, sfDir, "t2",
       timeBatched(eventsShaped(spark, sfDir), 2))
-    val root = scratchDir(spark, sfDir, "graft_rs_")
+    val root = scratchDir(spark, sfDir, "rs")
     val sink = new java.io.File(root, "sink").getAbsolutePath
     val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
     def start(cap: Option[Long]) = {
@@ -1301,7 +1279,7 @@ object StreamOps {
     // exit — the result DataFrame reads it lazily, so it cannot be
     // deleted inside this call, but scratch no longer accumulates
     // across invocations/runs (one live dir per app at most).
-    val out = febScratchDir(spark, sfDir)
+    val out = scratchDir(spark, sfDir, "feb")
     val staged = stageBatched(spark, sfDir, "t3",
       timeBatched(eventsShaped(spark, sfDir), 3))
     withStreamConf(spark) {
@@ -1334,34 +1312,14 @@ object StreamOps {
       .partitionBy("batch_id")
       .parquet(out)
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(); ()
-  }
-
-  /** Scratch dir for a foreachBatch parquet sink: a FIXED path per
-    * (prefix, applicationId, sfDir) under java.io.tmpdir, cleared on
-    * entry (idempotent re-runs) and again by a JVM shutdown hook. */
+  /** Fixed scratch dir of (application, sfDir, tag) from
+    * [[DfCache.scratch]], cleared on entry (idempotent re-runs). */
   private def scratchDir(spark: SparkSession, sfDir: String,
-      prefix: String): String = {
-    val tag = (spark.sparkContext.applicationId + sfDir)
-      .replaceAll("[^A-Za-z0-9]", "_")
-    val dir = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"$prefix$tag")
-    if (dir.exists()) rmTree(dir)
-    if (febCleanupRegistered.compareAndSet(false, true))
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        febScratchDirs.forEach(d => rmTree(new java.io.File(d)))))
-    febScratchDirs.add(dir.getAbsolutePath)
-    dir.getAbsolutePath
+      tag: String): String = {
+    val dir = DfCache.scratch(spark, sfDir, tag)
+    TxnLog.destroy(dir)
+    dir
   }
-
-  private def febScratchDir(spark: SparkSession, sfDir: String): String =
-    scratchDir(spark, sfDir, "graft_feb_")
-  private val febCleanupRegistered =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-  private val febScratchDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   val streamForeachBatchSql: String =
     """SELECT event_id, user_id, ts, value
@@ -1405,9 +1363,7 @@ object StreamOps {
     * break if any retry re-applied. */
   def streamTxnSink(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import graft.engine.TxnLog
-    val root = scratchDir(spark, sfDir, "graft_txnsink_")
-    TxnLog.destroy(root)
+    val root = scratchDir(spark, sfDir, "txnsink")
     TxnLog.init(root)
     // three time-ordered offset-source batches = three sink commits;
     // a time slice that happens to be empty still commits (idempotent
@@ -1543,7 +1499,7 @@ object StreamOps {
     * the bounded-shuffle shape they need. */
   def streamCdcApply(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratchDir(spark, sfDir, "graft_cdc_")
+    val root = scratchDir(spark, sfDir, "cdc")
     // time-ordered offset-source batches are exactly the changelog
     // contract the merge relies on (per-key last-in-batch composed
     // across batches ≡ global last) — the replay collect is retired

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * SparkEntry.queries sweep run TWICE in ONE JVM, with per-key
   * pass-1 vs pass-2 time diffs and driver-heap readings between
   * passes. Per-sweep JVMs (the driver's Bench/Verify) hide slow
-  * leaks — DfCache scopes that never evict, spark-warehouse residue,
+  * leaks — registry scopes that never evict, spark-warehouse residue,
   * staged-layout directories accumulating, listener growth; running
   * the sweep twice in the same session surfaces them as pass-2
   * slowdowns or monotone heap growth.
@@ -64,12 +64,11 @@ object ProfileSoak {
     }
     println(s"soak regressed_keys=${regressed.size}")
     regressed.foreach(r => println(s"soak   $r"))
-    // inventory: persist-once caches and streaming machinery
-    println(s"soak cf_cache=${graft.operators.CfOps.cache.snapshot.size}" +
-      s" dedup_cache=${graft.operators.DedupOps.cache.snapshot.size}" +
-      s" content_cache=${graft.operators.ContentOps.cache.snapshot.size}" +
-      s" graph_cache=${graft.operators.GraphOps.cache.snapshot.size}" +
-      s" ml_cache=${graft.operators.MlOps.cache.snapshot.size}")
+    // inventory: the scoped registry and streaming machinery
+    val inv = graft.engine.DfCache.keys
+    println(s"soak registry_entries=${inv.size}" +
+      s" registry_scopes=${inv.map(_._1).size}" +
+      s" registry_persisted=${graft.engine.DfCache.frames.size}")
     println(s"soak active_streams=${spark.streams.active.length}")
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     val scratch = Option(tmp.listFiles()).getOrElse(Array.empty)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.engine.TxnLog
+import graft.engine.{DfCache, TxnLog}
 import graft.operators.TxnOps
 
 /** Round-8 session: schema evolution + incremental MV maintenance
@@ -10,7 +10,7 @@ class Round10Spec extends SparkSpec {
 
   test("schema evolution key: audit entry exists, v0 keeps 2 columns") {
     TxnOps.txnSchemaEvolution(spark, sf).collect()
-    val root = TxnOps.scratch(spark, sf, "schema")
+    val root = DfCache.scratch(spark, sf, "schema")
     val audit = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(root, "_txn_log", "v1.schema")))
     assert(audit == "ADD|score|0",

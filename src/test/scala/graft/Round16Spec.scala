@@ -32,14 +32,14 @@ class Round16Spec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     val df = graft.operators.MlOps.mlDbscan(spark, sf)
     df.collect()
-    // since round 12 the probe rides the MlOps DfCache, so the BNLJ
+    // since round 12 the probe rides the scoped DfCache, so the BNLJ
     // lives inside the cached probe's OWN plan (the outer plan shows
     // InMemoryTableScan — pinned in CacheLifecycleSpec); assert on
     // the cached frame's physical plan
-    val probe = graft.operators.MlOps.cache.snapshot.collectFirst {
+    val probe = graft.engine.DfCache.frames.collectFirst {
       case ((scope, name), d) if scope.endsWith(sf) &&
         name == "dbscan_nbr" => d
-    }.getOrElse(fail("dbscan probe missing from the MlOps cache"))
+    }.getOrElse(fail("dbscan probe missing from the scoped cache"))
     val helper = new org.apache.spark.sql.execution.adaptive
       .AdaptiveSparkPlanHelper {}
     // the persisted frame re-plans through its own InMemoryTableScan;

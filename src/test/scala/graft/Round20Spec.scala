@@ -12,8 +12,8 @@ class Round20Spec extends SparkSpec {
 
   /** Hash-partitioning columns a cached DfCache entry presents to its
     * consumers (what EnsureRequirements sees when a join probes it). */
-  private def partCols(cache: graft.engine.DfCache, name: String): Seq[String] = {
-    val df: DataFrame = cache.snapshot.collectFirst {
+  private def partCols(name: String): Seq[String] = {
+    val df: DataFrame = graft.engine.DfCache.frames.collectFirst {
       case ((_, n), d) if n == name => d
     }.getOrElse(fail(s"cache entry $name missing"))
     df.queryExecution.executedPlan.outputPartitioning match {
@@ -33,10 +33,10 @@ class Round20Spec extends SparkSpec {
     // regress to one full edge exchange per round.
     graft.operators.GraphOps.graphPagerank(spark, sf).count()
     graft.operators.GraphOps.graphHits(spark, sf).count()
-    assert(partCols(graft.operators.GraphOps.cache, "graphEdgesBySrc") == Seq("src"))
-    assert(partCols(graft.operators.GraphOps.cache, "graphEdgesOutdeg") == Seq("src"))
-    assert(partCols(graft.operators.GraphOps.cache, "hitsEdgesByUser") == Seq("user_id"))
-    assert(partCols(graft.operators.GraphOps.cache, "hitsEdgesByItem") == Seq("item_id"))
+    assert(partCols("graphEdgesBySrc") == Seq("src"))
+    assert(partCols("graphEdgesOutdeg") == Seq("src"))
+    assert(partCols("hitsEdgesByUser") == Seq("user_id"))
+    assert(partCols("hitsEdgesByItem") == Seq("item_id"))
   }
 
   test("pagerank is rerun-identical through the hoisted outdeg join") {

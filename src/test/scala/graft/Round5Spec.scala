@@ -10,7 +10,7 @@ class Round5Spec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("DfCache evicts and unpersists other scale-factor scopes") {
     import spark.implicits._
-    val c = new graft.engine.DfCache
+    val c = graft.engine.DfCache
     val a = c(spark, "/tmp/sfA", "x")(spark.range(10).toDF("v"))
     a.count()
     assert(a.storageLevel != StorageLevel.NONE, "first scope not persisted")
@@ -20,7 +20,7 @@ class Round5Spec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(a.storageLevel == StorageLevel.NONE,
       "old scope's DataFrame still persisted after scope switch")
     assert(b.storageLevel != StorageLevel.NONE)
-    val scopes = c.snapshot.keySet.map(_._1)
+    val scopes = c.keys.map(_._1)
     assert(scopes.size == 1 && scopes.head.endsWith("/tmp/sfB"),
       s"expected only the new scope to survive, got $scopes")
     // values still CORRECT after eviction (recompute, not failure)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.engine.{Tables, TxnLog}
+import graft.engine.{DfCache, Tables, TxnLog}
 import graft.operators.{JoinOps, ScanOps, TxnOps}
 
 /** Round-7 session: the lakehouse wave — file-stats data skipping,
@@ -62,7 +62,7 @@ class Round9Spec extends SparkSpec {
 
   test("OPTIMIZE: exact target layout, identical content, empty write set") {
     TxnOps.txnOptimize(spark, sf).collect()
-    val root = TxnOps.scratch(spark, sf, "optimize")
+    val root = DfCache.scratch(spark, sf, "optimize")
     val files = Option(new java.io.File(root, "snapshot_v1").listFiles())
       .getOrElse(Array.empty)
       .count(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
@@ -75,7 +75,7 @@ class Round9Spec extends SparkSpec {
 
   test("RESTORE: reverts state as a forward commit, history intact") {
     TxnOps.txnRestore(spark, sf).collect()
-    val root = TxnOps.scratch(spark, sf, "restore")
+    val root = DfCache.scratch(spark, sf, "restore")
     val v0 = state(root, 0L)
     val v1 = state(root, 1L)
     val v2 = state(root, 2L)
@@ -93,7 +93,7 @@ class Round9Spec extends SparkSpec {
     val out = TxnOps.txnConstraint(spark, sf)
     val first = out.limit(1).collect()(0)
     assert(first.getAs[Long]("n_rejected") == 1L)
-    val root = TxnOps.scratch(spark, sf, "check")
+    val root = DfCache.scratch(spark, sf, "check")
     assert(TxnLog.latestCommitted(root) == 1L,
       "only the two valid commits may exist")
     assert(!new java.io.File(root, "_txn_log/v2.commit").exists())

@@ -107,6 +107,25 @@ class TxnSpec extends SparkSpec {
     TxnLog.destroy(root)
   }
 
+  test("an all-null LONG key column reports no footer min/max") {
+    // parquet keeps the null count of an all-null chunk, so its stats
+    // are not "empty", but their min/max read as 0: a bogus (0, 0)
+    // key range for a file that writes no key at all
+    import spark.implicits._
+    val root = freshRoot("allnull")
+    val dir = s"$root/data"
+    Seq[(Option[Long], Long)]((None, 1L), (None, 2L)).toDF("key", "value")
+      .coalesce(1).write.parquet(dir)
+    val Seq(fs) = graft.engine.FooterStats.read(new java.io.File(dir))
+    assert(fs.cols("key").min.isEmpty && fs.cols("key").max.isEmpty,
+      s"all-null key reported ${fs.cols("key")}")
+    assert(fs.cols("key").nulls == 2L)
+    assert(fs.cols("value").min.contains(1L))
+    assert(TxnLog.fileRanges(spark, dir).isEmpty,
+      "an all-null key file writes no key range")
+    TxnLog.destroy(root)
+  }
+
   test("disjoint racers: loser rebases WITHOUT a conflict re-run") {
     val root = freshRoot("disjoint")
     TxnLog.commit(spark, root, _ => (upserts(1L -> 1L, 9L -> 9L), Seq((1L, 1L), (9L, 9L))))
