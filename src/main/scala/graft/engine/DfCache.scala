@@ -55,13 +55,15 @@ object DfCache {
     m.getOrElseUpdate((scope, name), build).value
   }
 
-  /** Persist-once frame for (application, sfDir, name). */
+  /** Persist-once frame for (application, sfDir, name), bound to
+    * `spark`: a [[QuerySession]] clone plans over it under its own
+    * confs and still reads the cached rows. */
   def apply(spark: SparkSession, sfDir: String, name: String)(
       build: => DataFrame): DataFrame =
-    entry(spark, sfDir, name) {
+    QuerySession.bind(entry(spark, sfDir, name) {
       val df = build.persist(StorageLevel.MEMORY_AND_DISK)
       Entry(df, Some(df))
-    }.asInstanceOf[DataFrame]
+    }.asInstanceOf[DataFrame], spark)
 
   /** Build-once value for (application, sfDir, name); eviction only
     * forgets it. */

@@ -31,10 +31,25 @@ object FooterStats {
   final case class FileStat(path: String, bytes: Long, nRows: Long,
       cols: Map[String, ColStat], rawBytes: Long = 0L)
 
+  /** Shared: a fresh Configuration parses the Hadoop defaults again. */
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
+  /** One data file's footer, read with parquet-mr. */
+  private def footer(file: File)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.getAbsolutePath), hadoopConf))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** The parquet schema in one data file's footer. */
+  def schema(file: File): org.apache.parquet.schema.MessageType =
+    footer(file).getFileMetaData.getSchema
+
   /** Footer stats of every non-empty parquet file in `dir`
     * (symlinks resolved — a linked snapshot reads its referent). */
   def read(dir: File): Seq[FileStat] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
     val canonical = dir.getCanonicalFile
     // accept a single parquet FILE too (the fixture tables are one
     // file per table) — ANALYZE shouldn't care how the data is laid out
@@ -42,38 +57,33 @@ object FooterStats {
      else Option(canonical.listFiles()).getOrElse(Array.empty))
       .filter(f => f.getName.endsWith(".parquet") && f.length > 0)
       .flatMap { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val blocks = reader.getFooter.getBlocks.asScala.toSeq
-          val nRows = blocks.map(_.getRowCount).sum
-          if (nRows == 0L) None
-          else {
-            val perCol = blocks.flatMap(_.getColumns.asScala)
-              .groupBy(_.getPath.toDotString)
-              .map { case (name, chunks) =>
-                val sts = chunks.map(_.getStatistics).collect {
-                  case s: org.apache.parquet.column.statistics
-                      .LongStatistics => s
-                }
-                // an all-null chunk's stats are not empty (they carry
-                // its null count) but its min/max read as 0
-                val valued = sts.filter(_.hasNonNullValue)
-                name -> ColStat(
-                  if (valued.nonEmpty) Some(valued.map(_.getMin).min)
-                  else None,
-                  if (valued.nonEmpty) Some(valued.map(_.getMax).max)
-                  else None,
-                  sts.map(s => math.max(s.getNumNulls, 0L)).sum,
-                  chunks.map(_.getTotalUncompressedSize).sum)
+        val blocks = footer(f).getBlocks.asScala.toSeq
+        val nRows = blocks.map(_.getRowCount).sum
+        if (nRows == 0L) None
+        else {
+          val perCol = blocks.flatMap(_.getColumns.asScala)
+            .groupBy(_.getPath.toDotString)
+            .map { case (name, chunks) =>
+              val sts = chunks.map(_.getStatistics).collect {
+                case s: org.apache.parquet.column.statistics
+                    .LongStatistics => s
               }
-            val rawBytes = blocks.flatMap(_.getColumns.asScala)
-              .map(_.getTotalUncompressedSize).sum
-            Some(FileStat(f.getAbsolutePath, f.length(), nRows, perCol,
-              rawBytes))
-          }
-        } finally reader.close()
+              // an all-null chunk's stats are not empty (they carry
+              // its null count) but its min/max read as 0
+              val valued = sts.filter(_.hasNonNullValue)
+              name -> ColStat(
+                if (valued.nonEmpty) Some(valued.map(_.getMin).min)
+                else None,
+                if (valued.nonEmpty) Some(valued.map(_.getMax).max)
+                else None,
+                sts.map(s => math.max(s.getNumNulls, 0L)).sum,
+                chunks.map(_.getTotalUncompressedSize).sum)
+            }
+          val rawBytes = blocks.flatMap(_.getColumns.asScala)
+            .map(_.getTotalUncompressedSize).sum
+          Some(FileStat(f.getAbsolutePath, f.length(), nRows, perCol,
+            rawBytes))
+        }
       }
       .toSeq
       .sortBy(fs => fs.cols.get("key").flatMap(_.min)

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.parquet.schema.LogicalTypeAnnotation
 
 /** Canonical loaders for the fixture tables (schemas measured in
   * FIXTURES.md). Explicit schemas: typed code paths must not depend on
@@ -118,11 +119,16 @@ object Tables {
     * while each query still plans its own scan on top, so column
     * pruning and filter pushdown remain per-query (no data is cached
     * here). */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    DfCache.memo(spark, sfDir, s"table_$name") {
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    if (name == "events" && eventsTsIsNanos(spark, sfDir))
+      // ns fixtures only: Spark reads timestamp[ns] as a raw long only
+      // under this flag, read when an action plans the scan
+      spark.conf.set(NanosAsLong._1, NanosAsLong._2)
+    QuerySession.bind(DfCache.memo(spark, sfDir, s"table_$name") {
       if (name == "events") eventsRaw(spark, sfDir)
       else spark.read.schema(schemas(name)).parquet(s"$sfDir/$name.parquet")
-    }
+    }, spark)
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
@@ -134,18 +140,24 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = load(s, d, "events")
   /** Whether this sfDir's events.parquet stores `ts` as timestamp[ns]
     * (early fixture generations) rather than timestamp[µs] (current).
-    * Sniffed from the parquet footer ONCE per (application, sfDir):
-    * under nanosAsLong=true a ns column infers as LongType, a µs
-    * column as TimestampType. Wiring the unit to the FILE rather than
-    * the build means a driver-side fixture regeneration can never
-    * silently shift every event timestamp by 1000×. */
+    * Read from the `ts` column's logical type in the parquet footer,
+    * ONCE per (application, sfDir), without touching session conf.
+    * Wiring the unit to the FILE rather than the build means a
+    * driver-side fixture regeneration can never silently shift every
+    * event timestamp by 1000×. */
   def eventsTsIsNanos(s: SparkSession, d: String): Boolean =
     DfCache.memo(s, d, "events_ts_nanos") {
-      // session-wide, never restored: the caller's action plans the
-      // returned events frame lazily, after any scoped restore
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s.read.parquet(s"$d/events.parquet").schema("ts").dataType == LongType
+      val footer = FooterStats.schema(new java.io.File(s"$d/events.parquet"))
+      footer.getType(footer.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+        case _ => false
+      }
     }
+
+  /** The conf an ns fixture's `ts` column is read under. */
+  val NanosAsLong: (String, String) =
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true"
 
   private def eventsRaw(s: SparkSession, d: String): DataFrame =
     if (eventsTsIsNanos(s, d))

@@ -348,13 +348,15 @@ object TxnLog {
     require(dir.isDirectory,
       s"version $version is committed but its snapshot never appeared")
     // Explicit footer-derived schema: every snapshot is written by ONE
-    // write job, so one footer is authoritative, and handing the
+    // write job, so its files share one footer schema, and handing the
     // reader the schema skips the per-read schema-resolution job the
     // commit protocol otherwise pays on every snapshot read (r14 txn
     // stage profiles: recurring 1-task "parquet at readPhysical" jobs
-    // bracketing every commit). Falls back to inference if the footer
-    // walk finds nothing (racing publisher) — correctness never
-    // depends on the fast path.
+    // bracketing every commit). A file whose schema differs is refused
+    // by name: pinning the first file's schema would silently null or
+    // coerce its columns. Falls back to inference if the footer walk
+    // finds nothing (racing publisher) — correctness never depends on
+    // the fast path.
     parquetSchema(spark, dir) match {
       case Some(s) => spark.read.schema(s).parquet(dir.getAbsolutePath)
       case None => spark.read.parquet(dir.getAbsolutePath)
@@ -362,11 +364,12 @@ object TxnLog {
   }
 
   /** Driver-side schema of a parquet dir written by one Spark job:
-    * first non-empty file's footer through Spark's own
+    * the non-empty files' footers through Spark's own
     * parquet→Catalyst converter, nullability relaxed exactly the way
     * schema inference relaxes it (inference returns every field
     * nullable; handing the reader a REQUIRED field would change the
-    * result frame's schema). */
+    * result frame's schema). Throws naming the first file whose
+    * schema differs from the first file's. */
   private def parquetSchema(spark: SparkSession,
       dir: File): Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.types._
@@ -379,24 +382,25 @@ object TxnLog {
         valueContainsNull = true)
       case other => other
     }
-    val canonical = dir.getCanonicalFile
-    Option(canonical.listFiles()).getOrElse(Array.empty)
+    val converter = new org.apache.spark.sql.execution.datasources
+      .parquet.ParquetToSparkSchemaConverter(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+          .sessionState.conf)
+    val schemas = Option(dir.getCanonicalFile.listFiles())
+      .getOrElse(Array.empty)
       .filter(f => f.getName.endsWith(".parquet") && f.length > 0)
-      .sortBy(_.getName).headOption.map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-          new org.apache.hadoop.conf.Configuration())
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val msg =
-          try reader.getFooter.getFileMetaData.getSchema
-          finally reader.close()
-        val converted = new org.apache.spark.sql.execution.datasources
-          .parquet.ParquetToSparkSchemaConverter(
-            spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-              .sessionState.conf).convert(msg)
-        StructType(converted.fields.map(f2 =>
-          f2.copy(dataType = nullable(f2.dataType), nullable = true)))
+      .sortBy(_.getName).toSeq.map { f =>
+        f -> nullable(converter.convert(FooterStats.schema(f)))
       }
+    schemas.headOption.map { case (first, s0) =>
+      schemas.find(_._2 != s0).foreach { case (odd, s1) =>
+        throw new IllegalStateException(
+          s"${dir.getPath}: ${odd.getName} has schema ${s1.simpleString}" +
+            s", but ${first.getName} has ${s0.simpleString} — a " +
+            "snapshot's files must share one schema")
+      }
+      s0.asInstanceOf[StructType]
+    }
   }
 
   private def encodeRanges(rs: KeyRanges): Seq[String] =

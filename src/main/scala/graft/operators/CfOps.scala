@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{DfCache, Exact, Tables}
+import graft.engine.{DfCache, Exact, QuerySession, Tables}
 import graft.functions.Udfs.{rnd6, sqlRnd6}
 
 /** Item-based collaborative-filtering recommender chain (SURVEY.md
@@ -970,9 +970,10 @@ object CfOps {
       als: org.apache.spark.ml.recommendation.ALS): DataFrame = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val recs = graft.engine.IterativeTuning.withSmallIterative(spark) {
-      als.fit(r).recommendForAllUsers(10).localCheckpoint(true)
-    }
+    // fit and recs run on a tuned clone, pinned there and bound back
+    val tuned = QuerySession.session(spark, QuerySession.SmallIterative)
+    val recs = QuerySession.bind(als.fit(QuerySession.bind(r, tuned))
+      .recommendForAllUsers(10).localCheckpoint(true), spark)
     sc.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!before(id) && Set("userFactors", "itemFactors")(rdd.name))
         rdd.unpersist(blocking = false)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{DfCache, Tables}
+import graft.engine.{DfCache, QuerySession, Tables}
 import graft.functions.Udfs.{rnd6, sqlRnd6}
 
 /** Deduplication family over `documents` (north-star LLM-pipeline
@@ -864,18 +864,15 @@ object DedupOps {
     * prefixes to be short. Verification re-joins only the candidate
     * pairs to their two shingle sets — shuffle volume is bounded by
     * candidates × set size, never df². */
-  def dedupPrefixFilter(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
+  def dedupPrefixFilter(spark: SparkSession, sfDir: String): DataFrame =
     // the chain is 6 sequential exchanges over a shingle stream that
     // is ~260k rows at sf0.1 — stage count, not data, is the cost;
     // 8 shuffle partitions halve the fixed per-exchange overhead and
     // at 100 TB this is the same per-query sizing decision as the
-    // HNSW/streaming harness notes (restored before returning)
-    graft.engine.IterativeTuning.withConf(spark,
-        Seq("spark.sql.shuffle.partitions" -> "8")) {
-      dedupPrefixFilterInner(spark, sfDir)
+    // HNSW/streaming harness notes
+    QuerySession(spark, Seq("spark.sql.shuffle.partitions" -> "8")) {
+      spark => dedupPrefixFilterInner(spark, sfDir)
     }
-  }
 
   private def dedupPrefixFilterInner(spark: SparkSession,
       sfDir: String): DataFrame = {
@@ -1066,7 +1063,7 @@ object DedupOps {
   def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame =
     // many small sequential stages over band/bucket frames — the
     // iterative-key sizing (8 partitions, AQE off), not data volume
-    graft.engine.IterativeTuning.withSmallIterative(spark) {
+    QuerySession(spark, QuerySession.SmallIterative) { spark =>
       dedupIncrementalInner(spark, sfDir)
     }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.DfCache
+import graft.engine.{DfCache, QuerySession}
 import graft.engine.Exact.sqlXsum
 
 /** Iterative graph analytics over derived similarity graphs — the
@@ -77,19 +77,21 @@ object GraphOps {
     * (optimization guide §2.4 — remove shuffles outright; the cluster
     * analogue is bucketing the edge table by src).
     *
-    * The build is compiled inside [[graft.engine.IterativeTuning]]
-    * (AQE off, the iterative partition sizing): a cached plan compiled
+    * The build is compiled in a [[QuerySession]] with
+    * `SmallIterative` (AQE off, the iterative partition sizing), and
+    * the frame is bound back to the caller: a cached plan compiled
     * UNDER AQE reports UnknownPartitioning to its consumers (the
     * adaptive root hides the final shuffle's layout — measured in
     * Round20Spec), which silently re-buys the per-round exchange this
     * cache exists to remove. Wrapping the BUILD pins it regardless of
     * which graph key (wrapped or not) first populates the cache. */
   private def edgesBySrc(spark: SparkSession, sfDir: String): DataFrame =
-    graft.engine.IterativeTuning.withSmallIterative(spark) {
-      DfCache(spark, sfDir, "graphEdgesBySrc") {
-        edges(spark, sfDir).repartition(col("src"))
-      }
-    }
+    QuerySession.bind(QuerySession(spark, QuerySession.SmallIterative) {
+      spark =>
+        DfCache(spark, sfDir, "graphEdgesBySrc") {
+          edges(spark, sfDir).repartition(col("src"))
+        }
+    }, spark)
 
   /** Edge list with each source's out-degree attached, partitioned by
     * `src` — [[graphPagerank]]'s static per-iteration join input,
@@ -99,19 +101,20 @@ object GraphOps {
     * are exchange-free (partial agg + join over co-partitioned input)
     * and the cached result keeps the src layout. */
   private def edgesWithOutdeg(spark: SparkSession, sfDir: String): DataFrame =
-    graft.engine.IterativeTuning.withSmallIterative(spark) {
-      DfCache(spark, sfDir, "graphEdgesOutdeg") {
-        val e = edgesBySrc(spark, sfDir)
-        val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-        e.join(deg, "src")
-      }
-    }
+    QuerySession.bind(QuerySession(spark, QuerySession.SmallIterative) {
+      spark =>
+        DfCache(spark, sfDir, "graphEdgesOutdeg") {
+          val e = edgesBySrc(spark, sfDir)
+          val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+          e.join(deg, "src")
+        }
+    }, spark)
 
   /** PageRank after [[ITERS]] power iterations, damping 0.85.
     * Every node appears in the edge list in both directions (the pair
     * stream is symmetric), so out-degree ≥ 1 — no dangling-mass term. */
   def graphPagerank(spark: SparkSession, sfDir: String): DataFrame =
-    graft.engine.IterativeTuning.withSmallIterative(spark) {
+    QuerySession(spark, QuerySession.SmallIterative) { spark =>
       graphPagerankInner(spark, sfDir)
     }
 
@@ -473,7 +476,7 @@ object GraphOps {
     * nodes are absent from the output (no sentinel row), matching the
     * oracle's reachable-only enumeration. */
   def graphShortestPath(spark: SparkSession, sfDir: String): DataFrame =
-    graft.engine.IterativeTuning.withSmallIterative(spark) {
+    QuerySession(spark, QuerySession.SmallIterative) { spark =>
       graphShortestPathInner(spark, sfDir)
     }
 
@@ -632,8 +635,8 @@ object GraphOps {
     * whose build side is the (shrinking) vertex set. */
   def graphKcore(spark: SparkSession, sfDir: String): DataFrame =
     // same many-tiny-stage shape as pagerank: 8 partitions + AQE off
-    // inside the peel loop (IterativeTuning)
-    graft.engine.IterativeTuning.withSmallIterative(spark) {
+    // inside the peel loop
+    QuerySession(spark, QuerySession.SmallIterative) { spark =>
       graphKcoreRounds(spark, sfDir, KCORE_ROUNDS)
     }
 
@@ -711,7 +714,7 @@ object GraphOps {
     * of exact BIGINTs through one identical double tree, rnd6'd, then
     * exact-summed into Q. */
   def graphModularity(spark: SparkSession, sfDir: String): DataFrame =
-    graft.engine.IterativeTuning.withSmallIterative(spark) {
+    QuerySession(spark, QuerySession.SmallIterative) { spark =>
       graphModularityInner(spark, sfDir)
     }
 
@@ -824,7 +827,7 @@ object GraphOps {
     * lineage discipline); oracle = the same BFS as a seed-joined
     * recursive CTE with MIN(hops) semantics. */
   def graphCloseness(spark: SparkSession, sfDir: String): DataFrame =
-    graft.engine.IterativeTuning.withSmallIterative(spark) {
+    QuerySession(spark, QuerySession.SmallIterative) { spark =>
       graphClosenessInner(spark, sfDir)
     }
 
@@ -935,7 +938,7 @@ object GraphOps {
     // eagerly, so wrapping the whole body runs the iteration at the
     // family's small-iterative tuning (and compiles the dual edge
     // caches below with their layout visible — see [[edgesBySrc]])
-    graft.engine.IterativeTuning.withSmallIterative(spark) {
+    QuerySession(spark, QuerySession.SmallIterative) { spark =>
       graphHitsInner(spark, sfDir)
     }
 

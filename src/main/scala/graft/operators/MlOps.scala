@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{DfCache, Exact, Tables}
+import graft.engine.{DfCache, Exact, QuerySession, Tables}
 
 /** Closed-form model fitting — the "classical ML on a warehouse"
   * family: models whose sufficient statistics are plain aggregates, so
@@ -1330,11 +1330,11 @@ object MlOps {
     // Iterative-family tuning (round 13): the 8 matvec generations run
     // on d-row state — AQE's per-stage re-planning and 32-partition
     // exchanges are pure latency there (same rationale as the graph
-    // loops; the localCheckpoints execute eagerly INSIDE this wrapper,
-    // so unlike a fixed unroll the tuning actually reaches them).
-    graft.engine.IterativeTuning.withSmallIterative(spark) {
-      pcaVectorInner(spark, sfDir)
-    }
+    // loops). The localCheckpoints execute eagerly on the tuned
+    // clone; both frames are bound back to the caller.
+    pcaVectorInner(QuerySession.session(spark, QuerySession.SmallIterative),
+        sfDir) match { case (c, v) =>
+      (QuerySession.bind(c, spark), QuerySession.bind(v, spark)) }
 
   private def pcaVectorInner(spark: SparkSession,
                              sfDir: String): (DataFrame, DataFrame) = {

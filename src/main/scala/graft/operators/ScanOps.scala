@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{QuerySession, Tables}
+import graft.sources.GraftCatalog
 
 /** Scans / sources / sinks (SURVEY.md §2.1).
   *
@@ -40,12 +41,10 @@ object ScanOps {
     * filters + a 3-column read schema and proves the result is
     * byte-identical to the path-based twin below); the oracle is the
     * same relational query. */
-  def catalogScan(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    graft.sources.GraftCatalog.register(spark)
-    catalogAgg(
-      spark.table(graft.sources.GraftCatalog.ident(sfDir, "lineitem")))
-  }
+  def catalogScan(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      catalogAgg(spark.table(GraftCatalog.ident(s"$sfDir/lineitem")))
+    }
 
   /** Path-based twin of [[catalogScan]] — the differential partner. */
   def catalogScanPathTwin(spark: SparkSession, sfDir: String): DataFrame =

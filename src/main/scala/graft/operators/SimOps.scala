@@ -1007,8 +1007,7 @@ object SimOps {
     * graph traversal has no single-query DuckDB twin, the same class
     * as ALS).
     */
-  def simsearchHnsw(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.CosineSim.register(spark)
+  def simsearchHnsw(spark: SparkSession, sfDir: String): DataFrame =
     // the build/search frames are (corpus × M) and (queries × EF)
     // rows — 32 shuffle partitions would be pure per-round fixed
     // overhead across the ~9 iterative jobs, and AQE would re-plan
@@ -1016,12 +1015,12 @@ object SimOps {
     // frames this small (measured: the search is job-count-bound, not
     // data-bound). A 100 TB run wants AQE back ON for the build (skew
     // in bucket joins); the search's per-round frames stay beam-sized
-    // at any corpus scale. Restored before the RESULT is built, so
-    // the caller's plan is unaffected.
-    graft.engine.IterativeTuning.withSmallIterative(spark) {
+    // at any corpus scale.
+    graft.engine.QuerySession(spark,
+        graft.engine.QuerySession.SmallIterative) { spark =>
+      graft.functions.CosineSim.register(spark)
       simsearchHnswInner(spark, sfDir)
     }
-  }
 
   private def simsearchHnswInner(spark: SparkSession,
       sfDir: String): DataFrame = {

@@ -173,24 +173,24 @@ object SourceOps {
     * pushes into both generators. This is DSv2's shuffle-free join
     * over co-bucketed tables — at 100 TB, the single biggest join
     * cost (re-shuffling both fact tables) deleted by layout. */
-  def sourceSpjJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
+  def sourceSpjJoin(spark: SparkSession, sfDir: String): DataFrame =
     // join keys (bucket, id) are a SUPERSET of the partition key
     // (bucket): co-partitioning on the subset is exactly what SPJ
     // exploits, so relax the all-keys requirement (the conf Iceberg's
     // SPJ guide prescribes; v2 bucketing itself is on by default).
     // Purely a plan relaxation — Spark only elides an exchange where
-    // distribution still holds. Session-wide, never restored: the
-    // caller's action plans the returned frame lazily, after any
-    // scoped restore.
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    val a = synth(spark)
-    val b = synthSized(spark, 45000L)
-    a.join(b.hint("merge"), Seq("bucket", "id"))
-      .filter($"id" >= 40000L)
-      .select($"id", $"bucket", (a("value") + b("value")).as("v2"))
-      .orderBy($"id")
-  }
+    // distribution still holds.
+    graft.engine.QuerySession(spark,
+        Seq("spark.sql.requireAllClusterKeysForCoPartition" -> "false")) {
+      spark =>
+        import spark.implicits._
+        val a = synth(spark)
+        val b = synthSized(spark, 45000L)
+        a.join(b.hint("merge"), Seq("bucket", "id"))
+          .filter($"id" >= 40000L)
+          .select($"id", $"bucket", (a("value") + b("value")).as("v2"))
+          .orderBy($"id")
+    }
 
   val sourceSpjJoinSql: String =
     s"""WITH $synthCte,

@@ -152,7 +152,8 @@ object TsOps {
   def tsCusum(spark: SparkSession, sfDir: String): DataFrame =
     // O(#days) frames through many sequential exchanges — the
     // iterative-key sizing applies (stage count is the cost)
-    graft.engine.IterativeTuning.withSmallIterative(spark) {
+    graft.engine.QuerySession(spark,
+        graft.engine.QuerySession.SmallIterative) { spark =>
       tsCusumInner(spark, sfDir)
     }
 

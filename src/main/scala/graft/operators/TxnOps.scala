@@ -5,7 +5,8 @@ import java.util.concurrent.CyclicBarrier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{DfCache, Tables, TxnLog}
+import graft.engine.{DfCache, QuerySession, Tables, TxnLog}
+import graft.sources.GraftCatalog
 
 /** Transactional-table operators over [[graft.engine.TxnLog]] — the
   * lakehouse capabilities plain versioned parquet lacks: optimistic
@@ -467,20 +468,18 @@ object TxnOps {
     * rides along (`latest_balance`, NULL for users v3 deleted),
     * proving the two resolutions hit different snapshots of one
     * table in one query. */
-  def txnCatalogRead(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = ttTable(spark, sfDir)
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty)
-    val ident = (graft.sources.GraftCatalog.NAME +: parts.toSeq)
-      .map(p => s"`$p`").mkString(".")
-    spark.sql(
-      s"""SELECT v2.key AS user_id, v2.value AS balance,
-         |  latest.value AS latest_balance
-         |FROM $ident VERSION AS OF 2 v2
-         |LEFT JOIN $ident latest ON v2.key = latest.key
-         |ORDER BY user_id""".stripMargin)
-  }
+  def txnCatalogRead(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      import spark.implicits._
+      val root = ttTable(spark, sfDir)
+      val ident = GraftCatalog.ident(root)
+      spark.sql(
+        s"""SELECT v2.key AS user_id, v2.value AS balance,
+           |  latest.value AS latest_balance
+           |FROM $ident VERSION AS OF 2 v2
+           |LEFT JOIN $ident latest ON v2.key = latest.key
+           |ORDER BY user_id""".stripMargin)
+    }
 
   val txnCatalogReadSql: String =
     """WITH counts AS (
@@ -1232,26 +1231,24 @@ object TxnOps {
     * table declares a primary key): view counts REPLACE click
     * balances where the user exists, insert where not. `n_versions`
     * pins that the DML became exactly one new commit. */
-  def txnSqlInsert(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = DfCache.scratch(spark, sfDir, "sqlinsert")
-    TxnLog.destroy(root)
-    TxnLog.init(root)
-    TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident = (graft.sources.GraftCatalog.NAME +: parts)
-      .map(p => s"`$p`").mkString(".")
-    typeCounts(spark, sfDir, "view").select($"key", $"cnt")
-      .createOrReplaceTempView("graft_sql_insert_src")
-    spark.sql(
-      s"INSERT INTO $ident SELECT key, cnt FROM graft_sql_insert_src")
-    val nVersions = TxnLog.latestCommitted(root) + 1
-    spark.sql(
-      s"""SELECT key AS user_id, value AS balance
-         |FROM $ident ORDER BY user_id""".stripMargin)
-      .withColumn("n_versions", lit(nVersions))
-  }
+  def txnSqlInsert(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      import spark.implicits._
+      val root = DfCache.scratch(spark, sfDir, "sqlinsert")
+      TxnLog.destroy(root)
+      TxnLog.init(root)
+      TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
+      val ident = GraftCatalog.ident(root)
+      typeCounts(spark, sfDir, "view").select($"key", $"cnt")
+        .createOrReplaceTempView("graft_sql_insert_src")
+      spark.sql(
+        s"INSERT INTO $ident SELECT key, cnt FROM graft_sql_insert_src")
+      val nVersions = TxnLog.latestCommitted(root) + 1
+      spark.sql(
+        s"""SELECT key AS user_id, value AS balance
+           |FROM $ident ORDER BY user_id""".stripMargin)
+        .withColumn("n_versions", lit(nVersions))
+    }
 
   val txnSqlInsertSql: String =
     """WITH c AS (
@@ -1276,41 +1273,39 @@ object TxnOps {
     * commit-order-independent and the oracle can pin it exactly;
     * what the race proves is the serialization itself, pinned by
     * `n_versions` = 3. */
-  def txnSqlConcurrent(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = DfCache.scratch(spark, sfDir, "sqlconc")
-    TxnLog.destroy(root)
-    TxnLog.init(root)
-    TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident = (graft.sources.GraftCatalog.NAME +: parts)
-      .map(p => s"`$p`").mkString(".")
-    // two sources in disjoint key spaces: raw user ids are < 10^7 in
-    // every fixture; the second writer lands at +10^7
-    typeCounts(spark, sfDir, "view").select($"key", $"cnt")
-      .createOrReplaceTempView("graft_conc_a")
-    typeCounts(spark, sfDir, "purchase")
-      .select(($"key" + 10000000L).as("key"), $"cnt")
-      .createOrReplaceTempView("graft_conc_b")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val fa = pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = { spark.sql(
-          s"INSERT INTO $ident SELECT key, cnt FROM graft_conc_a"); () }
-      })
-      val fb = pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = { spark.sql(
-          s"INSERT INTO $ident SELECT key, cnt FROM graft_conc_b"); () }
-      })
-      fa.get(); fb.get()
-    } finally pool.shutdown()
-    val nVersions = TxnLog.latestCommitted(root) + 1
-    spark.sql(
-      s"""SELECT key AS user_id, value AS balance
-         |FROM $ident ORDER BY user_id""".stripMargin)
-      .withColumn("n_versions", lit(nVersions))
-  }
+  def txnSqlConcurrent(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      import spark.implicits._
+      val root = DfCache.scratch(spark, sfDir, "sqlconc")
+      TxnLog.destroy(root)
+      TxnLog.init(root)
+      TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
+      val ident = GraftCatalog.ident(root)
+      // two sources in disjoint key spaces: raw user ids are < 10^7 in
+      // every fixture; the second writer lands at +10^7
+      typeCounts(spark, sfDir, "view").select($"key", $"cnt")
+        .createOrReplaceTempView("graft_conc_a")
+      typeCounts(spark, sfDir, "purchase")
+        .select(($"key" + 10000000L).as("key"), $"cnt")
+        .createOrReplaceTempView("graft_conc_b")
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val fa = pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = { spark.sql(
+            s"INSERT INTO $ident SELECT key, cnt FROM graft_conc_a"); () }
+        })
+        val fb = pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = { spark.sql(
+            s"INSERT INTO $ident SELECT key, cnt FROM graft_conc_b"); () }
+        })
+        fa.get(); fb.get()
+      } finally pool.shutdown()
+      val nVersions = TxnLog.latestCommitted(root) + 1
+      spark.sql(
+        s"""SELECT key AS user_id, value AS balance
+           |FROM $ident ORDER BY user_id""".stripMargin)
+        .withColumn("n_versions", lit(nVersions))
+    }
 
   val txnSqlConcurrentSql: String =
     """WITH c AS (
@@ -1339,24 +1334,22 @@ object TxnOps {
     * the survivors and the version count are oracle-checked. A
     * non-translatable predicate fails loudly via `canDeleteWhere`
     * instead of deleting the wrong rows. */
-  def txnSqlDelete(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = DfCache.scratch(spark, sfDir, "sqldelete")
-    TxnLog.destroy(root)
-    TxnLog.init(root)
-    TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
-    TxnLog.commit(spark, root, addCounts(spark, sfDir, "view"))
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident = (graft.sources.GraftCatalog.NAME +: parts)
-      .map(p => s"`$p`").mkString(".")
-    spark.sql(s"DELETE FROM $ident WHERE value <= 1")
-    val nVersions = TxnLog.latestCommitted(root) + 1
-    spark.sql(
-      s"""SELECT key AS user_id, value AS balance
-         |FROM $ident ORDER BY user_id""".stripMargin)
-      .withColumn("n_versions", lit(nVersions))
-  }
+  def txnSqlDelete(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      import spark.implicits._
+      val root = DfCache.scratch(spark, sfDir, "sqldelete")
+      TxnLog.destroy(root)
+      TxnLog.init(root)
+      TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
+      TxnLog.commit(spark, root, addCounts(spark, sfDir, "view"))
+      val ident = GraftCatalog.ident(root)
+      spark.sql(s"DELETE FROM $ident WHERE value <= 1")
+      val nVersions = TxnLog.latestCommitted(root) + 1
+      spark.sql(
+        s"""SELECT key AS user_id, value AS balance
+           |FROM $ident ORDER BY user_id""".stripMargin)
+        .withColumn("n_versions", lit(nVersions))
+    }
 
   val txnSqlDeleteSql: String =
     """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS balance,
@@ -1373,28 +1366,26 @@ object TxnOps {
     * table is a live transactional table (v1). The full SQL
     * lifecycle — CREATE / INSERT / DELETE / SELECT / time travel —
     * now runs against the log with no Scala in the loop. */
-  def txnSqlCtas(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = DfCache.scratch(spark, sfDir, "ctas")
-    TxnLog.destroy(root)
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident = (graft.sources.GraftCatalog.NAME +: parts)
-      .map(p => s"`$p`").mkString(".")
-    typeCounts(spark, sfDir, "click")
-      .select($"key", $"cnt".as("value"))
-      .createOrReplaceTempView("graft_ctas_src")
-    spark.sql(s"CREATE TABLE $ident AS SELECT key, value FROM graft_ctas_src")
-    typeCounts(spark, sfDir, "purchase")
-      .select($"key", $"cnt".as("value"))
-      .createOrReplaceTempView("graft_ctas_src2")
-    spark.sql(s"INSERT INTO $ident SELECT key, value FROM graft_ctas_src2")
-    val nVersions = TxnLog.latestCommitted(root) + 1
-    spark.sql(
-      s"""SELECT key AS user_id, value AS balance
-         |FROM $ident ORDER BY user_id""".stripMargin)
-      .withColumn("n_versions", lit(nVersions))
-  }
+  def txnSqlCtas(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      import spark.implicits._
+      val root = DfCache.scratch(spark, sfDir, "ctas")
+      TxnLog.destroy(root)
+      val ident = GraftCatalog.ident(root)
+      typeCounts(spark, sfDir, "click")
+        .select($"key", $"cnt".as("value"))
+        .createOrReplaceTempView("graft_ctas_src")
+      spark.sql(s"CREATE TABLE $ident AS SELECT key, value FROM graft_ctas_src")
+      typeCounts(spark, sfDir, "purchase")
+        .select($"key", $"cnt".as("value"))
+        .createOrReplaceTempView("graft_ctas_src2")
+      spark.sql(s"INSERT INTO $ident SELECT key, value FROM graft_ctas_src2")
+      val nVersions = TxnLog.latestCommitted(root) + 1
+      spark.sql(
+        s"""SELECT key AS user_id, value AS balance
+           |FROM $ident ORDER BY user_id""".stripMargin)
+        .withColumn("n_versions", lit(nVersions))
+    }
 
   val txnSqlCtasSql: String =
     """WITH c AS (
@@ -1419,35 +1410,33 @@ object TxnOps {
     * translates only names, and column pruning still reaches the
     * parquet reader). The whole rename lifecycle — DDL, DML, query —
     * is SQL text with no Scala in the loop. */
-  def txnSqlAlter(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = DfCache.scratch(spark, sfDir, "sqlalter")
-    TxnLog.destroy(root)
-    TxnLog.init(root)
-    TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident = (graft.sources.GraftCatalog.NAME +: parts)
-      .map(p => s"`$p`").mkString(".")
-    spark.sql(s"ALTER TABLE $ident RENAME COLUMN value TO balance")
-    val metadataOnly =
-      if (java.nio.file.Files.isSymbolicLink(
-        java.nio.file.Paths.get(root, "snapshot_v1"))) 1L else 0L
-    typeCounts(spark, sfDir, "view")
-      .select($"key", $"cnt".as("balance"))
-      .createOrReplaceTempView("graft_alter_src")
-    spark.sql(s"INSERT INTO $ident SELECT key, balance FROM graft_alter_src")
-    val physCols = spark.read.parquet(s"$root/snapshot_v2").columns.toSet
-    val physicalStable =
-      if (physCols("value") && !physCols("balance")) 1L else 0L
-    val nVersions = TxnLog.latestCommitted(root) + 1
-    spark.sql(
-      s"""SELECT key AS user_id, balance
-         |FROM $ident ORDER BY user_id""".stripMargin)
-      .withColumn("metadata_only", lit(metadataOnly))
-      .withColumn("physical_name_stable", lit(physicalStable))
-      .withColumn("n_versions", lit(nVersions))
-  }
+  def txnSqlAlter(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      import spark.implicits._
+      val root = DfCache.scratch(spark, sfDir, "sqlalter")
+      TxnLog.destroy(root)
+      TxnLog.init(root)
+      TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
+      val ident = GraftCatalog.ident(root)
+      spark.sql(s"ALTER TABLE $ident RENAME COLUMN value TO balance")
+      val metadataOnly =
+        if (java.nio.file.Files.isSymbolicLink(
+          java.nio.file.Paths.get(root, "snapshot_v1"))) 1L else 0L
+      typeCounts(spark, sfDir, "view")
+        .select($"key", $"cnt".as("balance"))
+        .createOrReplaceTempView("graft_alter_src")
+      spark.sql(s"INSERT INTO $ident SELECT key, balance FROM graft_alter_src")
+      val physCols = spark.read.parquet(s"$root/snapshot_v2").columns.toSet
+      val physicalStable =
+        if (physCols("value") && !physCols("balance")) 1L else 0L
+      val nVersions = TxnLog.latestCommitted(root) + 1
+      spark.sql(
+        s"""SELECT key AS user_id, balance
+           |FROM $ident ORDER BY user_id""".stripMargin)
+        .withColumn("metadata_only", lit(metadataOnly))
+        .withColumn("physical_name_stable", lit(physicalStable))
+        .withColumn("n_versions", lit(nVersions))
+    }
 
   val txnSqlAlterSql: String =
     """WITH c AS (
@@ -1477,45 +1466,43 @@ object TxnOps {
     * old int schema (`tt_type_int`). This is the year-2 lakehouse
     * operation — a column outgrowing its type on a 100 TB table —
     * done without touching a single data file. */
-  def txnSqlAlterType(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    val root = DfCache.scratch(spark, sfDir, "sqlaltertype")
-    TxnLog.destroy(root)
-    TxnLog.init(root)
-    TxnLog.commit(spark, root, { _ =>
-      val inc = typeCounts(spark, sfDir, "click")
-      (inc.select($"key", $"cnt".cast("int").as("value"),
-        lit("upsert").as("op")), TxnLog.range(inc))
-    })
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident = (graft.sources.GraftCatalog.NAME +: parts)
-      .map(p => s"`$p`").mkString(".")
-    val preTypeInt =
-      if (spark.table(ident).schema("value").dataType == IntegerType) 1L
-      else 0L
-    spark.sql(s"ALTER TABLE $ident ALTER COLUMN value TYPE BIGINT")
-    val metadataOnly =
-      if (java.nio.file.Files.isSymbolicLink(
-        java.nio.file.Paths.get(root, "snapshot_v1"))) 1L else 0L
-    val postTypeBigint =
-      if (spark.table(ident).schema("value").dataType == LongType) 1L
-      else 0L
-    spark.sql(s"INSERT INTO $ident VALUES " +
-      "(9000000001, 5000000000), (9000000002, 6000000000)")
-    // time travel ACROSS the widening boundary: v0 predates the
-    // ALTER, so it still reads with the narrow int schema
-    val ttTypeInt =
-      if (TxnLog.read(spark, root, 0L)
-        .schema("value").dataType == IntegerType) 1L else 0L
-    spark.sql(s"SELECT key AS user_id, value FROM $ident")
-      .withColumn("pre_type_int", lit(preTypeInt))
-      .withColumn("metadata_only", lit(metadataOnly))
-      .withColumn("post_type_bigint", lit(postTypeBigint))
-      .withColumn("tt_type_int", lit(ttTypeInt))
-      .orderBy($"user_id")
-  }
+  def txnSqlAlterType(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      import spark.implicits._
+      import org.apache.spark.sql.types.{IntegerType, LongType}
+      val root = DfCache.scratch(spark, sfDir, "sqlaltertype")
+      TxnLog.destroy(root)
+      TxnLog.init(root)
+      TxnLog.commit(spark, root, { _ =>
+        val inc = typeCounts(spark, sfDir, "click")
+        (inc.select($"key", $"cnt".cast("int").as("value"),
+          lit("upsert").as("op")), TxnLog.range(inc))
+      })
+      val ident = GraftCatalog.ident(root)
+      val preTypeInt =
+        if (spark.table(ident).schema("value").dataType == IntegerType) 1L
+        else 0L
+      spark.sql(s"ALTER TABLE $ident ALTER COLUMN value TYPE BIGINT")
+      val metadataOnly =
+        if (java.nio.file.Files.isSymbolicLink(
+          java.nio.file.Paths.get(root, "snapshot_v1"))) 1L else 0L
+      val postTypeBigint =
+        if (spark.table(ident).schema("value").dataType == LongType) 1L
+        else 0L
+      spark.sql(s"INSERT INTO $ident VALUES " +
+        "(9000000001, 5000000000), (9000000002, 6000000000)")
+      // time travel ACROSS the widening boundary: v0 predates the
+      // ALTER, so it still reads with the narrow int schema
+      val ttTypeInt =
+        if (TxnLog.read(spark, root, 0L)
+          .schema("value").dataType == IntegerType) 1L else 0L
+      spark.sql(s"SELECT key AS user_id, value FROM $ident")
+        .withColumn("pre_type_int", lit(preTypeInt))
+        .withColumn("metadata_only", lit(metadataOnly))
+        .withColumn("post_type_bigint", lit(postTypeBigint))
+        .withColumn("tt_type_int", lit(ttTypeInt))
+        .orderBy($"user_id")
+    }
 
   val txnSqlAlterTypeSql: String =
     """WITH c AS (
@@ -1544,26 +1531,24 @@ object TxnOps {
     * balances are overwritten by view counts: view-only users
     * appear, click-only users vanish. */
   def txnSqlInsertOverwrite(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = DfCache.scratch(spark, sfDir, "sqlow")
-    TxnLog.destroy(root)
-    TxnLog.init(root)
-    TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident = (graft.sources.GraftCatalog.NAME +: parts)
-      .map(p => s"`$p`").mkString(".")
-    typeCounts(spark, sfDir, "view").select($"key", $"cnt")
-      .createOrReplaceTempView("graft_ow_src")
-    spark.sql(
-      s"INSERT OVERWRITE TABLE $ident SELECT key, cnt FROM graft_ow_src")
-    val nVersions = TxnLog.latestCommitted(root) + 1
-    spark.sql(
-      s"""SELECT key AS user_id, value AS balance
-         |FROM $ident ORDER BY user_id""".stripMargin)
-      .withColumn("n_versions", lit(nVersions))
-  }
+      sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      import spark.implicits._
+      val root = DfCache.scratch(spark, sfDir, "sqlow")
+      TxnLog.destroy(root)
+      TxnLog.init(root)
+      TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
+      val ident = GraftCatalog.ident(root)
+      typeCounts(spark, sfDir, "view").select($"key", $"cnt")
+        .createOrReplaceTempView("graft_ow_src")
+      spark.sql(
+        s"INSERT OVERWRITE TABLE $ident SELECT key, cnt FROM graft_ow_src")
+      val nVersions = TxnLog.latestCommitted(root) + 1
+      spark.sql(
+        s"""SELECT key AS user_id, value AS balance
+           |FROM $ident ORDER BY user_id""".stripMargin)
+        .withColumn("n_versions", lit(nVersions))
+    }
 
   val txnSqlInsertOverwriteSql: String =
     """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS balance,
@@ -1579,23 +1564,21 @@ object TxnOps {
     * never a table rewrite. Click balances ≥ 3 are scaled ×10; the
     * oracle recomputes the conditional arithmetic from events and
     * `n_versions` pins one commit for the whole DML. */
-  def txnSqlUpdate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = DfCache.scratch(spark, sfDir, "sqlupdate")
-    TxnLog.destroy(root)
-    TxnLog.init(root)
-    TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident = (graft.sources.GraftCatalog.NAME +: parts)
-      .map(p => s"`$p`").mkString(".")
-    spark.sql(s"UPDATE $ident SET value = value * 10 WHERE value >= 3")
-    val nVersions = TxnLog.latestCommitted(root) + 1
-    spark.sql(
-      s"""SELECT key AS user_id, value AS balance
-         |FROM $ident ORDER BY user_id""".stripMargin)
-      .withColumn("n_versions", lit(nVersions))
-  }
+  def txnSqlUpdate(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      import spark.implicits._
+      val root = DfCache.scratch(spark, sfDir, "sqlupdate")
+      TxnLog.destroy(root)
+      TxnLog.init(root)
+      TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
+      val ident = GraftCatalog.ident(root)
+      spark.sql(s"UPDATE $ident SET value = value * 10 WHERE value >= 3")
+      val nVersions = TxnLog.latestCommitted(root) + 1
+      spark.sql(
+        s"""SELECT key AS user_id, value AS balance
+           |FROM $ident ORDER BY user_id""".stripMargin)
+        .withColumn("n_versions", lit(nVersions))
+    }
 
   val txnSqlUpdateSql: String =
     """WITH c AS (
@@ -1615,31 +1598,29 @@ object TxnOps {
     * hourly against a 100 TB fact table; delta-based rewrite makes
     * its cost the match set, and the log's keyed applyDelta IS the
     * merge-on-read reconciliation the write relies on. */
-  def txnSqlMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = DfCache.scratch(spark, sfDir, "sqlmerge")
-    TxnLog.destroy(root)
-    TxnLog.init(root)
-    TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident = (graft.sources.GraftCatalog.NAME +: parts)
-      .map(p => s"`$p`").mkString(".")
-    typeCounts(spark, sfDir, "view")
-      .select($"key", $"cnt")
-      .createOrReplaceTempView("graft_merge_src")
-    spark.sql(
-      s"""MERGE INTO $ident t
-         |USING graft_merge_src s ON t.key = s.key
-         |WHEN MATCHED THEN UPDATE SET value = t.value + s.cnt
-         |WHEN NOT MATCHED THEN INSERT (key, value) VALUES (s.key, s.cnt)
-         |""".stripMargin)
-    val nVersions = TxnLog.latestCommitted(root) + 1
-    spark.sql(
-      s"""SELECT key AS user_id, value AS balance
-         |FROM $ident ORDER BY user_id""".stripMargin)
-      .withColumn("n_versions", lit(nVersions))
-  }
+  def txnSqlMerge(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      import spark.implicits._
+      val root = DfCache.scratch(spark, sfDir, "sqlmerge")
+      TxnLog.destroy(root)
+      TxnLog.init(root)
+      TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
+      val ident = GraftCatalog.ident(root)
+      typeCounts(spark, sfDir, "view")
+        .select($"key", $"cnt")
+        .createOrReplaceTempView("graft_merge_src")
+      spark.sql(
+        s"""MERGE INTO $ident t
+           |USING graft_merge_src s ON t.key = s.key
+           |WHEN MATCHED THEN UPDATE SET value = t.value + s.cnt
+           |WHEN NOT MATCHED THEN INSERT (key, value) VALUES (s.key, s.cnt)
+           |""".stripMargin)
+      val nVersions = TxnLog.latestCommitted(root) + 1
+      spark.sql(
+        s"""SELECT key AS user_id, value AS balance
+           |FROM $ident ORDER BY user_id""".stripMargin)
+        .withColumn("n_versions", lit(nVersions))
+    }
 
   val txnSqlMergeSql: String =
     """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS balance,
@@ -1657,30 +1638,28 @@ object TxnOps {
     * harness, not a production pattern), asks for a time strictly
     * between them, and must see exactly v0's click balances; the
     * latest read rides along for contrast. */
-  def txnTimeTravelTs(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = DfCache.scratch(spark, sfDir, "ttts")
-    TxnLog.destroy(root)
-    TxnLog.init(root)
-    TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
-    TxnLog.commit(spark, root, addCounts(spark, sfDir, "view"))
-    // pin publish instants: v0 at T, v1 at T+10s; query T+5s
-    val base = (System.currentTimeMillis() / 1000L) * 1000L - 120000L
-    new java.io.File(root, "_txn_log/v0.commit").setLastModified(base)
-    new java.io.File(root, "_txn_log/v1.commit")
-      .setLastModified(base + 10000L)
-    val asOf = java.time.Instant.ofEpochMilli(base + 5000L).toString
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident = (graft.sources.GraftCatalog.NAME +: parts)
-      .map(p => s"`$p`").mkString(".")
-    spark.sql(
-      s"""SELECT atts.key AS user_id, atts.value AS clicks,
-         |  latest.value AS balance
-         |FROM $ident TIMESTAMP AS OF '$asOf' atts
-         |JOIN $ident latest ON atts.key = latest.key
-         |ORDER BY user_id""".stripMargin)
-  }
+  def txnTimeTravelTs(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      import spark.implicits._
+      val root = DfCache.scratch(spark, sfDir, "ttts")
+      TxnLog.destroy(root)
+      TxnLog.init(root)
+      TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
+      TxnLog.commit(spark, root, addCounts(spark, sfDir, "view"))
+      // pin publish instants: v0 at T, v1 at T+10s; query T+5s
+      val base = (System.currentTimeMillis() / 1000L) * 1000L - 120000L
+      new java.io.File(root, "_txn_log/v0.commit").setLastModified(base)
+      new java.io.File(root, "_txn_log/v1.commit")
+        .setLastModified(base + 10000L)
+      val asOf = java.time.Instant.ofEpochMilli(base + 5000L).toString
+      val ident = GraftCatalog.ident(root)
+      spark.sql(
+        s"""SELECT atts.key AS user_id, atts.value AS clicks,
+           |  latest.value AS balance
+           |FROM $ident TIMESTAMP AS OF '$asOf' atts
+           |JOIN $ident latest ON atts.key = latest.key
+           |ORDER BY user_id""".stripMargin)
+    }
 
   val txnTimeTravelTsSql: String =
     """SELECT user_id,
@@ -1704,30 +1683,28 @@ object TxnOps {
     * facts are). This is the read path every stats-skipping decision
     * uses at 100 TB: the planner consults footers/manifests, never
     * data. */
-  def txnFiles(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = fixtureOnce(spark, sfDir, "files") { r =>
-      Seq("click", "view", "purchase").foreach { et =>
-        TxnLog.commit(spark, r, addCounts(spark, sfDir, et))
+  def txnFiles(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      val root = fixtureOnce(spark, sfDir, "files") { r =>
+        Seq("click", "view", "purchase").foreach { et =>
+          TxnLog.commit(spark, r, addCounts(spark, sfDir, et))
+        }
+        TxnLog.optimizeClustered(spark, r, targetFiles = 4)
       }
-      TxnLog.optimizeClustered(spark, r, targetFiles = 4)
+      val ident = GraftCatalog.ident(root + "$files")
+      spark.sql(
+        s"""WITH f AS (
+           |  SELECT kmin, kmax,
+           |    LAG(kmax) OVER (ORDER BY file_index) AS prev_max,
+           |    n_rows
+           |  FROM $ident)
+           |SELECT CAST(COUNT(*) AS INT) AS n_files,
+           |  SUM(n_rows) AS total_rows,
+           |  MIN(kmin) AS lo, MAX(kmax) AS hi,
+           |  CAST(MIN(CASE WHEN prev_max IS NULL OR kmin > prev_max
+           |    THEN 1 ELSE 0 END) AS BIGINT) AS disjoint
+           |FROM f""".stripMargin)
     }
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident = (graft.sources.GraftCatalog.NAME +: parts.init :+
-      (parts.last + "$files")).map(p => s"`$p`").mkString(".")
-    spark.sql(
-      s"""WITH f AS (
-         |  SELECT kmin, kmax,
-         |    LAG(kmax) OVER (ORDER BY file_index) AS prev_max,
-         |    n_rows
-         |  FROM $ident)
-         |SELECT CAST(COUNT(*) AS INT) AS n_files,
-         |  SUM(n_rows) AS total_rows,
-         |  MIN(kmin) AS lo, MAX(kmax) AS hi,
-         |  CAST(MIN(CASE WHEN prev_max IS NULL OR kmin > prev_max
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS disjoint
-         |FROM f""".stripMargin)
-  }
 
   val txnFilesSql: String =
     """SELECT CAST(4 AS INT) AS n_files,
@@ -1751,24 +1728,21 @@ object TxnOps {
     * driver-side via a LocalScan is the honest scale answer. The
     * oracle recomputes the write spans from events and pins the
     * operation ladder. */
-  def txnHistory(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = fixtureOnce(spark, sfDir, "history") { r =>
-      Seq("click", "view", "purchase").foreach { et =>
-        TxnLog.commit(spark, r, addCounts(spark, sfDir, et))
+  def txnHistory(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      val root = fixtureOnce(spark, sfDir, "history") { r =>
+        Seq("click", "view", "purchase").foreach { et =>
+          TxnLog.commit(spark, r, addCounts(spark, sfDir, et))
+        }
+        TxnLog.renameColumn(spark, r, "value", "balance")
+        TxnLog.optimizeClustered(spark, r, targetFiles = 4)
       }
-      TxnLog.renameColumn(spark, r, "value", "balance")
-      TxnLog.optimizeClustered(spark, r, targetFiles = 4)
+      val ident = GraftCatalog.ident(root + "$history")
+      spark.sql(
+        s"""SELECT version, read_version, operation, n_files,
+           |  coalesce(wmin, -1) AS wmin, coalesce(wmax, -1) AS wmax
+           |FROM $ident ORDER BY version""".stripMargin)
     }
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident =
-      (graft.sources.GraftCatalog.NAME +: parts.init :+
-        (parts.last + "$history")).map(p => s"`$p`").mkString(".")
-    spark.sql(
-      s"""SELECT version, read_version, operation, n_files,
-         |  coalesce(wmin, -1) AS wmin, coalesce(wmax, -1) AS wmax
-         |FROM $ident ORDER BY version""".stripMargin)
-  }
 
   val txnHistorySql: String =
     """WITH m AS (
@@ -1808,28 +1782,26 @@ object TxnOps {
     * constant row-side, fully distributed). Time travel BELOW the
     * ALTER still shows the old two-column schema (`n_cols_v0`) —
     * the Delta/Iceberg added-with-default semantic end to end. */
-  def txnSqlAddDefault(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = DfCache.scratch(spark, sfDir, "sqladddef")
-    TxnLog.destroy(root)
-    TxnLog.init(root)
-    TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident = (graft.sources.GraftCatalog.NAME +: parts)
-      .map(p => s"`$p`").mkString(".")
-    spark.sql(s"ALTER TABLE $ident ADD COLUMN score BIGINT DEFAULT 7")
-    val linkOk =
-      if (java.nio.file.Files.isSymbolicLink(
-        java.nio.file.Paths.get(root, "snapshot_v1"))) 1L else 0L
-    val nColsV0 = spark.sql(
-      s"SELECT * FROM $ident VERSION AS OF 0").columns.length.toLong
-    spark.sql(
-      s"""SELECT key AS user_id, value AS balance, score
-         |FROM $ident ORDER BY user_id""".stripMargin)
-      .withColumn("link_ok", lit(linkOk))
-      .withColumn("n_cols_v0", lit(nColsV0))
-  }
+  def txnSqlAddDefault(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      import spark.implicits._
+      val root = DfCache.scratch(spark, sfDir, "sqladddef")
+      TxnLog.destroy(root)
+      TxnLog.init(root)
+      TxnLog.commit(spark, root, addCounts(spark, sfDir, "click"))
+      val ident = GraftCatalog.ident(root)
+      spark.sql(s"ALTER TABLE $ident ADD COLUMN score BIGINT DEFAULT 7")
+      val linkOk =
+        if (java.nio.file.Files.isSymbolicLink(
+          java.nio.file.Paths.get(root, "snapshot_v1"))) 1L else 0L
+      val nColsV0 = spark.sql(
+        s"SELECT * FROM $ident VERSION AS OF 0").columns.length.toLong
+      spark.sql(
+        s"""SELECT key AS user_id, value AS balance, score
+           |FROM $ident ORDER BY user_id""".stripMargin)
+        .withColumn("link_ok", lit(linkOk))
+        .withColumn("n_cols_v0", lit(nColsV0))
+    }
 
   val txnSqlAddDefaultSql: String =
     """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS balance,
@@ -1850,19 +1822,17 @@ object TxnOps {
     * contract at 100 TB. Aggregated per (version, op); the oracle
     * recomputes each wave's change counts and key spans from
     * events. */
-  def txnSqlChanges(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = ttTable(spark, sfDir)
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident = (graft.sources.GraftCatalog.NAME +: parts.init :+
-      (parts.last + "$changes")).map(p => s"`$p`").mkString(".")
-    spark.sql(
-      s"""SELECT CAST(version AS BIGINT) AS version,
-         |  op, CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |  MIN(key) AS kmin, MAX(key) AS kmax
-         |FROM $ident
-         |GROUP BY 1, 2 ORDER BY version, op""".stripMargin)
-  }
+  def txnSqlChanges(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      val root = ttTable(spark, sfDir)
+      val ident = GraftCatalog.ident(root + "$changes")
+      spark.sql(
+        s"""SELECT CAST(version AS BIGINT) AS version,
+           |  op, CAST(COUNT(*) AS BIGINT) AS n_rows,
+           |  MIN(key) AS kmin, MAX(key) AS kmax
+           |FROM $ident
+           |GROUP BY 1, 2 ORDER BY version, op""".stripMargin)
+    }
 
   val txnSqlChangesSql: String =
     """WITH w AS (
@@ -1973,38 +1943,36 @@ object TxnOps {
     * before attempting partition-wise pruning. The query aggregates
     * per stage so the oracle is boundary-independent (Spark's range
     * sampler places cut points nondeterministically). */
-  def txnPartitions(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = DfCache.scratch(spark, sfDir, "partitions")
-    TxnLog.destroy(root)
-    TxnLog.init(root)
-    Seq("click", "view", "purchase").foreach { et =>
-      TxnLog.commit(spark, root, addCounts(spark, sfDir, et))
+  def txnPartitions(spark: SparkSession, sfDir: String): DataFrame =
+    QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+      import spark.implicits._
+      val root = DfCache.scratch(spark, sfDir, "partitions")
+      TxnLog.destroy(root)
+      TxnLog.init(root)
+      Seq("click", "view", "purchase").foreach { et =>
+        TxnLog.commit(spark, root, addCounts(spark, sfDir, et))
+      }
+      val ident = GraftCatalog.ident(root + "$partitions")
+      def stage(tag: String): DataFrame =
+        spark.sql(
+          s"""SELECT '$tag' AS stage,
+             |  CAST(COUNT(*) AS BIGINT) AS n_partitions,
+             |  SUM(n_files) AS n_files, SUM(n_rows) AS total_rows,
+             |  MIN(kmin) AS lo, MAX(kmax) AS hi
+             |FROM $ident""".stripMargin)
+      // the metadata table always reads the LATEST snapshot, so each
+      // stage's (metadata-scale) summary row is collected before the
+      // next re-layout commits
+      TxnLog.optimizeClustered(spark, root, targetFiles = 4)
+      val clustered = stage("clustered").collect().toSeq
+      TxnLog.optimize(spark, root, targetFiles = 2)
+      val hashed = stage("hashed").collect().toSeq
+      (clustered ++ hashed)
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), r.getLong(5)))
+        .toDF("stage", "n_partitions", "n_files", "total_rows", "lo", "hi")
+        .orderBy($"stage")
     }
-    graft.sources.GraftCatalog.register(spark)
-    val parts = root.split("/").filter(_.nonEmpty).toSeq
-    val ident = (graft.sources.GraftCatalog.NAME +: parts.init :+
-      (parts.last + "$partitions")).map(p => s"`$p`").mkString(".")
-    def stage(tag: String): DataFrame =
-      spark.sql(
-        s"""SELECT '$tag' AS stage,
-           |  CAST(COUNT(*) AS BIGINT) AS n_partitions,
-           |  SUM(n_files) AS n_files, SUM(n_rows) AS total_rows,
-           |  MIN(kmin) AS lo, MAX(kmax) AS hi
-           |FROM $ident""".stripMargin)
-    // the metadata table always reads the LATEST snapshot, so each
-    // stage's (metadata-scale) summary row is collected before the
-    // next re-layout commits
-    TxnLog.optimizeClustered(spark, root, targetFiles = 4)
-    val clustered = stage("clustered").collect().toSeq
-    TxnLog.optimize(spark, root, targetFiles = 2)
-    val hashed = stage("hashed").collect().toSeq
-    (clustered ++ hashed)
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5)))
-      .toDF("stage", "n_partitions", "n_files", "total_rows", "lo", "hi")
-      .orderBy($"stage")
-  }
 
   val txnPartitionsSql: String =
     """WITH t AS (

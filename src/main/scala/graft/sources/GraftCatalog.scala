@@ -24,15 +24,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * table name is the `<name>.parquet` entry in that directory, so
   *
   * {{{
-  *   spark.conf.set("spark.sql.catalog.graft",
-  *     classOf[GraftCatalog].getName)
-  *   spark.sql("""SELECT * FROM graft.root.testdata.`sf0.01`.lineitem""")
+  *   QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
+  *     spark.sql("""SELECT * FROM graft.root.testdata.`sf0.01`.lineitem""")
+  *   }
   * }}}
   *
   * resolves `/root/testdata/sf0.01/lineitem.parquet`. One catalog
-  * instance therefore serves every scale factor — no per-sfDir conf
-  * rewiring, which matters because Spark instantiates a catalog once
-  * per session and never re-reads its options.
+  * instance therefore serves every scale factor of a query — no
+  * per-sfDir conf rewiring, which matters because Spark instantiates
+  * a catalog once per session and never re-reads its options.
   *
   * Resolution is cached per (path, layout fingerprint): the
   * fingerprint is the directory's `_GRAFT_SPEC` content when present
@@ -1210,54 +1210,17 @@ private[graft] class TxnFilesTable(tableName: String, root: String)
     new ScanBuilder {
       override def build(): Scan = new LocalScan {
         override def readSchema(): StructType = filesSchema
-        override def rows(): Array[InternalRow] = {
-          val v = graft.engine.TxnLog.latestCommitted(root)
-          require(v >= 0, s"$tableName: no committed version")
-          val snapDir = new File(root, s"snapshot_v$v").getCanonicalFile
-          val conf = new org.apache.hadoop.conf.Configuration()
-          val stats = Option(snapDir.listFiles()).getOrElse(Array.empty)
-            .filter(f => f.getName.endsWith(".parquet") && f.length > 0)
-            .flatMap { f =>
-              val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromPath(new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-                  conf)
-              val reader =
-                org.apache.parquet.hadoop.ParquetFileReader.open(in)
-              try {
-                val blocks = reader.getFooter.getBlocks
-                import scala.jdk.CollectionConverters._
-                val nRows = blocks.asScala.map(_.getRowCount).sum
-                if (nRows == 0L) None
-                else {
-                  val keyStats = blocks.asScala.flatMap { b =>
-                    b.getColumns.asScala.find(
-                      _.getPath.toDotString == "key")
-                      .map(_.getStatistics)
-                  }
-                  val mins = keyStats.collect {
-                    case s: org.apache.parquet.column.statistics
-                        .LongStatistics if !s.isEmpty => s.getMin
-                  }
-                  val maxs = keyStats.collect {
-                    case s: org.apache.parquet.column.statistics
-                        .LongStatistics if !s.isEmpty => s.getMax
-                  }
-                  Some((nRows,
-                    if (mins.nonEmpty) Some(mins.min) else None,
-                    if (maxs.nonEmpty) Some(maxs.max) else None))
-                }
-              } finally reader.close()
-            }
-            .sortBy(_._2.getOrElse(Long.MaxValue))
-          stats.zipWithIndex.map { case ((n, mn, mx), i) =>
-            val r = new GenericInternalRow(4)
-            r.setInt(0, i)
-            r.setLong(1, n)
-            mn.fold(r.setNullAt(2))(r.setLong(2, _))
-            mx.fold(r.setNullAt(3))(r.setLong(3, _))
-            r: InternalRow
-          }
-        }
+        override def rows(): Array[InternalRow] =
+          graft.engine.FooterStats.latestSnapshot(root).zipWithIndex
+            .map { case (f, i) =>
+              val key = f.cols.get("key")
+              val r = new GenericInternalRow(4)
+              r.setInt(0, i)
+              r.setLong(1, f.nRows)
+              key.flatMap(_.min).fold(r.setNullAt(2))(r.setLong(2, _))
+              key.flatMap(_.max).fold(r.setNullAt(3))(r.setLong(3, _))
+              r: InternalRow
+            }.toArray
       }
     }
 }
@@ -1318,18 +1281,17 @@ private[graft] class TxnPartitionsTable(tableName: String, root: String)
 object GraftCatalog {
   val NAME = "graft"
 
-  /** Idempotent per-session registration + the catalog-qualified SQL
-    * identifier for `<sfDir>/<table>.parquet`. Registration is
-    * session-wide, never restored: every later query that names the
-    * catalog resolves through it. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.conf.getOption(s"spark.sql.catalog.$NAME").isDefined)
-      spark.conf.set(s"spark.sql.catalog.$NAME",
-        classOf[GraftCatalog].getName)
+  /** The session conf that names this catalog `graft`. A key sets it
+    * on its own [[graft.engine.QuerySession]], so the caller's session
+    * never gains the catalog while the returned frame keeps resolving
+    * through it. */
+  val Conf: (String, String) =
+    s"spark.sql.catalog.$NAME" -> classOf[GraftCatalog].getName
 
-  def ident(sfDir: String, table: String): String = {
-    val parts = new File(sfDir).getAbsolutePath
-      .split("/").filter(_.nonEmpty).toSeq :+ table
-    (NAME +: parts).map(p => s"`$p`").mkString(".")
-  }
+  /** The catalog-qualified SQL identifier of the table at `path`
+    * (`<dir>/<table>` for `<dir>/<table>.parquet`); a metadata-table
+    * suffix (`$files`, `$history`, …) rides on the last segment. */
+  def ident(path: String): String =
+    (NAME +: new File(path).getAbsolutePath.split("/").filter(_.nonEmpty))
+      .map(p => s"`$p`").mkString(".")
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues,
   TTLConfig, ValueState}
-import graft.engine.{DfCache, Exact, IterativeTuning, Tables, TxnLog}
+import graft.engine.{DfCache, Exact, QuerySession, Tables, TxnLog}
 
 /** Structured Streaming surface (SURVEY.md §2.9) over the `events`
   * stream surrogate. Each query REALLY runs the incremental engine —
@@ -37,30 +37,9 @@ object StreamOps {
   case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
       event_type: String, value: Double)
 
+  /** Memory-sink names. A sink's view lives in the catalog of its
+    * query's own session and dies with it. */
   private val nameCounter = new AtomicInteger(0)
-
-  /** Live memory-sink names awaiting release. A memory sink holds its
-    * rows for as long as the catalog references the temp view, so a
-    * long session running many streaming keys (the fleet soak, a
-    * notebook) accumulates every drained result — measured on the
-    * round-11 two-pass soak as monotone heap growth whose storage
-    * pressure evicted persisted operator caches and DOUBLED six keys'
-    * pass-2 times. Each new sink drops all predecessors: the harness
-    * contract consumes a key's result before the next key runs. */
-  private val liveSinks =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]
-
-  /** Fresh memory-sink name, releasing every predecessor first. */
-  private def freshSink(spark: SparkSession): String = {
-    var prev = liveSinks.poll()
-    while (prev != null) {
-      spark.catalog.dropTempView(prev)
-      prev = liveSinks.poll()
-    }
-    val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    liveSinks.add(name)
-    name
-  }
 
   /** Fleet-guard plan capture: while [[planCaptureMode]] is set,
     * [[sinkPoint]] aborts the op by throwing [[PlanCapture]] with the
@@ -205,7 +184,7 @@ object StreamOps {
     * process spawning: Hadoop's local FileContext forks `readlink` on
     * every checkpoint rename and `chmod` on every create. Every query
     * here therefore runs under [[LocalCheckpointFileManager]] (see
-    * [[withStreamConf]]), which does neither. Measured on perfbench
+    * [[streamQuerySession]]), which does neither. Measured on perfbench
     * `ingest`, 12 alternating pairs on a 4-vCPU VM: query p50 2.35 →
     * 1.41 s, warm pass 5.81 → 4.33 s; same triggers and jobs. */
   private def ephemeralCkpt(): java.io.File = {
@@ -220,36 +199,38 @@ object StreamOps {
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
-  /** Run `body` with the session confs every streaming query here
-    * starts under, plus `extra`, restoring each key's prior value (or
-    * unsetting it) afterwards — the one place this file touches
-    * session conf:
+  /** Build `body` on a [[QuerySession]] carrying the confs every
+    * streaming query here starts under, plus `extra`:
     *  - 8 shuffle partitions, which a stateful query also fixes as
     *    its state-partition count in the checkpoint;
     *  - [[LocalCheckpointFileManager]] for offset, commit and state
     *    files: Spark's default local manager forks `readlink`/`chmod`
     *    processes on every rename and create, which was most of a
     *    small trigger's wall time. */
-  private def withStreamConf[T](spark: SparkSession,
-      extra: Seq[(String, String)] = Nil)(body: => T): T =
-    IterativeTuning.withConf(spark, Seq(
+  private def streamQuerySession(spark: SparkSession,
+      extra: Seq[(String, String)] = Nil)(
+      body: SparkSession => DataFrame): DataFrame =
+    QuerySession(spark, Seq(
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.streaming.checkpointFileManagerClass" ->
         classOf[LocalCheckpointFileManager].getName) ++ extra)(body)
 
+  /** Run `out` into a memory sink on its own [[streamQuerySession]] and
+    * return the sink's rows, read through that session. */
   private def drainToTable(spark: SparkSession, out: DataFrame,
-      mode: OutputMode, extraConf: Seq[(String, String)] = Nil): DataFrame = {
-    val sinkName = freshSink(spark)
-    val ckpt = ephemeralCkpt()
-    try withStreamConf(spark, extraConf) {
-      val q = sinkPoint(out)
-        .writeStream.format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .outputMode(mode).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally TxnLog.destroy(ckpt.getPath)
-    spark.table(sinkName)
-  }
+      mode: OutputMode, extraConf: Seq[(String, String)] = Nil): DataFrame =
+    streamQuerySession(spark, extraConf) { spark =>
+      val sinkName = s"graft_stream_${nameCounter.incrementAndGet()}"
+      val ckpt = ephemeralCkpt()
+      try {
+        val q = QuerySession.bind(sinkPoint(out), spark)
+          .writeStream.format("memory").queryName(sinkName)
+          .option("checkpointLocation", ckpt.getAbsolutePath)
+          .outputMode(mode).start()
+        try q.processAllAvailable() finally q.stop()
+      } finally TxnLog.destroy(ckpt.getPath)
+      spark.table(sinkName)
+    }
 
   /** [[runStream]] through the OFFSET-BASED file-backed V2 source
     * instead of a MemoryStream replay: the driver-memory-bounded
@@ -316,42 +297,41 @@ object StreamOps {
     * This is the recovery contract a 100 TB streaming job relies on,
     * exercised against OUR source's offset arithmetic rather than
     * MemoryStream's. */
-  def streamOffsetRestart(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val staged = stageBatched(spark, sfDir, "t4",
-      timeBatched(eventsShaped(spark, sfDir), 4))
-    val root = scratchDir(spark, sfDir, "osr")
-    val sink = new java.io.File(root, "sink").getAbsolutePath
-    val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
-    def start(cap: Option[Long]) = {
-      val reader = spark.readStream
-        .format(classOf[EventsFileStreamProvider].getName)
-        .option("path", staged)
-        .option("maxBatchesPerTrigger", "1")
-      cap.fold(reader)(c => reader.option("maxTotalBatches", c.toString))
-        .load()
-        .filter($"event_type" === "purchase")
-        .select($"event_id", $"user_id", $"ts", $"value")
-        .sinkGuard
-        .writeStream.format("parquet")
-        .option("checkpointLocation", ckpt)
-        .option("path", sink)
-        .outputMode(OutputMode.Append()).start()
-    }
-    withStreamConf(spark) {
+  def streamOffsetRestart(spark: SparkSession, sfDir: String): DataFrame =
+    streamQuerySession(spark) { spark =>
+      import spark.implicits._
+      val staged = stageBatched(spark, sfDir, "t4",
+        timeBatched(eventsShaped(spark, sfDir), 4))
+      val root = scratchDir(spark, sfDir, "osr")
+      val sink = new java.io.File(root, "sink").getAbsolutePath
+      val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
+      def start(cap: Option[Long]) = {
+        val reader = spark.readStream
+          .format(classOf[EventsFileStreamProvider].getName)
+          .option("path", staged)
+          .option("maxBatchesPerTrigger", "1")
+        cap.fold(reader)(c => reader.option("maxTotalBatches", c.toString))
+          .load()
+          .filter($"event_type" === "purchase")
+          .select($"event_id", $"user_id", $"ts", $"value")
+          .sinkGuard
+          .writeStream.format("parquet")
+          .option("checkpointLocation", ckpt)
+          .option("path", sink)
+          .outputMode(OutputMode.Append()).start()
+      }
       val q1 = start(Some(2L))
       try q1.processAllAvailable() finally q1.stop()
       val q2 = start(None)
       try q2.processAllAvailable() finally q2.stop()
+      val nBatches = Option(new java.io.File(ckpt, "offsets").listFiles())
+        .getOrElse(Array.empty)
+        .count(f => f.getName.forall(_.isDigit)).toLong
+      spark.read.parquet(sink)
+        .select($"event_id", $"user_id", $"ts", $"value")
+        .withColumn("n_batches", lit(nBatches))
+        .orderBy($"event_id")
     }
-    val nBatches = Option(new java.io.File(ckpt, "offsets").listFiles())
-      .getOrElse(Array.empty)
-      .count(f => f.getName.forall(_.isDigit)).toLong
-    spark.read.parquet(sink)
-      .select($"event_id", $"user_id", $"ts", $"value")
-      .withColumn("n_batches", lit(nBatches))
-      .orderBy($"event_id")
-  }
 
   val streamOffsetRestartSql: String =
     """SELECT event_id, user_id, ts, value,
@@ -925,48 +905,47 @@ object StreamOps {
     * "failure" is a clean stop(), which exercises the same recovery
     * path as a crash: an uncommitted batch is simply re-run).
     * Oracle = the batch purchase selection. */
-  def streamRestart(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    // the two "halves" are two STAGED time-range batches; run 1 caps
-    // availability at the first batch (maxTotalBatches=1) and stops
-    // cold, run 2 is a brand-new query object on the same
-    // checkpointLocation with the cap lifted — the engine restores
-    // the committed batch-ordinal offset and the source resumes at
-    // batch 1, never re-admitting batch 0 (a replay would double
-    // every purchase in the exactly-once parquet sink). No row ever
-    // transits the driver.
-    val staged = stageBatched(spark, sfDir, "t2",
-      timeBatched(eventsShaped(spark, sfDir), 2))
-    val root = scratchDir(spark, sfDir, "rs")
-    val sink = new java.io.File(root, "sink").getAbsolutePath
-    val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
-    def start(cap: Option[Long]) = {
-      val reader = spark.readStream
-        .format(classOf[EventsFileStreamProvider].getName)
-        .option("path", staged)
-        .option("maxBatchesPerTrigger", "1")
-      cap.fold(reader)(c => reader.option("maxTotalBatches", c.toString))
-        .load()
-        .filter($"event_type" === "purchase")
-        .select($"event_id", $"user_id", $"ts", $"value")
-        .sinkGuard
-        .writeStream.format("parquet")
-        .option("checkpointLocation", ckpt)
-        .option("path", sink)
-        .outputMode(OutputMode.Append()).start()
-    }
-    withStreamConf(spark) {
+  def streamRestart(spark: SparkSession, sfDir: String): DataFrame =
+    streamQuerySession(spark) { spark =>
+      import spark.implicits._
+      // the two "halves" are two STAGED time-range batches; run 1 caps
+      // availability at the first batch (maxTotalBatches=1) and stops
+      // cold, run 2 is a brand-new query object on the same
+      // checkpointLocation with the cap lifted — the engine restores
+      // the committed batch-ordinal offset and the source resumes at
+      // batch 1, never re-admitting batch 0 (a replay would double
+      // every purchase in the exactly-once parquet sink). No row ever
+      // transits the driver.
+      val staged = stageBatched(spark, sfDir, "t2",
+        timeBatched(eventsShaped(spark, sfDir), 2))
+      val root = scratchDir(spark, sfDir, "rs")
+      val sink = new java.io.File(root, "sink").getAbsolutePath
+      val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
+      def start(cap: Option[Long]) = {
+        val reader = spark.readStream
+          .format(classOf[EventsFileStreamProvider].getName)
+          .option("path", staged)
+          .option("maxBatchesPerTrigger", "1")
+        cap.fold(reader)(c => reader.option("maxTotalBatches", c.toString))
+          .load()
+          .filter($"event_type" === "purchase")
+          .select($"event_id", $"user_id", $"ts", $"value")
+          .sinkGuard
+          .writeStream.format("parquet")
+          .option("checkpointLocation", ckpt)
+          .option("path", sink)
+          .outputMode(OutputMode.Append()).start()
+      }
       val q1 = start(Some(1L))
       try q1.processAllAvailable() finally q1.stop()
       // restart: NEW query object, SAME checkpoint + same staged dir
       val q2 = start(None)
       try q2.processAllAvailable() finally q2.stop()
+      // read THROUGH the sink's commit log (metadata-aware path)
+      spark.read.parquet(sink)
+        .select($"event_id", $"user_id", $"ts", $"value")
+        .orderBy($"event_id")
     }
-    // read THROUGH the sink's commit log (metadata-aware path)
-    spark.read.parquet(sink)
-      .select($"event_id", $"user_id", $"ts", $"value")
-      .orderBy($"event_id")
-  }
 
   val streamRestartSql: String =
     """SELECT event_id, user_id, ts, value
@@ -1273,16 +1252,16 @@ object StreamOps {
     * of appending duplicates (plain append would be at-least-once).
     * StreamSpec proves idempotence by re-driving one batch. The union
     * of batches must equal the batch query — the oracle. */
-  def streamForeachBatch(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    // Fixed per-(app, sf) scratch dir, wiped before reuse and on JVM
-    // exit — the result DataFrame reads it lazily, so it cannot be
-    // deleted inside this call, but scratch no longer accumulates
-    // across invocations/runs (one live dir per app at most).
-    val out = scratchDir(spark, sfDir, "feb")
-    val staged = stageBatched(spark, sfDir, "t3",
-      timeBatched(eventsShaped(spark, sfDir), 3))
-    withStreamConf(spark) {
+  def streamForeachBatch(spark: SparkSession, sfDir: String): DataFrame =
+    streamQuerySession(spark) { spark =>
+      import spark.implicits._
+      // Fixed per-(app, sf) scratch dir, wiped before reuse and on JVM
+      // exit — the result DataFrame reads it lazily, so it cannot be
+      // deleted inside this call, but scratch no longer accumulates
+      // across invocations/runs (one live dir per app at most).
+      val out = scratchDir(spark, sfDir, "feb")
+      val staged = stageBatched(spark, sfDir, "t3",
+        timeBatched(eventsShaped(spark, sfDir), 3))
       val q = offsetSource(spark, staged)
         .filter($"event_type" === "purchase")
         .select($"event_id", $"user_id", $"ts", $"value")
@@ -1291,11 +1270,10 @@ object StreamOps {
         .foreachBatch(febWrite(out) _)
         .outputMode(OutputMode.Append()).start()
       try q.processAllAvailable() finally q.stop()
+      spark.read.parquet(out)
+        .select($"event_id", $"user_id", $"ts", $"value")
+        .orderBy($"event_id")
     }
-    spark.read.parquet(out)
-      .select($"event_id", $"user_id", $"ts", $"value")
-      .orderBy($"event_id")
-  }
 
   /** The per-micro-batch write used by [[streamForeachBatch]]:
     * overwrite THIS batch's partition only (dynamic partition
@@ -1361,16 +1339,16 @@ object StreamOps {
     * table. Final snapshot ≡ the batch per-user counts and the
     * version count ≡ the number of DISTINCT batches: both would
     * break if any retry re-applied. */
-  def streamTxnSink(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = scratchDir(spark, sfDir, "txnsink")
-    TxnLog.init(root)
-    // three time-ordered offset-source batches = three sink commits;
-    // a time slice that happens to be empty still commits (idempotent
-    // empty delta), so n_versions stays the batch count either way
-    val staged = stageBatched(spark, sfDir, "t3",
-      timeBatched(eventsShaped(spark, sfDir), 3))
-    withStreamConf(spark) {
+  def streamTxnSink(spark: SparkSession, sfDir: String): DataFrame =
+    streamQuerySession(spark) { spark =>
+      import spark.implicits._
+      val root = scratchDir(spark, sfDir, "txnsink")
+      TxnLog.init(root)
+      // three time-ordered offset-source batches = three sink commits;
+      // a time slice that happens to be empty still commits (idempotent
+      // empty delta), so n_versions stays the batch count either way
+      val staged = stageBatched(spark, sfDir, "t3",
+        timeBatched(eventsShaped(spark, sfDir), 3))
       val q = offsetSource(spark, staged)
         .select($"user_id", $"event_id")
         .sinkGuard
@@ -1398,13 +1376,12 @@ object StreamOps {
         }
         .outputMode(OutputMode.Append()).start()
       try q.processAllAvailable() finally q.stop()
+      val latest = TxnLog.latestCommitted(root)
+      TxnLog.read(spark, root, latest)
+        .select($"key".as("user_id"), $"value".as("n_events"),
+          lit(latest + 1).cast("long").as("n_versions"))
+        .orderBy($"user_id")
     }
-    val latest = TxnLog.latestCommitted(root)
-    TxnLog.read(spark, root, latest)
-      .select($"key".as("user_id"), $"value".as("n_events"),
-        lit(latest + 1).cast("long").as("n_versions"))
-      .orderBy($"user_id")
-  }
 
   val streamTxnSinkSql: String =
     """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -1497,17 +1474,17 @@ object StreamOps {
     * what table formats' MERGE + file-level pruning replace; the
     * changelog side (per-batch compaction, keyed merge) is already
     * the bounded-shuffle shape they need. */
-  def streamCdcApply(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val root = scratchDir(spark, sfDir, "cdc")
-    // time-ordered offset-source batches are exactly the changelog
-    // contract the merge relies on (per-key last-in-batch composed
-    // across batches ≡ global last) — the replay collect is retired
-    val staged = stageBatched(spark, sfDir, "t3",
-      timeBatched(eventsShaped(spark, sfDir), 3))
-    // newest snapshot path, written on the stream-execution thread
-    val lastState = new java.util.concurrent.atomic.AtomicReference[String]("")
-    withStreamConf(spark) {
+  def streamCdcApply(spark: SparkSession, sfDir: String): DataFrame =
+    streamQuerySession(spark) { spark =>
+      import spark.implicits._
+      val root = scratchDir(spark, sfDir, "cdc")
+      // time-ordered offset-source batches are exactly the changelog
+      // contract the merge relies on (per-key last-in-batch composed
+      // across batches ≡ global last) — the replay collect is retired
+      val staged = stageBatched(spark, sfDir, "t3",
+        timeBatched(eventsShaped(spark, sfDir), 3))
+      // newest snapshot path, written on the stream-execution thread
+      val lastState = new java.util.concurrent.atomic.AtomicReference[String]("")
       val q = offsetSource(spark, staged)
         .select($"user_id", $"ts", $"event_id",
           when($"event_type" === "error", lit("delete"))
@@ -1540,12 +1517,11 @@ object StreamOps {
         }
         .outputMode(OutputMode.Append()).start()
       try q.processAllAvailable() finally q.stop()
+      spark.read.parquet(lastState.get())
+        .select($"user_id", $"event_id".as("last_event_id"),
+          $"value".as("last_value"))
+        .orderBy($"user_id")
     }
-    spark.read.parquet(lastState.get())
-      .select($"user_id", $"event_id".as("last_event_id"),
-        $"value".as("last_value"))
-      .orderBy($"user_id")
-  }
 
   val streamCdcApplySql: String =
     """WITH ranked AS (
@@ -1745,10 +1721,11 @@ object StreamOps {
     * path and this query IS the production job. Complete-mode hourly
     * rollup, so the sink equals the batch aggregation exactly. */
   def streamFileSource(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val sinkName = freshSink(spark)
     val tsIsNanos = Tables.eventsTsIsNanos(spark, sfDir)
-    withStreamConf(spark) {
+    streamQuerySession(spark,
+        if (tsIsNanos) Seq(Tables.NanosAsLong) else Nil) { spark =>
+      import spark.implicits._
+      val sinkName = s"graft_stream_${nameCounter.incrementAndGet()}"
       // file-stream paths must be directories: list the sfDir and
       // glob-filter to the events table's file(s). The ts unit follows
       // the file's parquet footer — same read discipline as
@@ -1772,8 +1749,8 @@ object StreamOps {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       try q.awaitTermination() finally q.stop()
+      spark.table(sinkName).orderBy($"ws", $"event_type")
     }
-    spark.table(sinkName).orderBy($"ws", $"event_type")
   }
 
   /** Batch twin — AvailableNow + complete mode must equal the batch

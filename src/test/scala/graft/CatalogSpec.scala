@@ -33,21 +33,21 @@ class CatalogSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("identifiers resolve per-directory; missing tables fail cleanly") {
-    GraftCatalog.register(spark)
-    val n = spark.table(GraftCatalog.ident(sf, "region")).count()
+    registerGraftCatalog()
+    val n = spark.table(GraftCatalog.ident(s"$sf/region")).count()
     assert(n > 0)
     intercept[org.apache.spark.sql.AnalysisException] {
-      spark.table(GraftCatalog.ident(sf, "nonexistent_table")).count()
+      spark.table(GraftCatalog.ident(s"$sf/nonexistent_table")).count()
     }
     val tables = spark.sql(
-      s"SHOW TABLES IN ${GraftCatalog.ident(sf, "x").stripSuffix(".`x`")}")
+      s"SHOW TABLES IN ${GraftCatalog.ident(s"$sf/x").stripSuffix(".`x`")}")
       .select("tableName").collect().map(_.getString(0)).toSet
     assert(graft.engine.Tables.names.toSet.subsetOf(tables),
       s"SHOW TABLES must list every fixture table, got $tables")
   }
 
   test("resolution cache is keyed by layout fingerprint") {
-    GraftCatalog.register(spark)
+    registerGraftCatalog()
     // build a throwaway table dir with a _GRAFT_SPEC fingerprint
     val dir = java.nio.file.Files.createTempDirectory("graft_cat").toFile
     import spark.implicits._
@@ -55,7 +55,7 @@ class CatalogSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .write.mode("overwrite").parquet(s"$dir/t.parquet")
     java.nio.file.Files.writeString(
       new java.io.File(dir, "_GRAFT_SPEC").toPath, "spec-v1")
-    val ident = GraftCatalog.ident(dir.getAbsolutePath, "t")
+    val ident = GraftCatalog.ident(s"${dir.getAbsolutePath}/t")
     assert(spark.table(ident).count() == 2)
     // rewrite the table under a NEW fingerprint: the stale resolution
     // must be dropped and the fresh data visible
@@ -69,15 +69,15 @@ class CatalogSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("the catalog is read-only: writes are rejected") {
-    GraftCatalog.register(spark)
+    registerGraftCatalog()
     intercept[Exception] {
-      spark.sql(s"DROP TABLE ${GraftCatalog.ident(sf, "region")}")
+      spark.sql(s"DROP TABLE ${GraftCatalog.ident(s"$sf/region")}")
     }
   }
 
   test("txn-log tables are visible to tableExists and listTables") {
     import graft.engine.TxnLog
-    GraftCatalog.register(spark)
+    registerGraftCatalog()
     val dir = java.nio.file.Files.createTempDirectory("graft_cat_txn").toFile
     val root = new java.io.File(dir, "acct").getAbsolutePath
     TxnLog.init(root)
@@ -103,7 +103,7 @@ class CatalogSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val listed = spark.sql(s"SHOW TABLES IN $nsIdent")
       .select("tableName").collect().map(_.getString(0)).toSet
     assert(listed.contains("acct"))
-    assert(spark.table(GraftCatalog.ident(dir.getAbsolutePath, "acct"))
+    assert(spark.table(GraftCatalog.ident(s"${dir.getAbsolutePath}/acct"))
       .count() == 1)
   }
 }

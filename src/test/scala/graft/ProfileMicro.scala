@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Pinned micro-benchmark of ONE registered key (test scope, not
-  * shipped): warm-up + N timed reps on a fresh session, for verdicts
-  * about single-query regressions that the full-fleet bench cannot
-  * separate from co-tenancy noise.
+/** Pinned micro-benchmark of registered keys (test scope, not
+  * shipped): per key, warm-up + N timed reps on one fresh session, for
+  * verdicts about single-query regressions that the full-fleet bench
+  * cannot separate from co-tenancy noise. Several keys may be given
+  * comma-separated; they run one after another in the same session.
   *
-  * Run: sbt "Test/runMain graft.ProfileMicro <key> [sfDir] [reps]"
+  * Run: sbt "Test/runMain graft.ProfileMicro <key[,key…]> [sfDir] [reps]"
   */
 object ProfileMicro {
   def main(args: Array[String]): Unit = {
@@ -31,17 +32,19 @@ object ProfileMicro {
       })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val fn = SparkEntry.queries(key)
-    fn(spark, sfDir).count() // warm-up: JVM + codegen + IO cache
-    val times = (1 to reps).map { i =>
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"micro $key rep$i%d  $s%8.3f s")
-      s
+    key.split(",").foreach { key =>
+      val fn = SparkEntry.queries(key)
+      fn(spark, sfDir).count() // warm-up: JVM + codegen + IO cache
+      val times = (1 to reps).map { i =>
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        val s = (System.nanoTime() - t0) / 1e9
+        println(f"micro $key rep$i%d  $s%8.3f s")
+        s
+      }
+      println(f"micro $key min=${times.min}%.3f s  " +
+        f"median=${times.sorted.apply(reps / 2)}%.3f s")
     }
-    println(f"micro $key min=${times.min}%.3f s  " +
-      f"median=${times.sorted.apply(reps / 2)}%.3f s")
     spark.stop()
   }
 }

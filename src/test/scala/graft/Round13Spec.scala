@@ -133,7 +133,7 @@ class Round13Spec extends SparkSpec {
     val root = freshRoot("history")
     put(root, 0, 9)
     TxnLog.renameColumn(spark, root, "value", "amount")
-    graft.sources.GraftCatalog.register(spark)
+    registerGraftCatalog()
     val parts = root.split("/").filter(_.nonEmpty).toSeq
     val ident = ("graft" +: parts.init :+ (parts.last + "$history"))
       .map(p => s"`$p`").mkString(".")
@@ -148,7 +148,7 @@ class Round13Spec extends SparkSpec {
   test("SQL INSERT INTO a txn table is one OCC commit via staged files") {
     val root = freshRoot("sqlins")
     put(root, 0, 9)
-    graft.sources.GraftCatalog.register(spark)
+    registerGraftCatalog()
     val parts = root.split("/").filter(_.nonEmpty).toSeq
     val ident = ("graft" +: parts).map(p => s"`$p`").mkString(".")
     spark.range(5, 15)
@@ -175,7 +175,7 @@ class Round13Spec extends SparkSpec {
   test("SQL DELETE commits one version; untranslatable predicates fail loudly") {
     val root = freshRoot("sqldel")
     put(root, 0, 9)
-    graft.sources.GraftCatalog.register(spark)
+    registerGraftCatalog()
     val parts = root.split("/").filter(_.nonEmpty).toSeq
     val ident = ("graft" +: parts).map(p => s"`$p`").mkString(".")
     spark.sql(s"DELETE FROM $ident WHERE key >= 5 AND key <= 7")
@@ -199,7 +199,7 @@ class Round13Spec extends SparkSpec {
     new java.io.File(root, "_txn_log/v0.commit").setLastModified(base)
     new java.io.File(root, "_txn_log/v1.commit")
       .setLastModified(base + 60000L)
-    graft.sources.GraftCatalog.register(spark)
+    registerGraftCatalog()
     val parts = root.split("/").filter(_.nonEmpty).toSeq
     val ident = ("graft" +: parts).map(p => s"`$p`").mkString(".")
     def countAt(ms: Long): Long = spark.sql(
@@ -215,7 +215,7 @@ class Round13Spec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_r13_ctas").toString
     TxnLog.destroy(dir) // CREATE must see a free slot
-    graft.sources.GraftCatalog.register(spark)
+    registerGraftCatalog()
     val parts = dir.split("/").filter(_.nonEmpty).toSeq
     val ident = ("graft" +: parts).map(p => s"`$p`").mkString(".")
     spark.range(0, 10)
@@ -239,7 +239,7 @@ class Round13Spec extends SparkSpec {
   test("ALTER TABLE RENAME/DROP COLUMN drive the mapping; reads translate") {
     val root = freshRoot("sqlalter")
     put(root, 0, 9)
-    graft.sources.GraftCatalog.register(spark)
+    registerGraftCatalog()
     val parts = root.split("/").filter(_.nonEmpty).toSeq
     val ident = ("graft" +: parts).map(p => s"`$p`").mkString(".")
     spark.sql(s"ALTER TABLE $ident RENAME COLUMN value TO amount")
@@ -262,7 +262,7 @@ class Round13Spec extends SparkSpec {
     val root = freshRoot("mapprune")
     put(root, 0, 9)
     TxnLog.renameColumn(spark, root, "value", "amount")
-    graft.sources.GraftCatalog.register(spark)
+    registerGraftCatalog()
     val parts = root.split("/").filter(_.nonEmpty).toSeq
     val ident = ("graft" +: parts).map(p => s"`$p`").mkString(".")
     val df = spark.sql(s"SELECT amount FROM $ident")
@@ -278,7 +278,7 @@ class Round13Spec extends SparkSpec {
   test("SQL UPDATE and MERGE INTO run as delta-sized single commits") {
     val root = freshRoot("rlo")
     put(root, 0, 9)
-    graft.sources.GraftCatalog.register(spark)
+    registerGraftCatalog()
     val parts = root.split("/").filter(_.nonEmpty).toSeq
     val ident = ("graft" +: parts).map(p => s"`$p`").mkString(".")
     spark.sql(s"UPDATE $ident SET value = value + 100 WHERE key < 3")
@@ -312,7 +312,7 @@ class Round13Spec extends SparkSpec {
   test("INSERT OVERWRITE replaces atomically; empty overwrite truncates") {
     val root = freshRoot("sqlow")
     put(root, 0, 9)
-    graft.sources.GraftCatalog.register(spark)
+    registerGraftCatalog()
     val parts = root.split("/").filter(_.nonEmpty).toSeq
     val ident = ("graft" +: parts).map(p => s"`$p`").mkString(".")
     spark.range(5, 8)
@@ -338,7 +338,7 @@ class Round13Spec extends SparkSpec {
     val root = freshRoot("files")
     put(root, 0, 499)
     TxnLog.optimizeClustered(spark, root, targetFiles = 4)
-    graft.sources.GraftCatalog.register(spark)
+    registerGraftCatalog()
     val parts = root.split("/").filter(_.nonEmpty).toSeq
     val ident = ("graft" +: parts.init :+ (parts.last + "$files"))
       .map(p => s"`$p`").mkString(".")

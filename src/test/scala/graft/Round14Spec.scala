@@ -126,7 +126,7 @@ class Round14Spec extends SparkSpec {
 
   test("SQL INSERT carrying NULLs: null values round-trip as NULL, " +
       "null keys are rejected loudly") {
-    graft.sources.GraftCatalog.register(spark)
+    registerGraftCatalog()
     val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_r14_nulls")
     TxnLog.destroy(dir.getAbsolutePath)
@@ -194,7 +194,7 @@ class Round14Spec extends SparkSpec {
   test("$changes feed: version is a partition column — 'changes " +
       "since N' prunes old versions at the file level") {
     val root = graft.operators.TxnOps.ttTable(spark, sf)
-    graft.sources.GraftCatalog.register(spark)
+    registerGraftCatalog()
     val parts = root.split("/").filter(_.nonEmpty).toSeq
     val ident = ("graft" +: parts.init :+ (parts.last + "$changes"))
       .map(p => s"`$p`").mkString(".")

@@ -188,7 +188,7 @@ class Round18Spec extends SparkSpec {
         .withColumn("op", lit("upsert")),
       Seq((1L, 2L))))
     val widenV = TxnLog.alterColumnType(spark, root, "value", "bigint")
-    graft.sources.GraftCatalog.register(spark)
+    registerGraftCatalog()
     val ident = (graft.sources.GraftCatalog.NAME +:
       root.split("/").filter(_.nonEmpty).toSeq)
       .map(p => s"`$p`").mkString(".")

@@ -18,6 +18,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Names the `graft` catalog on this suite's session; a key gets it
+    * on its own query session instead. */
+  def registerGraftCatalog(): Unit = {
+    val (k, v) = graft.sources.GraftCatalog.Conf
+    spark.conf.set(k, v)
+  }
+
   override def afterAll(): Unit = {
     // keep the session for the next suite (shared JVM) — just clear cache
     spark.catalog.clearCache()

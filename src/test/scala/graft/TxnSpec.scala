@@ -126,6 +126,25 @@ class TxnSpec extends SparkSpec {
     TxnLog.destroy(root)
   }
 
+  test("a snapshot file whose schema differs fails the read, naming the file") {
+    val root = freshRoot("mixedschema")
+    TxnLog.commit(spark, root, _ => (upserts(1L -> 10L, 2L -> 20L), Seq((1L, 2L))))
+    // a file with `value` renamed: pinning the first file's schema
+    // would read its rows with a NULL value instead of failing
+    val odd = new java.io.File(root, "odd_src")
+    spark.range(3, 5).selectExpr("id AS key", "id AS value2")
+      .coalesce(1).write.parquet(odd.getPath)
+    val part = odd.listFiles().find(_.getName.endsWith(".parquet")).get
+    val snap = new java.io.File(root, "snapshot_v0")
+    java.nio.file.Files.copy(part.toPath,
+      new java.io.File(snap, "zz_odd.parquet").toPath)
+    val e = intercept[IllegalStateException] {
+      TxnLog.read(spark, root, 0L).collect()
+    }
+    assert(e.getMessage.contains("zz_odd.parquet"), e.getMessage)
+    TxnLog.destroy(root)
+  }
+
   test("disjoint racers: loser rebases WITHOUT a conflict re-run") {
     val root = freshRoot("disjoint")
     TxnLog.commit(spark, root, _ => (upserts(1L -> 1L, 9L -> 9L), Seq((1L, 1L), (9L, 9L))))
