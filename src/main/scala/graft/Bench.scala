@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.QueryMetrics
 
 object Bench {
 
@@ -29,15 +29,8 @@ object Bench {
     // Default to every core: the harness contract is local[32] on this
     // 32-cpu host, and the driver does not set SPARK_GRAFT_CPUS — the
     // old default of 4 would run the whole bench at 1/8 parallelism.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(
+      LocalSession.envCores(Runtime.getRuntime.availableProcessors()), "graft.Bench")
     // Untimed session warm-up: JIT/codegen paths, Hadoop FS init, and
     // one parquet footer read. No query results are precomputed here —
     // it only removes JVM start-up cost from the first timed query.
@@ -63,14 +56,24 @@ object Bench {
     // that threw (any rep) and surface them in the JSON line — round 7
     // shipped a throwing key that this loop silently timed as "0.02s".
     val errored = scala.collection.mutable.SortedSet[String]()
-    val results = (1 to reps).map { _ =>
+    // Each key runs under its name as a Spark job tag, set outside the
+    // timed region, so the collector can fold its jobs, stages, plans
+    // and triggers into one layer record per (rep, key).
+    val sc = spark.sparkContext
+    val metrics = QueryMetrics.install(spark)
+    val runs = (1 to reps).map { _ =>
       sortedQueries.map { case (name, fn) =>
+        sc.addJobTag(name)
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() }
         catch { case _: Throwable => errored += name }
-        name -> (System.nanoTime() - t0) / 1e9
+        val s = (System.nanoTime() - t0) / 1e9
+        sc.removeJobTag(name)
+        name -> (s, metrics.take(name, s).json)
       }.toMap
-    }.reduce((a, b) => a.map { case (k, v) => k -> math.min(v, b(k)) })
+    }
+    val results = runs.map(_.map { case (k, (s, _)) => k -> s })
+      .reduce((a, b) => a.map { case (k, v) => k -> math.min(v, b(k)) })
     // Locale.ROOT: f"%.3f" under a comma-decimal JVM locale would emit
     // 0,123 and break the JSON line.
     def r3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -93,6 +96,18 @@ object Bench {
       java.nio.file.Paths.get("bench_all.json"),
       benchAll.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: java.io.IOException => () } // read-only cwd: keep benching
+    // Per-key layers beside it: the cold record (rep 1, which pays the
+    // shared cache builds) and the warm one (the rep that gave the
+    // reported min).
+    val layerQs = results.keys.toSeq.sorted.map { k =>
+      val warm = runs.indices.minBy(r => runs(r)(k)._1)
+      s""""$k":{"cold":${runs.head(k)._2},"warm_rep":${warm + 1},"warm":${runs(warm)(k)._2}}"""
+    }.mkString("{", ",", "}")
+    val benchLayers = s"""{"reps":$reps,"sf":"$sfDir","untagged_jobs":${metrics.untaggedJobs},"queries":$layerQs}"""
+    try java.nio.file.Files.write(
+      java.nio.file.Paths.get("bench_layers.json"),
+      benchLayers.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case _: java.io.IOException => () }
     // Print the contract line AFTER spark.stop(): SparkContext shutdown
     // logs WARN lines (e.g. DAGScheduler job-group cancels) that would
     // otherwise land between the JSON and process exit, so this keeps

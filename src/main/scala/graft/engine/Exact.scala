@@ -51,6 +51,15 @@ object Exact {
   /** Exact-numerator average: decimal-sum / count, both deterministic. */
   def xavg(c: Column): Column = xsum(c) / count(c)
 
+  /** Exact average rounded HALF_UP to 6 decimals, as a double: the
+    * decimal sum divided by the count in decimal. Rounding the double
+    * [[xavg]] with `rnd6` instead leaves a 7th-decimal tie to each
+    * engine's double→decimal cast, and they differ: Spark rounds the
+    * shortest decimal string of the double, DuckDB its exact binary
+    * value (q_tpcds_brand_dev at sf0.001: 168372.9332525 → …253 vs
+    * …252). */
+  def xavg6(c: Column): Column = round(sum(c.cast(D)) / count(c), 6).cast(DoubleType)
+
   /** SCALAR twins of the column machinery above, for operators that
     * fold a bounded per-key candidate set locally (the r14 CF scoring
     * rework) instead of through a row-explosion + decimal hash
@@ -88,4 +97,13 @@ object Exact {
 
   /** SQL twin of [[xavg]]. */
   def sqlXavg(e: String): String = s"${sqlXsum(e)} / COUNT($e)"
+
+  /** SQL (DuckDB) twin of [[xavg6]]. DuckDB divides decimals in
+    * double, so the quotient is an integer division of the sum in
+    * micro-units, rounded half away from zero. */
+  def sqlXavg6(e: String): String = {
+    val micros = s"CAST(SUM(CAST(($e) AS DECIMAL(38,6))) * 1000000 AS HUGEINT)"
+    val n = s"COUNT($e)"
+    s"CAST(sign($micros) * ((2 * abs($micros) + $n) // (2 * $n)) AS DOUBLE) / 1000000.0"
+  }
 }

@@ -1062,10 +1062,13 @@ object DedupOps {
     * not interpolation: max jaccard, then min corpus doc_id. */
   def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame =
     // many small sequential stages over band/bucket frames — the
-    // iterative-key sizing (8 partitions, AQE off), not data volume
-    QuerySession(spark, QuerySession.SmallIterative) { spark =>
+    // iterative-key sizing (8 partitions, AQE off) for the BUILD only:
+    // the returned frame's 40-exchange plan over checkpointed inputs
+    // runs under the caller's confs, where AQE coalesces its shuffles
+    // (sf0.1, 4 cores: 9.2 → 5.2 s median, 5 of 5 alternating pairs)
+    QuerySession.bind(QuerySession(spark, QuerySession.SmallIterative) { spark =>
       dedupIncrementalInner(spark, sfDir)
-    }
+    }, spark)
 
   private def dedupIncrementalInner(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._

@@ -518,7 +518,9 @@ object WorkloadOps {
     * average joins back from a brand-grain aggregate (broadcast-sized
     * at any corpus — #brands rows), keeping both sums decimal-exact
     * and the plan at ONE exchange over (brand, month) + a broadcast.
-    * Top-50 by absolute deviation via TakeOrderedAndProject. */
+    * The average is the exact decimal mean, HALF_UP at 6 places
+    * ([[Exact.xavg6]]), so a 7th-decimal tie rounds alike in both
+    * engines. Top-50 by absolute deviation via TakeOrderedAndProject. */
   def tpcdsBrandDev(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.Udfs.rnd6
@@ -529,10 +531,9 @@ object WorkloadOps {
         .as("mon"))
       .agg(xsum($"l_extendedprice" * (lit(1.0) - $"l_discount"))
         .as("rev"))
-    val brandAvg = monthly.groupBy($"p_brand")
-      .agg((xsum($"rev") / count(lit(1))).as("avg_rev"))
+    val brandAvg = monthly.groupBy($"p_brand").agg(xavg6($"rev").as("avg_rev"))
     monthly.join(broadcast(brandAvg), "p_brand")
-      .select($"p_brand", $"mon", $"rev", rnd6($"avg_rev").as("avg_rev"),
+      .select($"p_brand", $"mon", $"rev", $"avg_rev",
         rnd6(($"rev" - $"avg_rev") / $"avg_rev").as("dev"))
       .orderBy(abs($"dev").desc, $"p_brand", $"mon")
       .limit(50)
@@ -547,10 +548,9 @@ object WorkloadOps {
        |  FROM lineitem JOIN part ON l_partkey = p_partkey
        |  GROUP BY 1, 2),
        |brand_avg AS (
-       |  SELECT p_brand, ${sqlXsum("rev")} / COUNT(*) AS avg_rev
+       |  SELECT p_brand, ${sqlXavg6("rev")} AS avg_rev
        |  FROM monthly GROUP BY 1)
-       |SELECT m.p_brand, m.mon, m.rev,
-       |  ${sqlRnd6("b.avg_rev")} AS avg_rev,
+       |SELECT m.p_brand, m.mon, m.rev, b.avg_rev,
        |  ${sqlRnd6("(m.rev - b.avg_rev) / b.avg_rev")} AS dev
        |FROM monthly m JOIN brand_avg b USING (p_brand)
        |ORDER BY abs(${sqlRnd6("(m.rev - b.avg_rev) / b.avg_rev")}) DESC,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scaling-evidence fixture builder (test scope, not shipped): writes
@@ -23,10 +22,7 @@ object MakeScaledFixture {
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
     val src = "/root/testdata/sf0.1"
     val S = 100000000L // stride: far above any sf0.1 key
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(Runtime.getRuntime.availableProcessors(), "graft.MakeScaledFixture")
 
     def replicate(table: String, keyCols: Seq[String]): Unit = {
       val df = spark.read.parquet(s"$src/$table.parquet")

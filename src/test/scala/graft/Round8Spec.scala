@@ -100,6 +100,32 @@ class Round8Spec extends SparkSpec {
     }
   }
 
+  test("q_tpcds_brand_dev: avg_rev is the exact monthly mean, HALF_UP at 6 places") {
+    import spark.implicits._
+    val dev = WorkloadOps.tpcdsBrandDev(spark, sf).collect()
+    // row 3 at sf0.001 is the tie: Brand#8's monthly revenues average to
+    // exactly 168372.9332525, whose double prints as …2525 but lies just
+    // below it, so rounding the double split the engines (…253 / …252)
+    val tie = dev(3)
+    assert(tie.getAs[String]("p_brand") == "Brand#8" &&
+      tie.getAs[java.sql.Date]("mon").toString == "1995-05-01", tie)
+    assert(tie.getAs[Double]("avg_rev") == 168372.933253, tie)
+    assert(tie.getAs[Double]("dev") == 2.205481, tie)
+    // every row: the decimal mean of its brand's monthly revenue sums
+    val monthly = graft.engine.Tables.lineitem(spark, sf)
+      .join(graft.engine.Tables.part(spark, sf), $"l_partkey" === $"p_partkey")
+      .groupBy($"p_brand", date_trunc("month", $"l_shipdate"))
+      .agg(sum(($"l_extendedprice" * (lit(1.0) - $"l_discount"))
+        .cast("decimal(38,6)")).as("rev"))
+      .collect().groupBy(_.getString(0))
+      .map { case (b, rs) =>
+        val revs = rs.map(_.getDecimal(2))
+        b -> revs.reduce(_ add _).divide(java.math.BigDecimal.valueOf(revs.length.toLong),
+          6, java.math.RoundingMode.HALF_UP).doubleValue
+      }
+    dev.foreach(r => assert(r.getAs[Double]("avg_rev") == monthly(r.getAs[String]("p_brand")), r))
+  }
+
   test("q_text_stem: stemming only folds the vocabulary, never grows it") {
     import spark.implicits._
     val stems = graft.operators.TextOps.textStem(spark, sf)

@@ -8,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite, UTC, shuffle partitions pinned (determinism rules from
   * SURVEY.md §7.4 are test requirements). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4, getClass.getSimpleName)
 
   val sf: String = "/root/testdata/sf0.001"
 
