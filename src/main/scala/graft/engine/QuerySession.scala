@@ -23,9 +23,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    [[apply]] binds the block's result to the clone, and [[DfCache]]
   *    and [[Tables]] return frames bound to the asking session.
   *  - Spark copies QueryExecutionListeners to a clone but not
-  *    StreamingQueryListeners, so [[session]] re-registers the
+  *    StreamingQueryListeners, so [[streaming]] re-registers the
   *    caller's: otherwise they see no progress from a stream run on
-  *    the clone.
+  *    the clone. A session registers a listener bus on the context
+  *    on its first `streams` call and Spark never removes it, so only
+  *    [[streaming]] touches a clone's `streams`, and it drops that
+  *    bus again once the body's queries have stopped.
   *  - A helper that only needs its BUILD tuned (eager jobs, cached
   *    layout) binds its result back to the caller:
   *    `bind(QuerySession(spark, c) { spark => … }, spark)`.
@@ -54,9 +57,8 @@ object QuerySession {
     "spark.sql.shuffle.partitions" -> "8",
     "spark.sql.adaptive.enabled" -> "false")
 
-  /** A clone of `spark` carrying `confs` and the caller's streaming
-    * listeners — apart from [[Tables]]' ns-fixture flag, the one place
-    * the engine writes session conf. */
+  /** A clone of `spark` carrying `confs` — apart from [[Tables]]'
+    * ns-fixture flag, the one place the engine writes session conf. */
   def session(spark: SparkSession,
       confs: Seq[(String, String)]): SparkSession = {
     // cloned twice to create it with artifact isolation off: an
@@ -66,12 +68,10 @@ object QuerySession {
     base.conf.set("spark.sql.artifact.isolation.enabled", "false")
     val c = Bridge.cloneSession(base)
     confs.foreach { case (k, v) => c.conf.set(k, v) }
-    // a session's first `streams` call registers a listener bus for
-    // good: a clone's listeners come from this map, not its `streams`
-    val listeners = Option(listenersOf.get(spark))
-      .getOrElse(spark.streams.listListeners())
-    if (listeners.nonEmpty) listeners.foreach(c.streams.addListener)
-    listenersOf.put(c, listeners)
+    // the caller's streaming listeners, for [[streaming]]: a clone's
+    // come from this map, so a clone of a clone never needs `streams`
+    listenersOf.put(c, Option(listenersOf.get(spark))
+      .getOrElse(spark.streams.listListeners()))
     c
   }
 
@@ -85,6 +85,23 @@ object QuerySession {
     val c = session(spark, confs)
     bind(body(c), c)
   }
+
+  /** [[apply]] for a `body` that starts (and stops) streaming queries
+    * on the clone: the caller's streaming listeners are attached to
+    * the clone's `streams`, and when `body` returns the clone's
+    * listener bus leaves the context's, once the events already
+    * posted — each stopped query's terminated event — are delivered
+    * (if that takes over 10 s, the bus stays). */
+  def streaming(spark: SparkSession, confs: Seq[(String, String)])(
+      body: SparkSession => DataFrame): DataFrame =
+    apply(spark, confs) { c =>
+      listenersOf.get(c).foreach(c.streams.addListener)
+      try body(c) finally
+        try {
+          Bridge.awaitListeners(c.sparkContext)
+          Bridge.dropStreamBus(c.asInstanceOf[classic.SparkSession])
+        } catch { case _: java.util.concurrent.TimeoutException => () }
+    }
 
   /** `df` bound to `spark`: the identity when it already is, else the
     * same analyzed plan on `spark`, so an action plans under

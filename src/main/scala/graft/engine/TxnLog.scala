@@ -10,52 +10,69 @@ import org.apache.spark.sql.functions._
 /** Mini transaction log: optimistic-concurrency multi-writer commits
   * and time-travel reads over plain-parquet versioned snapshots —
   * the Delta-lake idea reduced to its load-bearing mechanisms,
-  * built on nothing but the filesystem's atomic create:
+  * built on nothing but the filesystem's atomic create and link.
   *
-  *  1. **Version claim**: commit N+1 is claimed by atomically
-  *     creating `_txn_log/vN+1.claim` (`File.createNewFile` —
-  *     exactly one concurrent writer can win), and the winner writes
-  *     a unique OWNER TOKEN into the claim it won. A writer that
-  *     loses the claim did its work against a stale snapshot.
-  *  2. **Read-set validation (OCC)**: every commit records the
-  *     per-file [min, max] KEY RANGES its delta wrote (one row per
-  *     written file — metadata-scale at any transaction size, the
-  *     lakehouse manifest-stats shape; never a key list collected to
-  *     the driver). A losing writer intersects its READ ranges
-  *     against the written ranges of every intervening commit:
-  *     disjoint → its delta is still serializable, re-claim with the
-  *     same delta (rebase without recompute); overlapping → the
-  *     classic lost-update hazard, the transaction is REJECTED and
-  *     re-runs against the new snapshot. Range intersection is
-  *     CONSERVATIVE (a false overlap costs one re-run, never a lost
-  *     update), and the delta is range-partitioned on write so file
-  *     ranges stay tight.
-  *  3. **Fenced publish**: EVERYTHING a commit publishes — snapshot,
-  *     delta, meta, schema/mapping audit entries, idempotency record
-  *     — is staged in a claim-scoped uniquely-named directory, and
-  *     the commit marker is created as a HARD LINK to a payload file
-  *     inside that stage. `link(2)` fails if the target exists, so
-  *     exactly one writer wins (unlike rename, which silently
-  *     replaces), and it fails if the stage was trashed by a claim
-  *     thief, so a resumed zombie whose claim was stolen can never
-  *     publish a marker pointing at destroyed data. The marker's
-  *     CONTENT names the winning stage; [[finishPublish]] then moves
-  *     each staged artifact to its canonical name. finishPublish is
-  *     idempotent and runs from ANY process — a reader that sees a
-  *     marked version whose snapshot/meta has not appeared simply
-  *     finishes the publish itself, so a writer crash between marker
-  *     and renames can never brick the table.
+  * ONE COMMIT PROTOCOL serves a transaction over one table
+  * ([[commit]]) and over several ([[commitMulti]]); each attempt
+  * runs these steps, every table through the same code:
   *
-  * A version is visible to readers only once its `vN.commit` marker
-  * exists, so a crashed writer's half-written claim is invisible to
-  * READERS. For WRITERS the dead slot is recovered in-code: a
-  * claim's owner heartbeats the claim file's mtime while it works,
-  * and a waiting writer that sees a claim go a full `claimTimeoutMs`
-  * without a heartbeat treats it as abandoned, deletes it, trashes
-  * its stage via atomic rename (restoring it if the marker turns out
-  * to have been won — recovery then completes that publish), and
-  * re-claims the slot — no external janitor is required for
-  * liveness after a writer crash.
+  *  1. **Build or rebase.** `txn` maps the latest snapshot to a delta
+  *     and its READ RANGES (per-file [min, max] keys, metadata-scale).
+  *     A delta built earlier is reused when no commit since wrote
+  *     into its read ranges (rebase without recompute); otherwise
+  *     `txn` runs again on the new snapshot — or, for a non-retryable
+  *     transaction, [[Conflict]] is thrown (replaying a pre-built
+  *     delta would be a lost update). Range intersection is
+  *     CONSERVATIVE: a false overlap costs one re-run, never a lost
+  *     update.
+  *  2. **Claim.** Version N+1 of every table, in SORTED ROOT ORDER
+  *     (a global lock order: two writers never deadlock), by
+  *     atomically creating `_txn_log/vN+1.claim` and writing one
+  *     shared OWNER TOKEN into it; a heartbeat thread refreshes each
+  *     claim's mtime. A writer that loses a claim releases the ones it
+  *     holds, waits for the owner's marker, and steals the slot only
+  *     once its mtime is a full `claimTimeoutMs` old — resolving a
+  *     stale multi-table intent through [[recoverPending]] first.
+  *  3. **Validate** each read set, under the claims, against the
+  *     written ranges of every commit since its delta was built.
+  *  4. **Stage** everything a commit publishes — snapshot (or a
+  *     `snapshot_link` for metadata-only commits), delta, meta,
+  *     schema and mapping entries, declared types, idempotency
+  *     record, and the `decider` payload holding the token — in the
+  *     claim-scoped directory `.stage_vN_<token>`. Nothing reaches a
+  *     canonical name except through [[finishPublish]].
+  *  5. **Fenced publish.** Every claim must still be ours (a stalled
+  *     writer may have been robbed) before the decision:
+  *     - one table: the marker `vN.commit`, created as a HARD LINK to
+  *       the stage's `decider`, decides. `link(2)` fails if the target
+  *       exists (exactly one winner, unlike rename) and if a thief
+  *       trashed the stage, so a resumed zombie can never mark
+  *       destroyed data;
+  *     - several tables: a `vN.pending` intent in every log names the
+  *       token and a coordinator; the coordinator `mtxn_<token>.coord`
+  *       (a link in the first table's log) decides ALL of them, then
+  *       each table's marker is linked and published.
+  *     The marker's content names the winning stage, and
+  *     [[finishPublish]] moves each staged artifact to its canonical
+  *     name. One `finally` releases only what is still the attempt's
+  *     own: never a decided table, and never an intent a crash left
+  *     for recovery.
+  *
+  * Crash points and the recovery that owns each:
+  *  - after a claim, before the decision (no intent): the claim is
+  *    invisible to READERS (a version exists only once its marker
+  *    does); the next WRITER's age-checked steal deletes it and
+  *    trashes the unmarked stage — no external janitor;
+  *  - after the intents, before the coordinator: [[recoverPending]]
+  *    (the steal path, or [[recoverMulti]]) rolls every table back;
+  *  - after the coordinator, before some markers: [[recoverPending]]
+  *    links the missing markers and publishes them — both tables
+  *    visible or neither, never a mix;
+  *  - after a marker, before the publish renames: any reader
+  *    ([[read]], [[readMeta]]) or [[healStages]] finishes the publish,
+  *    as does the next commit's look at its head;
+  *  - a thief dying between parking a stage in trash and restoring
+  *    it: [[finishPublish]] restores the deterministic trash name.
   *
   * Schemas are evolvable through the log: a delta may carry columns
   * the current snapshot lacks (ADD COLUMN), back-filled on existing
@@ -1008,32 +1025,36 @@ object TxnLog {
       StandardCharsets.UTF_8) == token
     catch { case _: java.io.IOException => false }
 
-  /** One optimistic transaction. `txn` maps the base snapshot to
-    * (delta, readRanges): the delta to commit and the key ranges the
-    * transaction's result DEPENDS on (its read set, metadata-scale).
-    * Loops: read latest → build → claim; on a lost claim, validates
-    * the read ranges against every intervening commit's written
-    * ranges — rebase (reuse the delta) when disjoint, full re-run
-    * when overlapping (the lost update that blind last-writer-wins
-    * would silently absorb). `barrier`, when set, is awaited between
-    * snapshot read and claim — the test hook that forces two writers
-    * into a genuine race deterministically. `defaults` back-fill ADD
-    * COLUMNs the delta introduces; `layout` re-layouts the post
-    * snapshot (OPTIMIZE); `prePublish` is a test-only fault-injection
-    * hook that runs after staging, before the fenced publish.
+  /** The token a log file (marker, intent) names; "" when absent. */
+  private def tokenOf(f: File): String =
+    try new String(Files.readAllBytes(f.toPath),
+      StandardCharsets.UTF_8).takeWhile(_ != '|')
+    catch { case _: java.io.IOException => "" }
+
+  /** One optimistic transaction over one table. `txn` maps the base
+    * snapshot to (delta, readRanges): the delta to commit and the key
+    * ranges the transaction's result DEPENDS on (its read set,
+    * metadata-scale). `barrier`, when set, is awaited between
+    * snapshot read and claim on the first attempt — the test hook
+    * that forces two writers into a genuine race deterministically.
+    * `defaults` back-fill ADD COLUMNs the delta introduces; `layout`
+    * re-layouts the post snapshot (OPTIMIZE); `prePublish` is a
+    * test-only fault-injection hook that runs once, after staging,
+    * before the fenced publish. `stats.conflicts` counts read-set
+    * clashes plus publishes lost to a claim thief.
     *
-    * `baseline` declares that the FIRST delta `txn` returns was built
+    * `baseline` declares that the delta `txn` returns was built
     * against that already-scanned version (a SQL UPDATE/MERGE whose
     * rewrite ran before commit() was entered) — validation then spans
     * every commit after `baseline`, not just those after this call's
-    * first snapshot read. `rerunOnConflict=false` makes the
-    * transaction NON-RETRYABLE: a read-range conflict throws
-    * [[Conflict]] instead of re-running `txn`, which is mandatory
-    * when `txn` cannot actually rebuild (it replays a pre-computed
-    * delta, so a re-run would re-commit stale rows — the silent lost
-    * update). Disjoint intervening commits still rebase (the delta
-    * stays valid), so non-retryable writers keep full concurrency
-    * against non-overlapping traffic. */
+    * snapshot read. `rerunOnConflict=false` makes the transaction
+    * NON-RETRYABLE: a read-range conflict throws [[Conflict]] instead
+    * of re-running `txn`, which is mandatory when `txn` cannot
+    * actually rebuild (it replays a pre-computed delta, so a re-run
+    * would re-commit stale rows — the silent lost update). Disjoint
+    * intervening commits still rebase (the delta stays valid), so
+    * non-retryable writers keep full concurrency against
+    * non-overlapping traffic. */
   def commit(spark: SparkSession, root: String,
       txn: DataFrame => (DataFrame, KeyRanges),
       barrier: Option[java.util.concurrent.CyclicBarrier] = None,
@@ -1063,289 +1084,354 @@ object TxnLog {
     // idempotent retry: an application txn id that already committed
     // returns its version without touching the log (attempts = 0 is
     // the caller-visible proof nothing re-applied)
-    txnId.flatMap(committedTxn(root, _)) match {
-      case Some(v) => return TxnStats(v, 0, 0)
-      case None =>
+    txnId.flatMap(committedTxn(root, _)).fold(
+      runProtocol(spark, Seq(Part(root, txn, baseline, check, defaults,
+          layout, mappingUpdate, linkSnapshot, typesUpdate, txnId)),
+        barrier, maxAttempts, claimTimeoutMs, rerunOnConflict,
+        vs => prePublish(vs.head), _ => ()).head)(TxnStats(_, 0, 0))
+  }
+
+  /** One atomic transaction across `parts` (root → txn), committing a
+    * version in EVERY table with all-or-nothing visibility (corpus +
+    * manifest is the canonical pair). Fault hooks: `preDecide` runs
+    * once, after the intents are written but before the coordinator
+    * (a crash here must roll back everywhere); `postDecide(i)` runs
+    * before table i's marker is created (a crash here must still
+    * surface the commit in every table via recovery). Returns
+    * per-table stats in sorted-root order. */
+  def commitMulti(spark: SparkSession,
+      parts: Seq[(String, DataFrame => (DataFrame, KeyRanges))],
+      maxAttempts: Int = 10,
+      claimTimeoutMs: Long = 30000L,
+      preDecide: () => Unit = () => (),
+      postDecide: Int => Unit = _ => ()): Seq[TxnStats] = {
+    require(parts.nonEmpty, "commitMulti needs at least one table")
+    val ordered = parts.sortBy(_._1)
+    require(ordered.map(_._1).distinct.size == ordered.size,
+      "commitMulti: one entry per table")
+    runProtocol(spark, ordered.map { case (root, txn) => Part(root, txn) },
+      None, maxAttempts, claimTimeoutMs, rerunOnConflict = true,
+      _ => preDecide(), postDecide)
+  }
+
+  /** One table of a transaction: its root, its `txn` and the
+    * per-table options [[commit]] documents. */
+  private final case class Part(root: String,
+      txn: DataFrame => (DataFrame, KeyRanges),
+      baseline: Option[Long] = None,
+      check: Option[org.apache.spark.sql.Column] = None,
+      defaults: Map[String, Long] = Map.empty,
+      layout: Option[DataFrame => DataFrame] = None,
+      mappingUpdate: Option[ColMapping] = None,
+      linkSnapshot: Boolean = false,
+      typesUpdate: Option[Long => Map[String, String]] = None,
+      txnId: Option[String] = None)
+
+  /** Version `v` of `part`'s table, claimed by one attempt. */
+  private final case class Claimed(part: Part, v: Long, file: File,
+      heartbeat: Thread, stage: File) {
+    def root: String = part.root
+    def decider: File = new File(stage, "decider")
+  }
+
+  /** The commit protocol of the object scaladoc, for `parts` in
+    * sorted-root order. A single table is decided by its marker; only
+    * several tables write intents and a coordinator. Returns per-table
+    * stats in `parts` order. */
+  private def runProtocol(spark: SparkSession, parts: Seq[Part],
+      barrier: Option[java.util.concurrent.CyclicBarrier], maxAttempts: Int,
+      claimTimeoutMs: Long, rerunOnConflict: Boolean,
+      prePublish: Seq[Long] => Unit, postDecide: Int => Unit): Seq[TxnStats] = {
+    val multi = parts.size > 1
+    // per table: the delta, its read ranges and the version it was
+    // built at; and the read-set clashes and lost publishes so far
+    val built = Array.fill(parts.size)(Option.empty[(DataFrame, KeyRanges, Long)])
+    val conflicts = Array.fill(parts.size)(0)
+    // did a commit in (builtAt, until) write into table i's read set?
+    def clashes(i: Int, until: Long): Boolean = built(i).exists {
+      case (_, readRanges, builtAt) => ((builtAt + 1) until until).exists(u =>
+        rangesOverlap(readMeta(parts(i).root, u).writtenRanges, readRanges))
     }
-    def conflictOrRerun(what: String): Unit =
+    def clash(i: Int, what: String): Unit = {
       if (!rerunOnConflict)
         throw new Conflict(
           s"non-retryable transaction: $what — a concurrent commit " +
             "wrote into this transaction's read ranges after its " +
             "delta was computed; replaying the pre-built delta would " +
             "be a lost update, so the statement fails instead")
+      conflicts(i) += 1
+      built(i) = None
+    }
+    // still ours: the claim's token, and (several tables) the intent
+    def holds(c: Claimed, token: String): Boolean =
+      ownsClaim(c.file, token) && (!multi || pendingFile(c.root, c.v).exists())
     var attempts = 0
-    var conflicts = 0
-    var pending: Option[(DataFrame, KeyRanges, Long)] = None // delta, readRanges, builtAt
     var prePublishFired = false
     while (attempts < maxAttempts) {
       attempts += 1
-      val base = latestCommitted(root)
-      val pair: (DataFrame, KeyRanges) = pending match {
-        case Some((d, rr, builtAt)) =>
-          // rebase path: the delta was built at `builtAt`; valid iff
-          // no commit in (builtAt, base] wrote into our read ranges
-          val clash = ((builtAt + 1) to base).exists(v =>
-            rangesOverlap(readMeta(root, v).writtenRanges, rr))
-          if (clash) {
-            conflictOrRerun(s"conflict while rebasing past v$base")
-            conflicts += 1
-            pending = None
-            val snap =
-              if (base < 0) emptySnapshot(spark)
-              else read(spark, root, base)
-            val built = txn(snap)
-            pending = Some((built._1, built._2, base))
-            built
-          } else (d, rr)
-        case None =>
-          val snap =
-            if (base < 0) emptySnapshot(spark)
-            else read(spark, root, base)
-          val built = txn(snap)
+      parts.indices.foreach { i =>
+        val base = latestCommitted(parts(i).root)
+        if (clashes(i, base + 1)) clash(i, s"conflict while rebasing past v$base")
+        if (built(i).isEmpty) {
+          val (delta, readRanges) = parts(i).txn(
+            if (base < 0) emptySnapshot(spark) else read(spark, parts(i).root, base))
           // a pre-scanned transaction (SQL row-level DML) validates
           // from the version its rewrite actually read, which may be
           // older than the snapshot this loop just fetched
-          pending = Some((built._1, built._2,
-            baseline.fold(base)(math.min(_, base))))
-          built
+          built(i) = Some((delta, readRanges,
+            parts(i).baseline.fold(base)(math.min(_, base))))
+        }
       }
-      val delta = pair._1
-      val readRanges = pair._2
       // the race-pinning hook trips once, on the writers' FIRST
       // attempts — a retrying loser must not wait on a partner that
       // already committed and left
       if (attempts == 1) barrier.foreach(_.await())
-      val v = latestCommitted(root) + 1
-      val claim = claimFile(root, v)
-      if (claim.createNewFile()) {
-        // we own version v: fence it with a unique token, and
-        // heartbeat the claim's mtime while we work so waiting
-        // writers can tell "slow" from "dead"
-        val token = java.util.UUID.randomUUID().toString
-        Files.write(claim.toPath, token.getBytes(StandardCharsets.UTF_8))
-        val heartbeat = startHeartbeat(claim, claimTimeoutMs)
-        val stage = new File(root, s".stage_v${v}_$token")
-        def abandon(): Unit = { destroyDir(stage); conflicts += 1; pending = None }
-        // voluntary early release (clash / CHECK / typesUpdate abort):
-        // only delete the claim while it is still OURS — after a
-        // heartbeat-lapse steal the file at this path is the THIEF's
-        // fresh claim, and deleting it would hand the slot to a third
-        // writer and force the rightful owner to abandon its work
-        def releaseClaim(): Unit =
-          if (ownsClaim(claim, token)) { claim.delete(); () }
-        try {
-          // validate the read set against commits we did not see when
-          // the delta was built
-          val builtAt = pending.get._3
-          val clash = ((builtAt + 1) until v).exists(u =>
-            rangesOverlap(readMeta(root, u).writtenRanges, readRanges))
-          if (clash) {
-            // release the claim and re-run against the newer snapshot
-            releaseClaim()
-            conflictOrRerun(s"conflict validating claim of v$v")
-            conflicts += 1
-            pending = None
-          } else {
-            val mapping = if (v == 0) None else currentMapping(root, v - 1)
-            val keyed = toPhysical(delta, mapping).localCheckpoint(true)
-            // v0's base is an empty frame with the DELTA's own
-            // columns, so the first commit of a wide table does not
-            // inherit emptySnapshot's fixture (key, value) shape
-            val prevSnap =
-              if (v == 0) keyed.drop("op").limit(0)
-              else readPhysical(spark, root, v - 1)
-            val post0 = applyDelta(prevSnap, keyed, defaults)
-            val post = layout.map(_(post0)).getOrElse(post0)
-            // CHECK constraint: enforced on the POST state (resolved
-            // to LOGICAL names if a mapping is in force), before
-            // anything becomes visible; a violating commit releases
-            // its claim and rejects — the log is left untouched
-            check.foreach { c =>
-              val checkView = mappingUpdate.orElse(mapping) match {
-                case None => post
-                case Some(m) =>
-                  val phys = post.columns.toSet
-                  post.select(col("key") +: m.map { case (l, p, d) =>
-                    if (phys(p)) col(p).as(l)
-                    else lit(d.map(Long.box).orNull).cast("long").as(l)
-                  }: _*)
-              }
-              val bad = checkView.filter(!c).limit(1).count()
-              if (bad > 0) {
-                releaseClaim()
-                throw new CheckViolation(
-                  s"commit v$v rejected: post-state violates CHECK $c")
-              }
-            }
-            // STAGE everything — data AND log artifacts — under the
-            // claim-scoped unique directory. Nothing reaches a
-            // canonical name except through finishPublish, from the
-            // stage the marker itself names, so a resumed zombie can
-            // never clobber a committed version's files. A
-            // metadata-only commit (linkSnapshot) stages NO snapshot
-            // bytes: its snapshot publishes as a link to the
-            // previous version's.
-            stage.mkdirs()
-            if (!linkSnapshot)
-              post.write.mode("overwrite").parquet(s"$stage/snapshot")
-            else
-              Files.write(new File(stage, "snapshot_link").toPath,
-                s"snapshot_v${v - 1}".getBytes(StandardCharsets.UTF_8))
-            keyed.repartitionByRange(DELTA_FILES, col("key"))
-              .write.mode("overwrite").parquet(s"$stage/delta")
-            val written = fileRanges(spark, s"$stage/delta")
-            writeMetaTo(new File(stage, "meta"),
-              CommitMeta(v, builtAt, written))
-            val newCols = keyed.columns
-              .filter(c => c != "key" && c != "op")
-              .filterNot(prevSnap.columns.contains)
-            if (newCols.nonEmpty)
-              Files.write(new File(stage, "schema").toPath,
-                newCols.map(c => s"ADD|$c|" +
-                  defaults.get(c).map(_.toString).getOrElse("NULL"))
-                  .mkString("\n").getBytes(StandardCharsets.UTF_8))
-            // the commit's mapping: an explicit schema change, or the
-            // identity extension a mapped table needs when a delta
-            // ADDs brand-new columns (without it the mapped read
-            // would silently hide them)
-            val mappingOut = mappingUpdate.orElse(
-              mapping.filter(_ => newCols.nonEmpty).map(m =>
-                m ++ newCols.map(c => (c, c, defaults.get(c)))))
-            mappingOut.foreach(m =>
-              writeMappingTo(new File(stage, "mapping"), m))
-            typesUpdate.foreach { t =>
-              // the rebuild can refuse (a concurrent widening made
-              // the caller's premise invalid): release the slot
-              // before propagating, like a CHECK violation does
-              val types =
-                try t(v)
-                catch { case e: Throwable =>
-                  releaseClaim(); destroyDir(stage); throw e
-                }
-              Files.write(new File(stage, "types").toPath,
-                types.map { case (p, ty) => s"$p|$ty" }.mkString("\n")
-                  .getBytes(StandardCharsets.UTF_8))
-              ()
-            }
-            txnId.foreach(id =>
-              Files.write(new File(stage, "txnid").toPath,
-                id.getBytes(StandardCharsets.UTF_8)))
-            if (!prePublishFired) { prePublishFired = true; prePublish(v) }
-            // FENCED PUBLISH: re-verify we still own the claim (a
-            // stalled writer may have had it stolen), then let the
-            // marker's atomic hard-link decide the race — a failed
-            // link (target exists, or our stage was trashed by a
-            // thief) means someone else owns v and our work is a
-            // CONFLICT, never a silent co-success
-            if (!ownsClaim(claim, token)) abandon()
-            else {
-              val decider = new File(stage, "decider")
-              Files.write(decider.toPath,
-                token.getBytes(StandardCharsets.UTF_8))
-              val won =
-                try atomicLink(commitMarker(root, v), decider)
-                catch { case _: java.nio.file.NoSuchFileException => false }
-              if (!won) abandon()
-              else {
-                // we ARE the unique committer of v: the marker names
-                // our stage, so the publish completes here — or, if
-                // we die first, in whichever reader arrives next
-                finishPublish(root, v)
-                return TxnStats(v, attempts, conflicts)
-              }
-            }
+      val token = java.util.UUID.randomUUID().toString
+      val claims = scala.collection.mutable.ArrayBuffer.empty[Claimed]
+      var lost = Option.empty[(String, Long)]
+      var rollBack = false
+      var committed = false
+      try {
+        parts.foreach { p =>
+          if (lost.isEmpty) {
+            val v = latestCommitted(p.root) + 1
+            val claim = claimFile(p.root, v)
+            if (claim.createNewFile()) {
+              Files.write(claim.toPath, token.getBytes(StandardCharsets.UTF_8))
+              claims += Claimed(p, v, claim, startHeartbeat(claim, claimTimeoutMs),
+                new File(p.root, s".stage_v${v}_$token"))
+            } else lost = Some((p.root, v))
           }
-        } finally heartbeat.interrupt()
-      }
-      else {
-        // lost the claim: wait for its owner to finish (marker) or
-        // release (claim gone) rather than burning attempts spinning
-        val t0 = System.nanoTime()
-        while (claimFile(root, v).exists() &&
-            !commitMarker(root, v).exists() &&
-            (System.nanoTime() - t0) < claimTimeoutMs * 1000000L)
-          Thread.sleep(math.min(20L, math.max(claimTimeoutMs / 8, 1L)))
-        // age-checked claim steal: a live owner heartbeats the mtime
-        // every claimTimeoutMs/4, so a claim whose mtime is a full
-        // claimTimeoutMs old belongs to a crashed writer — delete it
-        // (plus any unmarked leftovers it published) and let the loop
-        // re-claim the freed slot
-        val orphan = claimFile(root, v)
-        if (orphan.exists() && !commitMarker(root, v).exists() &&
-            System.currentTimeMillis() - orphan.lastModified() >=
-              claimTimeoutMs &&
-            // a stale claim carrying a multi-table INTENT is resolved
-            // through its coordinator first: decided → the recovery
-            // publishes it (marker appears, we wait like any loser);
-            // undecided → rolled back and the slot steals as usual
-            !(pendingFile(root, v).exists() && recoverPending(root, v))) {
-          orphan.delete()
-          // trash-then-check: rename each orphaned stage aside
-          // ATOMICALLY, then re-check the marker. If the presumed-dead
-          // owner actually won the marker inside the window, restore
-          // its stage so finishPublish can complete that commit; only
-          // markerless stages are destroyed. (The owner's marker
-          // hard-link fails once the stage is renamed — it can never
-          // mark a version whose data we trashed. Log artifacts need
-          // no cleanup here: meta/schema/mapping/txnid only reach
-          // _txn_log through finishPublish, after the marker exists.)
-          Option(new File(root).listFiles()).getOrElse(Array.empty)
-            .filter(_.getName.startsWith(s".stage_v${v}_"))
-            .foreach { st =>
-              // DETERMINISTIC trash name (.trash_v{v}_{token}): if we
-              // crash between parking and restoring a marked version's
-              // stage, finishPublish derives this exact name from the
-              // marker's token and restores it — a random name would
-              // strand the committed artifacts forever
-              val trash = new File(root, st.getName
-                .replaceFirst("^\\.stage_", ".trash_"))
-              try {
-                Files.move(st.toPath, trash.toPath,
-                  StandardCopyOption.ATOMIC_MOVE)
-                if (commitMarker(root, v).exists())
-                  Files.move(trash.toPath, st.toPath,
-                    StandardCopyOption.ATOMIC_MOVE)
-                else destroyDir(trash)
-              } catch {
-                case _: java.nio.file.NoSuchFileException => ()
-              }
+        }
+        val clashed =
+          if (lost.isDefined) Nil else claims.indices.filter(i => clashes(i, claims(i).v))
+        clashed.foreach(i => clash(i, s"conflict validating claim of v${claims(i).v}"))
+        if (lost.isEmpty && clashed.isEmpty) {
+          claims.indices.foreach { i =>
+            stage(spark, claims(i), built(i).get._1, built(i).get._3, token)
+          }
+          val coord = new File(logDir(claims.head.root), s"mtxn_$token.coord")
+          if (multi) claims.foreach(c => Files.write(pendingFile(c.root, c.v).toPath,
+            s"$token|${coord.getAbsolutePath}".getBytes(StandardCharsets.UTF_8)))
+          if (!prePublishFired) { prePublishFired = true; prePublish(claims.map(_.v).toSeq) }
+          // RE-VERIFY FENCE: a writer stalled past claimTimeoutMs can
+          // have a claim stolen (and an undecided intent rolled back)
+          // and the slot recommitted by someone else — deciding now
+          // would publish over it, or publish SOME tables of this
+          // transaction and not others
+          val stolen = claims.indices.filterNot(i => holds(claims(i), token))
+          stolen.foreach(conflicts(_) += 1)
+          rollBack = stolen.nonEmpty
+          if (!rollBack && !multi) {
+            // THE decision for one table: a failed link (target
+            // exists, or our stage was trashed by a thief) means
+            // someone else owns v — a conflict, never a co-success
+            committed = linkMarker(claims.head)
+            if (committed) finishPublish(claims.head.root, claims.head.v)
+            else conflicts(0) += 1
+          } else if (!rollBack) {
+            // THE decision for several tables: one atomic link
+            require(atomicLink(coord, claims.head.decider),
+              s"coordinator $coord already existed")
+            // POST-LINK FENCE: a claim stolen between the fence above
+            // and the link is unrecoverable — recoverPending already
+            // destroyed that table's stage and intent. The decision
+            // must NOT be revoked: the thief that judged our heartbeat
+            // lapsed can run recoverPending on another table of this
+            // transaction right now, see the coordinator and publish
+            // it, so a retry would commit the delta twice. Once the
+            // link exists the decision is irrevocable: fail loudly.
+            val stolenPostLink = claims.collect {
+              case c if !holds(c, token) => s"${c.root}@v${c.v}"
             }
-          ()
+            require(stolenPostLink.isEmpty,
+              s"commitMulti decided COMMIT but ${stolenPostLink.mkString(",")} " +
+                "lost its claim/intent between the pre-link fence and " +
+                "the coordinator link — DURABLE mixed commit: the " +
+                "stolen table's stage was rolled back and recoverMulti " +
+                "cannot finish its publish while the other tables " +
+                "commit; reconcile manually")
+            // complete every table (recovery can take over at any
+            // point from here — the coordinator has decided)
+            claims.zipWithIndex.foreach { case (c, i) =>
+              postDecide(i)
+              // the marker must be OURS: a link failure against a
+              // foreign marker (our stage rolled back, the slot
+              // recommitted after the fence) is the mixed-commit
+              // hazard, never a silent success
+              require(linkMarker(c) || tokenOf(commitMarker(c.root, c.v)) == token,
+                s"commitMulti decided COMMIT but table ${c.root} lost " +
+                  s"v${c.v} to a foreign writer after the decision — " +
+                  "DURABLE mixed commit: tables marked earlier in " +
+                  "this transaction are committed and recoverMulti " +
+                  s"cannot restore atomicity; reconcile ${c.root} manually")
+              finishPublish(c.root, c.v)
+              pendingFile(c.root, c.v).delete()
+            }
+            committed = true
+          }
+        }
+      } finally claims.foreach { c =>
+        c.heartbeat.interrupt()
+        // release only what is still ours: never a table whose marker
+        // we won (claims of committed versions are inert), and never
+        // an intent a crash left between intents and decision — that
+        // one belongs to recovery, unless the fence rolls it back
+        val intent = tokenOf(pendingFile(c.root, c.v)) == token
+        if (tokenOf(commitMarker(c.root, c.v)) != token && (rollBack || !intent)) {
+          if (intent) pendingFile(c.root, c.v).delete()
+          if (ownsClaim(c.file, token)) c.file.delete()
+          destroyDir(c.stage)
         }
       }
+      if (committed)
+        return claims.indices.map(i => TxnStats(claims(i).v, attempts, conflicts(i)))
+      lost.foreach { case (root, v) => awaitClaim(root, v, claimTimeoutMs) }
       // loop re-validates against the new latest and retries
     }
     throw new Conflict(s"gave up after $maxAttempts attempts")
   }
 
-  // ------------------------------------------------------------------
-  // MULTI-TABLE ATOMIC COMMIT: one transaction spanning N tables
-  // (corpus + manifest is the canonical pair) with ALL-OR-NOTHING
-  // visibility, built from the same primitives as single-table
-  // commit. Protocol:
-  //
-  //   1. CLAIM the next version in every table in SORTED ROOT ORDER
-  //      (a global lock order — two multi-table writers can never
-  //      deadlock), validating each table's read set under its claim
-  //      exactly as commit() does; any clash releases every claim
-  //      and retries against fresh snapshots.
-  //   2. STAGE every table's artifacts under ONE SHARED TOKEN and
-  //      write a `vN.pending` intent in each log naming the token and
-  //      the COORDINATOR path.
-  //   3. DECIDE with one atomic hard link: the coordinator file's
-  //      creation commits the whole transaction.
-  //   4. COMPLETE: create each table's marker (hard link from its own
-  //      stage decider — finishPublish then works unchanged) and
-  //      finish each publish; drop the pendings.
-  //
-  // Crash anywhere: markers only exist after the coordinator, so if
-  // ANY table shows the commit, the coordinator exists and recovery
-  // ([[recoverPending]] — run by the single-table steal path when it
-  // trips over a pending version, or explicitly) finishes every other
-  // table; if the coordinator was never created, recovery rolls every
-  // table back. Either way: both visible or neither, never a mix.
-  // ------------------------------------------------------------------
+  /** Create `c`'s marker as a link to its stage's decider; false when
+    * the marker exists or a thief trashed the stage. */
+  private def linkMarker(c: Claimed): Boolean =
+    try atomicLink(commitMarker(c.root, c.v), c.decider)
+    catch { case _: java.nio.file.NoSuchFileException => false }
+
+  /** Stage `c`'s commit of `delta` (built at `builtAt`) under
+    * `c.stage`. A metadata-only commit (linkSnapshot) stages NO
+    * snapshot bytes: its snapshot publishes as a link to the previous
+    * version's. Throws [[CheckViolation]] before anything is staged
+    * when the post state violates the table's CHECK. */
+  private def stage(spark: SparkSession, c: Claimed, delta: DataFrame,
+      builtAt: Long, token: String): Unit = {
+    val (p, root, v, stage) = (c.part, c.root, c.v, c.stage)
+    val mapping = if (v == 0) None else currentMapping(root, v - 1)
+    val keyed = toPhysical(delta, mapping).localCheckpoint(true)
+    // v0's base is an empty frame with the DELTA's own columns, so
+    // the first commit of a wide table does not inherit
+    // emptySnapshot's fixture (key, value) shape
+    val prevSnap =
+      if (v == 0) keyed.drop("op").limit(0)
+      else readPhysical(spark, root, v - 1)
+    val post0 = applyDelta(prevSnap, keyed, p.defaults)
+    val post = p.layout.map(_(post0)).getOrElse(post0)
+    // CHECK constraint: enforced on the POST state (resolved to
+    // LOGICAL names if a mapping is in force)
+    p.check.foreach { check =>
+      val checkView = p.mappingUpdate.orElse(mapping) match {
+        case None => post
+        case Some(m) =>
+          val phys = post.columns.toSet
+          post.select(col("key") +: m.map { case (l, ph, d) =>
+            if (phys(ph)) col(ph).as(l)
+            else lit(d.map(Long.box).orNull).cast("long").as(l)
+          }: _*)
+      }
+      if (checkView.filter(!check).limit(1).count() > 0)
+        throw new CheckViolation(
+          s"commit v$v rejected: post-state violates CHECK $check")
+    }
+    stage.mkdirs()
+    if (!p.linkSnapshot)
+      post.write.mode("overwrite").parquet(s"$stage/snapshot")
+    else
+      Files.write(new File(stage, "snapshot_link").toPath,
+        s"snapshot_v${v - 1}".getBytes(StandardCharsets.UTF_8))
+    // a delta with no partitions (the empty delta of a metadata commit
+    // or OPTIMIZE) is written as it is: for such an input Spark builds
+    // the range exchange's partitioner lazily, on AQE's
+    // QueryStageCreator pool thread, and its sampling job there carries
+    // no job tag
+    (if (keyed.queryExecution.toRdd.getNumPartitions == 0) keyed
+     else keyed.repartitionByRange(DELTA_FILES, col("key")))
+      .write.mode("overwrite").parquet(s"$stage/delta")
+    writeMetaTo(new File(stage, "meta"),
+      CommitMeta(v, builtAt, fileRanges(spark, s"$stage/delta")))
+    val newCols = keyed.columns
+      .filter(c => c != "key" && c != "op")
+      .filterNot(prevSnap.columns.contains)
+    if (newCols.nonEmpty)
+      Files.write(new File(stage, "schema").toPath,
+        newCols.map(c => s"ADD|$c|" +
+          p.defaults.get(c).map(_.toString).getOrElse("NULL"))
+          .mkString("\n").getBytes(StandardCharsets.UTF_8))
+    // the commit's mapping: an explicit schema change, or the identity
+    // extension a mapped table needs when a delta ADDs brand-new
+    // columns (without it the mapped read would silently hide them)
+    p.mappingUpdate.orElse(
+      mapping.filter(_ => newCols.nonEmpty).map(m =>
+        m ++ newCols.map(c => (c, c, p.defaults.get(c)))))
+      .foreach(m => writeMappingTo(new File(stage, "mapping"), m))
+    // the types rebuild can refuse (a concurrent widening made the
+    // caller's premise invalid); the protocol's release drops the slot
+    p.typesUpdate.foreach(t =>
+      Files.write(new File(stage, "types").toPath,
+        t(v).map { case (ph, ty) => s"$ph|$ty" }.mkString("\n")
+          .getBytes(StandardCharsets.UTF_8)))
+    p.txnId.foreach(id =>
+      Files.write(new File(stage, "txnid").toPath,
+        id.getBytes(StandardCharsets.UTF_8)))
+    Files.write(c.decider.toPath, token.getBytes(StandardCharsets.UTF_8))
+    ()
+  }
+
+  /** After losing the claim of (root, v): wait for its owner to finish
+    * (marker) or release (claim gone) rather than burning attempts
+    * spinning, then steal the slot if the claim is orphaned. */
+  private def awaitClaim(root: String, v: Long, claimTimeoutMs: Long): Unit = {
+    val t0 = System.nanoTime()
+    while (claimFile(root, v).exists() &&
+        !commitMarker(root, v).exists() &&
+        (System.nanoTime() - t0) < claimTimeoutMs * 1000000L)
+      Thread.sleep(math.min(20L, math.max(claimTimeoutMs / 8, 1L)))
+    // age-checked claim steal: a live owner heartbeats the mtime
+    // every claimTimeoutMs/4, so a claim whose mtime is a full
+    // claimTimeoutMs old belongs to a crashed writer — delete it
+    // (plus any unmarked leftovers it published) and let the loop
+    // re-claim the freed slot
+    val orphan = claimFile(root, v)
+    if (orphan.exists() && !commitMarker(root, v).exists() &&
+        System.currentTimeMillis() - orphan.lastModified() >=
+          claimTimeoutMs &&
+        // a stale claim carrying a multi-table INTENT is resolved
+        // through its coordinator first: decided → the recovery
+        // publishes it (marker appears, we wait like any loser);
+        // undecided → rolled back and the slot steals as usual
+        !(pendingFile(root, v).exists() && recoverPending(root, v))) {
+      orphan.delete()
+      // trash-then-check: rename each orphaned stage aside
+      // ATOMICALLY, then re-check the marker. If the presumed-dead
+      // owner actually won the marker inside the window, restore
+      // its stage so finishPublish can complete that commit; only
+      // markerless stages are destroyed. (The owner's marker
+      // hard-link fails once the stage is renamed — it can never
+      // mark a version whose data we trashed. Log artifacts need
+      // no cleanup here: meta/schema/mapping/txnid only reach
+      // _txn_log through finishPublish, after the marker exists.)
+      Option(new File(root).listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.startsWith(s".stage_v${v}_"))
+        .foreach { st =>
+          // DETERMINISTIC trash name (.trash_v{v}_{token}): if we
+          // crash between parking and restoring a marked version's
+          // stage, finishPublish derives this exact name from the
+          // marker's token and restores it — a random name would
+          // strand the committed artifacts forever
+          val trash = new File(root, st.getName
+            .replaceFirst("^\\.stage_", ".trash_"))
+          try {
+            Files.move(st.toPath, trash.toPath,
+              StandardCopyOption.ATOMIC_MOVE)
+            if (commitMarker(root, v).exists())
+              Files.move(trash.toPath, st.toPath,
+                StandardCopyOption.ATOMIC_MOVE)
+            else destroyDir(trash)
+          } catch {
+            case _: java.nio.file.NoSuchFileException => ()
+          }
+        }
+    }
+  }
 
   private def pendingFile(root: String, v: Long): File =
     new File(logDir(root), s"v$v.pending")
@@ -1387,200 +1473,9 @@ object TxnLog {
       .map(_.getName.stripPrefix("v").stripSuffix(".pending").toLong)
       .foreach(recoverPending(root, _))
 
-  /** One atomic transaction across `parts` (root → txn), committing a
-    * version in EVERY table with all-or-nothing visibility. Fault
-    * hooks: `preDecide` runs after intents are written but before the
-    * coordinator (a crash here must roll back everywhere);
-    * `postDecide(i)` runs before table i's marker is created (a crash
-    * here must still surface the commit in every table via
-    * recovery). Returns per-table stats in sorted-root order. */
-  def commitMulti(spark: SparkSession,
-      parts: Seq[(String, DataFrame => (DataFrame, KeyRanges))],
-      maxAttempts: Int = 10,
-      claimTimeoutMs: Long = 30000L,
-      preDecide: () => Unit = () => (),
-      postDecide: Int => Unit = _ => ()): Seq[TxnStats] = {
-    require(parts.nonEmpty, "commitMulti needs at least one table")
-    val ordered = parts.sortBy(_._1)
-    val roots = ordered.map(_._1)
-    require(roots.distinct.size == roots.size,
-      "commitMulti: one entry per table")
-    var attempts = 0
-    while (attempts < maxAttempts) {
-      attempts += 1
-      // phase 1: claim + validate per table, in lock order
-      val token = java.util.UUID.randomUUID().toString
-      val claimed = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Long, File, Thread, DataFrame, KeyRanges, Long)]
-      var clash = false
-      try {
-        ordered.foreach { case (root, txn) =>
-          if (!clash) {
-            val base = latestCommitted(root)
-            val snap =
-              if (base < 0) emptySnapshot(spark) else read(spark, root, base)
-            val (delta, rr) = txn(snap)
-            val v = latestCommitted(root) + 1
-            val claim = claimFile(root, v)
-            if (!claim.createNewFile()) { clash = true }
-            else {
-              Files.write(claim.toPath,
-                token.getBytes(StandardCharsets.UTF_8))
-              val hb = startHeartbeat(claim, claimTimeoutMs)
-              claimed += ((root, v, claim, hb, delta, rr, base))
-              val conflicted = ((base + 1) until v).exists(u =>
-                rangesOverlap(readMeta(root, u).writtenRanges, rr))
-              if (conflicted) clash = true
-            }
-          }
-        }
-        if (!clash) {
-          // phase 2: stage everything under the SHARED token + intents
-          val coord = new File(logDir(claimed.head._1),
-            s"mtxn_$token.coord")
-          claimed.zipWithIndex.foreach {
-            case ((root, v, _, _, delta, rr, base), _) =>
-              val stage = new File(root, s".stage_v${v}_$token")
-              stage.mkdirs()
-              val mapping =
-                if (v == 0) None else currentMapping(root, v - 1)
-              val keyed = toPhysical(delta, mapping).localCheckpoint(true)
-              val prevSnap =
-                if (v == 0) keyed.drop("op").limit(0)
-                else readPhysical(spark, root, v - 1)
-              applyDelta(prevSnap, keyed)
-                .write.mode("overwrite").parquet(s"$stage/snapshot")
-              keyed.repartitionByRange(DELTA_FILES, col("key"))
-                .write.mode("overwrite").parquet(s"$stage/delta")
-              writeMetaTo(new File(stage, "meta"),
-                CommitMeta(v, base, fileRanges(spark, s"$stage/delta")))
-              Files.write(new File(stage, "decider").toPath,
-                token.getBytes(StandardCharsets.UTF_8))
-              Files.write(pendingFile(root, v).toPath,
-                s"$token|${coord.getAbsolutePath}"
-                  .getBytes(StandardCharsets.UTF_8))
-          }
-          preDecide()
-          // RE-VERIFY FENCE (the single-table ownsClaim fence, per
-          // table): a writer stalled past claimTimeoutMs can have a
-          // claim stolen and its intent rolled back by recoverPending
-          // (coordinator not yet created) — and a concurrent writer
-          // may have committed that version since. Deciding COMMIT
-          // now would publish SOME tables of this transaction and not
-          // others (the mixed commit the protocol rules out), so
-          // every table must still hold its claim (token match) and
-          // its intent before the coordinator link is attempted.
-          val stolen = claimed.exists { case (root, v, claim, _, _, _, _) =>
-            !ownsClaim(claim, token) || !pendingFile(root, v).exists()
-          }
-          if (stolen) clash = true
-          else {
-            // phase 3: THE decision — one atomic link
-            val won = atomicLink(coord,
-              new File(new File(claimed.head._1,
-                s".stage_v${claimed.head._2}_$token"), "decider"))
-            require(won, s"coordinator $coord already existed")
-            // POST-LINK FENCE RE-CHECK: a claim stolen in the window
-            // between the pre-link fence and the link just above is
-            // unrecoverable (recoverPending already destroyed the
-            // stolen table's stage AND its pending, so recoverMulti
-            // can never finish that table's publish). The decision
-            // must NOT be revoked here: stolenPostLink fires exactly
-            // when a thief judged our heartbeat lapsed, and that same
-            // thief can run recoverPending on a NON-stolen table of
-            // this transaction in the link→revoke window — it sees
-            // the coordinator (read BEFORE any delete we might do)
-            // and durably publishes that table; deleting the
-            // coordinator and retrying would then re-apply the delta
-            // on the next attempt (a double commit). Once the link
-            // exists the decision is irrevocable, so a post-link
-            // steal is the same durable mixed-commit error as losing
-            // a marker to a foreign writer below: fail loudly.
-            val stolenPostLink = claimed.collect {
-              case (root, v, claim, _, _, _, _)
-                  if !ownsClaim(claim, token) ||
-                    !pendingFile(root, v).exists() => s"$root@v$v"
-            }
-            require(stolenPostLink.isEmpty,
-              s"commitMulti decided COMMIT but ${stolenPostLink.mkString(",")} " +
-                "lost its claim/intent between the pre-link fence and " +
-                "the coordinator link — DURABLE mixed commit: the " +
-                "stolen table's stage was rolled back and recoverMulti " +
-                "cannot finish its publish while the other tables " +
-                "commit; reconcile manually")
-            // phase 4: complete every table (recovery can take over at
-            // any point from here — the coordinator has decided)
-            claimed.zipWithIndex.foreach {
-              case ((root, v, _, _, _, _, _), i) =>
-                postDecide(i)
-                val decider = new File(
-                  new File(root, s".stage_v${v}_$token"), "decider")
-                val linked =
-                  try atomicLink(commitMarker(root, v), decider)
-                  catch {
-                    case _: java.nio.file.NoSuchFileException => false
-                  }
-                // the marker must be OURS: a swallowed link failure
-                // against a foreign marker (our stage rolled back, the
-                // slot recommitted by someone else after the fence)
-                // must surface as the mixed-commit hazard it is, never
-                // as silent success
-                if (!linked) {
-                  val mk = commitMarker(root, v)
-                  val owner =
-                    try new String(Files.readAllBytes(mk.toPath),
-                      StandardCharsets.UTF_8)
-                    catch { case _: java.io.IOException => "" }
-                  require(owner == token,
-                    s"commitMulti decided COMMIT but table $root lost " +
-                      s"v$v to a foreign writer after the decision — " +
-                      "DURABLE mixed commit: tables marked earlier in " +
-                      "this transaction are committed and recoverMulti " +
-                      s"cannot restore atomicity; reconcile $root manually")
-                }
-                finishPublish(root, v)
-                pendingFile(root, v).delete()
-            }
-          }
-          if (!clash)
-          return claimed.toSeq.map { case (_, v, _, _, _, _, _) =>
-            TxnStats(v, attempts, attempts - 1)
-          }
-        }
-      } finally {
-        claimed.foreach { case (root, v, claim, hb, _, _, _) =>
-          hb.interrupt()
-          // only release what is still OURS and what phase 3 did not
-          // decide: after a steal the claim/pending at (root, v) may
-          // belong to a foreign writer (recoverPending freed the slot
-          // and someone re-claimed it) — deleting those would sabotage
-          // the new owner. A decided transaction keeps its claims
-          // until completion removed the pendings (claims of committed
-          // versions are inert).
-          val ours = ownsClaim(claim, token)
-          val pendingOurs =
-            try pendingFile(root, v).exists() &&
-              new String(Files.readAllBytes(pendingFile(root, v).toPath),
-                StandardCharsets.UTF_8).startsWith(s"$token|")
-            catch { case _: java.io.IOException => false }
-          if (ours && !commitMarker(root, v).exists()) {
-            if (!pendingOurs && !pendingFile(root, v).exists())
-              claim.delete()
-            else if (pendingOurs && clash) {
-              pendingFile(root, v).delete(); claim.delete()
-              destroyDir(new File(root, s".stage_v${v}_$token"))
-            }
-          }
-        }
-      }
-      Thread.sleep(10L)
-    }
-    throw new Conflict(s"commitMulti gave up after $maxAttempts attempts")
-  }
-
   /** Daemon thread refreshing `claim`'s mtime every `timeoutMs/4`
     * while the owning commit runs — the liveness signal the
-    * age-checked claim steal in `commit` keys off. */
+    * age-checked claim steal keys off. */
   private def startHeartbeat(claim: File, timeoutMs: Long): Thread = {
     val t = new Thread(() => {
       try {

@@ -5,9 +5,10 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues,
-  TTLConfig, ValueState}
+  GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode,
+  TimerValues, TTLConfig, ValueState}
 import graft.engine.{DfCache, Exact, QuerySession, Tables, TxnLog}
 
 /** Structured Streaming surface (SURVEY.md §2.9) over the `events`
@@ -210,10 +211,18 @@ object StreamOps {
   private def streamQuerySession(spark: SparkSession,
       extra: Seq[(String, String)] = Nil)(
       body: SparkSession => DataFrame): DataFrame =
-    QuerySession(spark, Seq(
+    QuerySession.streaming(spark, Seq(
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.streaming.checkpointFileManagerClass" ->
         classOf[LocalCheckpointFileManager].getName) ++ extra)(body)
+
+  /** Run `q` until `untilDone` returns, then stop it and drop the
+    * listener bus of the session Spark cloned for it: a stateful
+    * operator touches that session's `streams`. */
+  private def drain(q: StreamingQuery,
+      untilDone: StreamingQuery => Unit = _.processAllAvailable()): Unit =
+    try untilDone(q)
+    finally { q.stop(); Bridge.dropStreamBus(Bridge.streamSession(q)) }
 
   /** Run `out` into a memory sink on its own [[streamQuerySession]] and
     * return the sink's rows, read through that session. */
@@ -227,7 +236,7 @@ object StreamOps {
           .writeStream.format("memory").queryName(sinkName)
           .option("checkpointLocation", ckpt.getAbsolutePath)
           .outputMode(mode).start()
-        try q.processAllAvailable() finally q.stop()
+        drain(q)
       } finally TxnLog.destroy(ckpt.getPath)
       spark.table(sinkName)
     }
@@ -321,9 +330,9 @@ object StreamOps {
           .outputMode(OutputMode.Append()).start()
       }
       val q1 = start(Some(2L))
-      try q1.processAllAvailable() finally q1.stop()
+      drain(q1)
       val q2 = start(None)
-      try q2.processAllAvailable() finally q2.stop()
+      drain(q2)
       val nBatches = Option(new java.io.File(ckpt, "offsets").listFiles())
         .getOrElse(Array.empty)
         .count(f => f.getName.forall(_.isDigit)).toLong
@@ -937,10 +946,10 @@ object StreamOps {
           .outputMode(OutputMode.Append()).start()
       }
       val q1 = start(Some(1L))
-      try q1.processAllAvailable() finally q1.stop()
+      drain(q1)
       // restart: NEW query object, SAME checkpoint + same staged dir
       val q2 = start(None)
-      try q2.processAllAvailable() finally q2.stop()
+      drain(q2)
       // read THROUGH the sink's commit log (metadata-aware path)
       spark.read.parquet(sink)
         .select($"event_id", $"user_id", $"ts", $"value")
@@ -1269,7 +1278,7 @@ object StreamOps {
         .writeStream
         .foreachBatch(febWrite(out) _)
         .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
+      drain(q)
       spark.read.parquet(out)
         .select($"event_id", $"user_id", $"ts", $"value")
         .orderBy($"event_id")
@@ -1375,7 +1384,7 @@ object StreamOps {
             s"retry of batch $id must dedup, got $retry vs $first")
         }
         .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
+      drain(q)
       val latest = TxnLog.latestCommitted(root)
       TxnLog.read(spark, root, latest)
         .select($"key".as("user_id"), $"value".as("n_events"),
@@ -1516,7 +1525,7 @@ object StreamOps {
           lastState.set(s"$root/state_$id")
         }
         .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
+      drain(q)
       spark.read.parquet(lastState.get())
         .select($"user_id", $"event_id".as("last_event_id"),
           $"value".as("last_value"))
@@ -1748,7 +1757,7 @@ object StreamOps {
         .outputMode(OutputMode.Complete())
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      try q.awaitTermination() finally q.stop()
+      drain(q, _.awaitTermination())
       spark.table(sinkName).orderBy($"ws", $"event_type")
     }
   }

@@ -90,6 +90,34 @@ class ObservabilitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("txn keys with metadata-only commits start no untagged job, over two reps") {
+    // a range exchange over an empty delta would sample its input on
+    // AQE's QueryStageCreator thread, which carries no key tag
+    val sc = spark.sparkContext
+    val strays = new ConcurrentLinkedQueue[String]()
+    val recorder = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (!tagsOf(e).exists(t => !t.startsWith("spark-")))
+          strays.add(Option(e.properties).fold("")(_.asScala.mkString(" ")))
+    }
+    sc.addSparkListener(recorder)
+    val metrics = QueryMetrics.install(spark)
+    try {
+      val keys = Seq("drop_column", "files", "history", "optimize", "optimize_cluster",
+        "partitions", "rename_mapping", "schema_evolution", "sql_add_default", "sql_alter",
+        "sql_alter_type").map("q_txn_" + _)
+      for (_ <- 1 to 2; key <- keys) {
+        QueryMetrics.tagged(spark, key)(SparkEntry.queries(key)(spark, sf).count())
+        metrics.take(key, 0.0)
+      }
+      assert(metrics.untaggedJobs == 0L,
+        s"${metrics.untaggedJobs} untagged jobs:\n${strays.asScala.mkString("\n")}")
+    } finally {
+      metrics.close()
+      sc.removeSparkListener(recorder)
+    }
+  }
+
   test("q_cf_item_cosine's layers match the plan's shuffle metrics and the status tracker") {
     val sc = spark.sparkContext
     val key = "q_cf_item_cosine"

@@ -99,9 +99,11 @@ class QuerySessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("a stream key leaves no sink view in the caller's catalog; caller listeners see its progress") {
     val progress = new AtomicInteger(0)
+    val terminated = new AtomicInteger(0)
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.incrementAndGet()
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
         progress.incrementAndGet()
     }
@@ -114,7 +116,25 @@ class QuerySessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
       while (progress.get == 0 && System.nanoTime() < deadline) Thread.sleep(50)
       assert(progress.get > 0, "the caller's listener saw no progress events")
+      // the clone's bus is dropped only after this event went through it
+      assert(terminated.get == 1, s"${terminated.get} terminated events, not 1")
     } finally spark.streams.removeListener(listener)
+  }
+
+  test("drained stream keys leave no streaming listener bus on the context") {
+    // SparkContext.listenerBus and its listeners are private[spark]
+    def streamBuses(): Int = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("listeners").invoke(bus)
+        .asInstanceOf[java.util.List[AnyRef]].toArray.toSeq
+        .count(_.getClass.getSimpleName == "StreamingQueryListenerBus")
+    }
+    assert(key("q_stream_session").collect().nonEmpty)
+    val before = streamBuses()
+    (1 to 3).foreach(_ => assert(key("q_stream_session").collect().nonEmpty))
+    assert(streamBuses() == before,
+      s"${streamBuses() - before} listener buses left by three stream runs")
   }
 
   test("a drained stream key's session is released once its frame is dropped") {

@@ -353,6 +353,24 @@ class TxnSpec extends SparkSpec {
       java.nio.file.Paths.get(root, "_txn_log", "v1.schema")))
     assert(audit == "ADD|score|7")
     TxnLog.destroy(root)
+    // a multi-table commit ADDing a column to a MAPPED (renamed) table
+    // stages the same schema entry and mapping extension as commit
+    val mapped = freshRoot("schema_mapped")
+    val other = freshRoot("schema_other")
+    Seq(mapped, other).foreach(r =>
+      TxnLog.commit(spark, r, _ => (upserts(1L -> 10L), Seq((1L, 1L)))))
+    TxnLog.renameColumn(spark, mapped, "value", "balance")
+    val extra = Seq((1L, 5L)).toDF("key", "extra").withColumn("op", lit("upsert"))
+    val multi = TxnLog.commitMulti(spark, Seq(
+      mapped -> ((_: DataFrame) => (extra, Seq((1L, 1L)): TxnLog.KeyRanges)),
+      other -> ((_: DataFrame) => (upserts(2L -> 20L), Seq((2L, 2L)): TxnLog.KeyRanges))))
+    val vm = multi.head.version
+    val back = TxnLog.read(spark, mapped, vm)
+    assert(back.columns.toSeq == Seq("key", "balance", "extra"))
+    assert(back.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ==
+      Seq((1L, 10L, 5L)))
+    assert(TxnLog.schemaChanged(mapped, vm), "the multi-table ADD COLUMN must be audited")
+    TxnLog.destroy(mapped); TxnLog.destroy(other)
   }
 
   test("a crashed writer's claim is invisible and does not block progress") {
@@ -376,7 +394,20 @@ class TxnSpec extends SparkSpec {
     assert(state(root) == Map(1L -> 2L))
     assert(new java.io.File(root, "_txn_log/v1.commit").exists(),
       "the stolen slot must now carry a real commit marker")
-    TxnLog.destroy(root)
+    // a two-table transaction steals an orphan on ONE of its tables
+    // the same way, instead of counting it as a clash and giving up
+    val other = freshRoot("crash_other")
+    TxnLog.commit(spark, other, _ => (upserts(1L -> 1L), Seq((1L, 1L))))
+    val orphan = new java.io.File(other, "_txn_log/v1.claim")
+    assert(orphan.createNewFile())
+    assert(orphan.setLastModified(System.currentTimeMillis() - 60000L))
+    val multi = TxnLog.commitMulti(spark,
+      Seq(root -> (incTxn(Seq(1L), 1L) _), other -> (incTxn(Seq(1L), 1L) _)),
+      claimTimeoutMs = 500L)
+    assert(multi.map(_.version) == Seq(2L, 1L),
+      "the multi-table writer must commit INTO the stolen slot")
+    assert(state(root) == Map(1L -> 3L) && state(other) == Map(1L -> 2L))
+    TxnLog.destroy(root); TxnLog.destroy(other)
   }
 
   test("a live owner's heartbeat protects its claim from being stolen") {
@@ -402,5 +433,53 @@ class TxnSpec extends SparkSpec {
     assert(claim.exists(), "a heartbeating claim must not be stolen")
     alive.set(false); owner.join()
     TxnLog.destroy(root)
+  }
+
+  test("a two-table commit waits out a live owner's claim and commits at the next version") {
+    val a = freshRoot("live_a")
+    val b = freshRoot("live_b")
+    Seq(a, b).foreach(r =>
+      TxnLog.commit(spark, r, _ => (upserts(1L -> 1L), Seq((1L, 1L)))))
+    // a foreign writer claims a's v1 and holds it, heartbeating, for
+    // 1.5 s before it publishes — longer than ten quick retries
+    val claimed = new java.util.concurrent.CountDownLatch(1)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val foreign = new Thread(() =>
+      try {
+        TxnLog.commit(spark, a, _ => (upserts(5L -> 5L), Seq((5L, 5L))),
+          prePublish = _ => { claimed.countDown(); Thread.sleep(1500L) })
+        ()
+      } catch { case e: Throwable => failure.set(e); claimed.countDown() })
+    foreign.start()
+    assert(claimed.await(60L, java.util.concurrent.TimeUnit.SECONDS))
+    val stats = TxnLog.commitMulti(spark,
+      Seq(a -> (incTxn(Seq(1L), 1L) _), b -> (incTxn(Seq(1L), 1L) _)))
+    foreign.join()
+    assert(failure.get() == null, s"foreign writer failed: ${failure.get()}")
+    assert(stats.map(_.version) == Seq(2L, 1L),
+      "the waiting writer must commit after the owner's v1")
+    assert(stats.map(_.conflicts) == Seq(0, 0), "disjoint writes rebase without a clash")
+    assert(state(a) == Map(1L -> 2L, 5L -> 5L) && state(b) == Map(1L -> 2L))
+    TxnLog.destroy(a); TxnLog.destroy(b)
+  }
+
+  test("a single-table and a two-table commit leave exactly the files they always wrote") {
+    val a = freshRoot("files_a")
+    val b = freshRoot("files_b")
+    TxnLog.commit(spark, a, _ => (upserts(1L -> 1L), Seq((1L, 1L))))
+    TxnLog.commitMulti(spark, Seq(
+      a -> ((_: DataFrame) => (upserts(2L -> 2L), Seq((2L, 2L)): TxnLog.KeyRanges)),
+      b -> ((_: DataFrame) => (upserts(2L -> 20L), Seq((2L, 2L)): TxnLog.KeyRanges))))
+    // the transaction token in a name is random: pin its shape only
+    def names(dir: String): Seq[String] =
+      new java.io.File(dir).listFiles().map(_.getName.replaceAll(
+        "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<token>"))
+        .toSeq.sorted
+    assert(names(a) == Seq("_txn_log", "delta_v0", "delta_v1", "snapshot_v0", "snapshot_v1"))
+    assert(names(s"$a/_txn_log") == Seq("mtxn_<token>.coord",
+      "v0.claim", "v0.commit", "v0.meta", "v1.claim", "v1.commit", "v1.meta"))
+    assert(names(b) == Seq("_txn_log", "delta_v0", "snapshot_v0"))
+    assert(names(s"$b/_txn_log") == Seq("v0.claim", "v0.commit", "v0.meta"))
+    TxnLog.destroy(a); TxnLog.destroy(b)
   }
 }
