@@ -169,8 +169,16 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** Register every fixture table as a temp view (for SQL-text entry
-    * points like GROUP BY GROUPING SETS). Idempotent per session. */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
+  /** `body` built on a clone of `spark` ([[QuerySession]]) that has
+    * every fixture table as a temp view, for SQL-text entry points
+    * like GROUP BY GROUPING SETS. Views, temp functions and helper
+    * views that `body` creates stay in the clone, so a caller's own
+    * `lineitem` view is never replaced. The result is bound to the
+    * clone. */
+  def withViews(spark: SparkSession, sfDir: String)(
+      body: SparkSession => DataFrame): DataFrame =
+    QuerySession(spark, Nil) { spark =>
+      names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
+      body(spark)
+    }
 }

@@ -1,13 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native Catalyst expression for cosine similarity over two
   * array<float> columns (SURVEY.md §4.3's sanctioned stretch: promote
@@ -92,40 +91,7 @@ case class CosineSim(left: Expression, right: Expression)
 }
 
 object CosineSim {
-  val NAME = "graft_cosine_sim"
-
-  private[graft] val info = new ExpressionInfo(classOf[CosineSim].getName, NAME)
-  private[graft] val builder: Seq[Expression] => Expression = {
-    case Seq(a, b) => CosineSim(a, b)
-    case exprs => throw new IllegalArgumentException(
-      s"$NAME expects 2 arguments, got ${exprs.size}")
-  }
-
-  /** Idempotent per-session registration (the harness constructs the
-    * SparkSession, so operators self-register instead of relying on
-    * spark.sql.extensions being set). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(NAME), info, builder)
-}
-
-/** SparkSessionExtensions hook for library users:
-  * `spark.sql.extensions=graft.functions.GraftExtensions` injects the
-  * native functions at session build time. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // reuse the arity/foldability-checked builders so the extension path
-    // and per-session register() path reject malformed calls identically
-    ext.injectFunction(
-      (FunctionIdentifier(CosineSim.NAME), CosineSim.info, CosineSim.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(RollingHash.NAME), RollingHash.info,
-        RollingHash.builder))
-    ext.injectFunction(
-      (FunctionIdentifier(KmvAgg.NAME), KmvAgg.info, KmvAgg.builder))
-    // whole-operator extension: partial/final per-key top-k, plus the
-    // conf-gated rewrite that swaps it in for row_number()<=k windows
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.TopKRewriteRule)
-  }
+  /** `graft_cosine_sim(a, b)` over two array<float> columns. */
+  def apply(a: Column, b: Column): Column =
+    Bridge.column(a, b)(e => new CosineSim(e(0), e(1)))
 }

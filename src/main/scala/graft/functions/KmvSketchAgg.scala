@@ -3,12 +3,12 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream,
   DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** KMV (k-minimum-values) distinct sketch as a custom
@@ -33,9 +33,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * blob: the caller derives h₍ₖ₎ and the estimate in plain SQL, and
   * the oracle reproduces every byte.
   *
-  * Registered as `graft_kmv(hashCol, k)`; k must be a foldable
-  * positive integer (it sizes per-group state, so it cannot vary by
-  * row).
+  * Called as `KmvAgg(hashCol, k)`; k is a positive integer (it sizes
+  * per-group state, so it cannot vary by row).
   */
 case class KmvAgg(child: Expression, k: Int,
     override val mutableAggBufferOffset: Int = 0,
@@ -110,23 +109,12 @@ case class KmvAgg(child: Expression, k: Int,
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): KmvAgg =
     copy(child = newChildren.head)
-  override def prettyName: String = KmvAgg.NAME
+  override def prettyName: String = "graft_kmv"
 }
 
 object KmvAgg {
-  val NAME = "graft_kmv"
-
-  private[graft] val info = new ExpressionInfo(classOf[KmvAgg].getName, NAME)
-  private[graft] val builder: Seq[Expression] => Expression = {
-    case Seq(child, kExpr) if kExpr.foldable =>
-      KmvAgg(child, kExpr.eval().asInstanceOf[Number].intValue())
-    case exprs => throw new IllegalArgumentException(
-      s"$NAME expects (hashCol, foldable k), got ${exprs.size} args")
-  }
-
-  /** Idempotent per-session registration (same contract as
-    * [[CosineSim.register]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(NAME), info, builder)
+  /** `graft_kmv(hash, k)`: the aggregate of the `k` smallest distinct
+    * values of a bigint column. */
+  def apply(hash: Column, k: Int): Column =
+    Bridge.column(hash)(e => new KmvAgg(e(0), k).toAggregateExpression())
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -66,17 +66,7 @@ case class RollingHash(child: Expression) extends UnaryExpression {
 }
 
 object RollingHash {
-  val NAME = "graft_rolling_hash"
-
-  private[graft] val info = new ExpressionInfo(classOf[RollingHash].getName, NAME)
-  private[graft] val builder: Seq[Expression] => Expression = {
-    case Seq(c) => RollingHash(c)
-    case exprs => throw new IllegalArgumentException(
-      s"$NAME expects 1 argument, got ${exprs.size}")
-  }
-
-  /** Idempotent per-session registration (see [[CosineSim.register]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(NAME), info, builder)
+  /** `graft_rolling_hash(text)` over a string column. */
+  def apply(text: Column): Column =
+    Bridge.column(text)(e => new RollingHash(e(0)))
 }

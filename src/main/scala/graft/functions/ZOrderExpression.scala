@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression computing the Z-order (Morton) key of
@@ -70,7 +70,9 @@ case class ZOrder(left: Expression, right: Expression)
 }
 
 object ZOrder {
-  val NAME = "graft_zorder"
+  /** `graft_zorder(x, y)` over two integral columns. */
+  def apply(x: Column, y: Column): Column =
+    Bridge.column(x, y)(e => new ZOrder(e(0), e(1)))
 
   private[functions] def integral(t: DataType): Boolean = t match {
     case ByteType | ShortType | IntegerType | LongType => true
@@ -91,16 +93,4 @@ object ZOrder {
     }
     spread(x) | (spread(y) << 1)
   }
-
-  private val info = new ExpressionInfo(classOf[ZOrder].getName, NAME)
-  private val builder: Seq[Expression] => Expression = {
-    case Seq(x, y) => ZOrder(x, y)
-    case exprs => throw new IllegalArgumentException(
-      s"$NAME expects 2 arguments, got ${exprs.size}")
-  }
-
-  /** Idempotent per-session registration (see [[CosineSim.register]]). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(NAME), info, builder)
 }

@@ -241,12 +241,7 @@ object AggOps {
 
   /** Explicit GROUPING SETS via the SQL entry point (§3.3). */
   def aggGroupingSets(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.registerViews(spark, sfDir)
-    spark.sql(
-      s"""SELECT r_name, n_name, COUNT(*) AS n_nations
-         |FROM nation JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY GROUPING SETS ((r_name, n_name), (r_name), ())
-         |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin)
+    Tables.withViews(spark, sfDir)(_.sql(aggGroupingSetsSql))
   }
 
   val aggGroupingSetsSql: String =
@@ -754,14 +749,13 @@ object AggOps {
   def aggKmvDistinct(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.Udfs.rnd6
-    graft.functions.KmvAgg.register(spark)
     val P31 = Int.MaxValue.toLong
     val li = Tables.lineitem(spark, sfDir)
       .select($"l_returnflag", $"l_partkey",
         expr(s"CAST(conv(substring(md5(CAST(l_partkey AS STRING)), 1, 15), 16, 10) AS BIGINT) % $P31")
           .as("h"))
     li.groupBy($"l_returnflag")
-      .agg(expr(s"graft_kmv(h, $KMV_K)").as("mins"),
+      .agg(graft.functions.KmvAgg(col("h"), KMV_K).as("mins"),
         countDistinct($"l_partkey").as("n_exact"))
       // a group with < k distinct hashes has no kth minimum: drop it,
       // mirroring the oracle's `rn = k` inner join (otherwise Spark

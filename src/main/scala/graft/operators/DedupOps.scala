@@ -668,13 +668,12 @@ object DedupOps {
     * [[UdfOps.udfCosine]]. */
   def dedupEmbed(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSim.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val a = e.select($"label", $"vec_id".as("vec_a"), $"embedding".as("ea"))
     val b = e.select($"label".as("lb"), $"vec_id".as("vec_b"), $"embedding".as("eb"))
     a.join(b, $"label" === $"lb" && $"vec_a" < $"vec_b")
       .select($"label", $"vec_a", $"vec_b",
-        rnd6(expr("graft_cosine_sim(ea, eb)")).as("cos_sim"))
+        rnd6(graft.functions.CosineSim(col("ea"), col("eb"))).as("cos_sim"))
       .filter($"cos_sim" >= 0.3)
       .orderBy($"label", $"vec_a", $"vec_b")
   }

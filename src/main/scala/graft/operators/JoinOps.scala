@@ -725,7 +725,7 @@ object JoinOps {
     def contains(k: Long): Boolean = bf.mightContain(k)
   }
 
-  /** PK-FK JOIN ELIMINATION ([[graft.plans.JoinEliminationRule]]):
+  /** PK-FK JOIN ELIMINATION ([[graft.plans.JoinElimination]]):
     * the BI-tool query shape — fact joined to its parent table "just
     * in case", grouping and measuring fact columns only. With
     * lineitem.l_orderkey → orders.o_orderkey declared (total FK,
@@ -739,19 +739,18 @@ object JoinOps {
   def joinElimination(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.engine.Exact._
-    import graft.plans.JoinEliminationRule
-    JoinEliminationRule.register(JoinEliminationRule.FkDef(
-      "lineitem.parquet", "l_orderkey", "orders.parquet", "o_orderkey"))
+    import graft.plans.{JoinElimination, MvRewrite}
     val raw = Tables.lineitem(spark, sfDir)
       .join(Tables.orders(spark, sfDir), $"l_orderkey" === $"o_orderkey")
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"), xsum($"l_quantity").as("sum_qty"))
-    val rewritten = JoinEliminationRule.force(
+    val rewritten = JoinElimination(Seq(JoinElimination.FkDef(
+        "lineitem.parquet", "l_orderkey", "orders.parquet", "o_orderkey")))(
       raw.asInstanceOf[org.apache.spark.sql.classic.Dataset[
         org.apache.spark.sql.Row]].queryExecution.analyzed)
-    require(!graft.plans.MvRewriteRule.readsPath(rewritten, "orders.parquet"),
+    require(!MvRewrite.readsPath(rewritten, "orders.parquet"),
       "join elimination did not fire — the plan still reads orders")
-    require(graft.plans.MvRewriteRule.readsPath(rewritten, "lineitem.parquet"),
+    require(MvRewrite.readsPath(rewritten, "lineitem.parquet"),
       "eliminated plan must still read the fact")
     org.apache.spark.sql.graft.Bridge.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], rewritten)

@@ -289,11 +289,10 @@ object MlOps {
   def mlFeatureHash(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.Udfs.rnd6
-    graft.functions.RollingHash.register(spark)
     val toks = Tables.documents(spark, sfDir)
       .select($"doc_id", explode(split(lower($"text"), " ")).as("tok"))
       .select($"doc_id",
-        expr(s"CAST(graft_rolling_hash(tok) % $FH_BUCKETS AS INT)").as("bucket"))
+        (graft.functions.RollingHash(col("tok")) % FH_BUCKETS).cast("int").as("bucket"))
     val perDoc = toks.groupBy($"doc_id").agg(count(lit(1)).as("n_toks"))
     toks.groupBy($"doc_id", $"bucket").agg(count(lit(1)).as("cnt"))
       .join(perDoc, "doc_id")
@@ -465,7 +464,6 @@ object MlOps {
   def mlDbscan(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.Udfs.rnd6
-    graft.functions.CosineSim.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val sample = e.filter($"vec_id" % DB_SAMPLE_MOD === 0)
       .select($"vec_id".as("vb"), $"embedding".as("eb"))
@@ -479,7 +477,7 @@ object MlOps {
         .crossJoin(broadcast(sample))
         .filter($"va" =!= $"vb")
         .select($"va", $"vb",
-          rnd6(expr("graft_cosine_sim(ea, eb)")).as("sim"))
+          rnd6(graft.functions.CosineSim(col("ea"), col("eb"))).as("sim"))
         .filter($"sim" >= DB_EPS)
     }
     // a sampled candidate's FULL degree = how many of all n points

@@ -150,7 +150,6 @@ object MultimodalOps {
     * flip reports row h−1's sum and the oracle match breaks. No
     * shuffle; payloads die map-side. */
   def decoded(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     val enc = RowEncoder.encoderFor(decodedSchema)
     images(spark, sfDir)
       .mapPartitions { rows =>

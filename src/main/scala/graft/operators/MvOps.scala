@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.engine.Tables
-import graft.plans.MvRewriteRule
+import graft.plans.MvRewrite
 
 /** Materialized-view (summary-table) operators — the consumption
-  * side of [[graft.plans.MvRewriteRule]]. The MV is the classic
+  * side of [[graft.plans.MvRewrite]]. The MV is the classic
   * lineitem rollup by (l_returnflag, l_linestatus): COUNT plus the
   * DECIMAL(38,6) partial sums the library's exact-sum discipline
   * already uses everywhere, so any xsum-shaped query over a subset
@@ -49,14 +49,12 @@ object MvOps {
   }
 
   private[graft] def mvDef(spark: SparkSession, sfDir: String)
-      : MvRewriteRule.MvDef =
-    MvRewriteRule.MvDef(
-      // the FULL fact path, not the bare file name: defs for several
-      // scale factors coexist in one session (register keeps one per
-      // mvPath), and a bare-suffix match would let the first
-      // registered MV answer ANOTHER corpus's fact scan — wrong rows,
-      // found by the round-13 min-rows sweep running sf0.01 keys in
-      // the same session as the sf0.001 spec suite
+      : MvRewrite.MvDef =
+    MvRewrite.MvDef(
+      // the FULL fact path, not the bare file name: a bare-suffix
+      // match would let this corpus's MV answer ANOTHER corpus's fact
+      // scan — wrong rows, found by the round-13 min-rows sweep
+      // running sf0.01 keys in the same session as the sf0.001 specs
       factSuffix = s"$sfDir/lineitem.parquet",
       mvPath = mvDir(spark, sfDir),
       keys = Seq("l_returnflag", "l_linestatus"),
@@ -66,7 +64,7 @@ object MvOps {
 
   /** The VERBATIM idiomatic fact query (group lineitem by a subset
     * of the MV keys, count + exact sums), transparently answered by
-    * the summary: [[MvRewriteRule]] rewrites the analyzed plan so
+    * the summary: [[MvRewrite]] rewrites the analyzed plan so
     * the scan reads |flag×status| MV rows instead of the fact — at
     * 100 TB that is the difference between a full fact pass and a
     * metadata-sized read, for zero change in what the user writes.
@@ -76,17 +74,16 @@ object MvOps {
   def mvRewrite(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.engine.Exact._
-    MvRewriteRule.register(mvDef(spark, sfDir))
     val raw = Tables.lineitem(spark, sfDir)
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"),
         xsum($"l_quantity").as("sum_qty"),
         xsum($"l_extendedprice").as("sum_price"))
-    val rewritten = MvRewriteRule.force(
+    val rewritten = MvRewrite(Seq(mvDef(spark, sfDir)))(
       raw.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
         .queryExecution.analyzed)
     require(
-      MvRewriteRule.readsPath(rewritten, "lineitem_mv_flag_status"),
+      MvRewrite.readsPath(rewritten, "lineitem_mv_flag_status"),
       "MV rewrite did not fire — the key would silently scan the fact")
     org.apache.spark.sql.graft.Bridge.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], rewritten)

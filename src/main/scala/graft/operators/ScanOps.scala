@@ -25,7 +25,6 @@ object ScanOps {
   /** Full scan. lineitem has NO unique key (dup (orderkey, linenumber)
     * pairs exist) — the canonical order must cover every column. */
   def scanParquet(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     val li = Tables.lineitem(spark, sfDir)
     li.orderBy(li.columns.map(col): _*)
   }
@@ -460,17 +459,14 @@ object ScanOps {
       newestUnder(src) <= marker.lastModified() &&
       java.nio.file.Files.readString(spec.toPath) == want
     if (!fresh) {
-      graft.functions.ZOrder.register(spark)
       // repartition BY tile before the partitioned write — one file
       // per directory, not (shuffle partitions × tiles) fragments.
       Tables.lineitem(spark, sfDir)
-        .withColumn("zx", org.apache.spark.sql.functions.expr(
-          "cast(l_orderkey % 256 as int)"))
-        .withColumn("zy", org.apache.spark.sql.functions.expr(
-          "cast(l_partkey % 256 as int)"))
-        .withColumn("zb", org.apache.spark.sql.functions.expr(
-          s"cast((graft_zorder(zx, zy) >> $Z_SHIFT) as int)"))
-        .repartition(org.apache.spark.sql.functions.col("zb"))
+        .withColumn("zx", expr("cast(l_orderkey % 256 as int)"))
+        .withColumn("zy", expr("cast(l_partkey % 256 as int)"))
+        .withColumn("zb", shiftright(graft.functions.ZOrder(col("zx"),
+          col("zy")), Z_SHIFT).cast("int"))
+        .repartition(col("zb"))
         .write.mode("overwrite").partitionBy("zb").parquet(path)
       java.nio.file.Files.writeString(spec.toPath, want)
     }
@@ -620,13 +616,12 @@ object ScanOps {
       newestUnder(src) <= marker.lastModified() &&
       java.nio.file.Files.readString(spec.toPath) == want
     if (!fresh) {
-      graft.functions.ZOrder.register(spark)
       Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"),
           col("l_returnflag"))
         .withColumn("zx", expr("cast(l_orderkey % 256 as int)"))
         .withColumn("zy", expr("cast(l_partkey % 256 as int)"))
-        .withColumn("z", expr("graft_zorder(zx, zy)"))
+        .withColumn("z", graft.functions.ZOrder(col("zx"), col("zy")))
         .repartitionByRange(16, col("z"))
         .drop("z")
         .write.mode("overwrite").parquet(path)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.{DfCache, Tables}
 import graft.functions.Udfs
 import graft.functions.Udfs.{rnd6, sqlRnd6}
+import graft.functions.CosineSim
 
 /** Similarity search over the embedding column (north-star surface):
   * brute-force cosine top-k as the exactness baseline, and an
@@ -39,7 +40,6 @@ object SimOps {
     * corpus (self excluded), rank by rounded cosine w/ id tiebreak. */
   def simsearchTopk(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSim.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val q = e.filter($"vec_id" < N_QUERIES)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))
@@ -47,7 +47,7 @@ object SimOps {
     e.crossJoin(broadcast(q))
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id",
-        rnd6(expr("graft_cosine_sim(embedding, qv)")).as("cos_sim"))
+        rnd6(CosineSim(col("embedding"), col("qv"))).as("cos_sim"))
       .withColumn("rk", row_number().over(w))
       .filter($"rk" <= TOP_K)
       .orderBy($"query_id", $"rk")
@@ -84,14 +84,13 @@ object SimOps {
     * variants are measured against. */
   def simsearchRange(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSim.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val q = e.filter($"vec_id" < N_QUERIES)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))
     e.crossJoin(broadcast(q))
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id",
-        rnd6(expr("graft_cosine_sim(embedding, qv)")).as("cos_sim"))
+        rnd6(CosineSim(col("embedding"), col("qv"))).as("cos_sim"))
       .filter($"cos_sim" >= RANGE_THRESH)
       .orderBy($"query_id", $"cos_sim".desc, $"vec_id".asc)
   }
@@ -113,7 +112,6 @@ object SimOps {
     * in recall, not in determinism). */
   def simsearchIvf(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSim.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     // centroids: avg per (label, dim) — decimal-exact mean
     val dims = e.select($"label", posexplode($"embedding").as(Seq("dim", "v")))
@@ -129,7 +127,7 @@ object SimOps {
     val wProbe = Window.partitionBy($"query_id").orderBy($"c_sim".desc, $"c_label".asc)
     val probed = q.crossJoin(broadcast(cent))
       .select($"query_id", $"qv", $"c_label",
-        rnd6(expr("graft_cosine_sim(qv, centroid)")).as("c_sim"))
+        rnd6(CosineSim(col("qv"), col("centroid"))).as("c_sim"))
       .withColumn("prk", row_number().over(wProbe))
       .filter($"prk" <= NPROBE)
       .select($"query_id", $"qv", $"c_label")
@@ -137,7 +135,7 @@ object SimOps {
     val wK = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id".asc)
     e.join(broadcast(probed), $"label" === $"c_label" && $"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id", $"label",
-        rnd6(expr("graft_cosine_sim(embedding, qv)")).as("cos_sim"))
+        rnd6(CosineSim(col("embedding"), col("qv"))).as("cos_sim"))
       .withColumn("rk", row_number().over(wK))
       .filter($"rk" <= TOP_K)
       .orderBy($"query_id", $"rk")
@@ -203,7 +201,6 @@ object SimOps {
     * centroid training pass. */
   def simsearchLsh(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSim.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .withColumn("bucket", expr(lshSigExpr("embedding")))
     val q = e.filter($"vec_id" < N_QUERIES)
@@ -212,7 +209,7 @@ object SimOps {
     val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id".asc)
     e.join(broadcast(q), $"bucket" === $"q_bucket" && $"vec_id" =!= $"query_id")
       .select($"query_id", $"bucket", $"vec_id",
-        rnd6(expr("graft_cosine_sim(embedding, qv)")).as("cos_sim"))
+        rnd6(CosineSim(col("embedding"), col("qv"))).as("cos_sim"))
       .withColumn("rk", row_number().over(w))
       .filter($"rk" <= TOP_K)
       .orderBy($"query_id", $"rk")
@@ -259,7 +256,6 @@ object SimOps {
     * oracle is identical. */
   def simsearchLshPruned(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSim.register(spark)
     val corpus = spark.read.parquet(lshLayoutDir(spark, sfDir))
     val q = Tables.embeddings(spark, sfDir)
       .filter($"vec_id" < N_QUERIES)
@@ -269,7 +265,7 @@ object SimOps {
     corpus.join(broadcast(q),
         $"bucket" === $"q_bucket" && $"vec_id" =!= $"query_id")
       .select($"query_id", $"bucket".cast("bigint").as("bucket"), $"vec_id",
-        rnd6(expr("graft_cosine_sim(embedding, qv)")).as("cos_sim"))
+        rnd6(CosineSim(col("embedding"), col("qv"))).as("cos_sim"))
       .withColumn("rk", row_number().over(w))
       .filter($"rk" <= TOP_K)
       .orderBy($"query_id", $"rk")
@@ -666,7 +662,6 @@ object SimOps {
     * vec_id over rnd6'd scores. */
   def simsearchQuantized(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSim.register(spark)
     val qz = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding",
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -696,7 +691,7 @@ object SimOps {
         orderSpec = Seq("approx_cos" -> false, "vec_id" -> true),
         k = TOP_K * OVERFETCH, rankName = "ark")
       .select($"query_id", $"vec_id", $"approx_cos",
-        rnd6(expr("graft_cosine_sim(embedding, qemb)")).as("cos_sim"))
+        rnd6(CosineSim(col("embedding"), col("qemb"))).as("cos_sim"))
     graft.plans.TopKPerKey.topK(cands,
         keyCols = Seq("query_id"),
         orderSpec = Seq("cos_sim" -> false, "vec_id" -> true),
@@ -837,7 +832,6 @@ object SimOps {
   def simsearchIndexIncremental(spark: SparkSession, sfDir: String)
       : DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSim.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val base = e.filter($"vec_id" % BATCH_MOD =!= 0)
     val batch = e.filter($"vec_id" % BATCH_MOD === 0)
@@ -855,7 +849,7 @@ object SimOps {
       .orderBy($"a_sim".desc, $"c_label".asc)
     val assigned = batch.crossJoin(broadcast(cent))
       .select($"vec_id", $"embedding",
-        rnd6(expr("graft_cosine_sim(embedding, centroid)")).as("a_sim"),
+        rnd6(CosineSim(col("embedding"), col("centroid"))).as("a_sim"),
         $"c_label")
       .withColumn("ark", row_number().over(wAssign))
       .filter($"ark" === 1)
@@ -870,7 +864,7 @@ object SimOps {
       .orderBy($"c_sim".desc, $"c_label".asc)
     val probed = q.crossJoin(broadcast(cent))
       .select($"query_id", $"qv", $"c_label",
-        rnd6(expr("graft_cosine_sim(qv, centroid)")).as("c_sim"))
+        rnd6(CosineSim(col("qv"), col("centroid"))).as("c_sim"))
       .withColumn("prk", row_number().over(wProbe))
       .filter($"prk" <= NPROBE)
       .select($"query_id", $"qv", $"c_label")
@@ -879,7 +873,7 @@ object SimOps {
     index.join(broadcast(probed),
         $"label" === $"c_label" && $"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id", $"src",
-        rnd6(expr("graft_cosine_sim(embedding, qv)")).as("cos_sim"))
+        rnd6(CosineSim(col("embedding"), col("qv"))).as("cos_sim"))
       .withColumn("rk", row_number().over(wK))
       .filter($"rk" <= TOP_K)
       .orderBy($"query_id", $"rk")
@@ -1018,7 +1012,6 @@ object SimOps {
     // at any corpus scale.
     graft.engine.QuerySession(spark,
         graft.engine.QuerySession.SmallIterative) { spark =>
-      graft.functions.CosineSim.register(spark)
       simsearchHnswInner(spark, sfDir)
     }
 
@@ -1079,7 +1072,7 @@ object SimOps {
       .join(embB.select($"vec_id".as("dst"), $"embedding".as("dv")),
         Seq("dst"))
       .select($"lvl", $"src", $"dst",
-        rnd6(expr("graft_cosine_sim(sv, dv)")).as("sim"))
+        rnd6(CosineSim(col("sv"), col("dv"))).as("sim"))
     val wM = Window.partitionBy($"lvl", $"src")
       .orderBy($"sim".desc, $"dst".asc)
     val topM = candAll
@@ -1118,7 +1111,6 @@ object SimOps {
       .select($"vec_id", $"level", $"embedding").collect()
       .map(r => (r.getLong(0), r.getInt(1),
         r.getSeq[Float](2).toArray))
-    val upperIds = upperNodes.map(_._1).toSet
     val upperVec = upperNodes.map(t => t._1 -> t._3).toMap
     // the cap is pushed INTO the edge collect (both endpoints must be
     // capped nodes), so driver memory is bounded by O(cap × M) even
@@ -1184,7 +1176,7 @@ object SimOps {
       cands.join(emb, $"node" === $"nid")
         .join(broadcast(q), Seq("query_id"))
         .select($"query_id", $"node",
-          rnd6(expr("graft_cosine_sim(nv, qv)")).as("sim"))
+          rnd6(CosineSim(col("nv"), col("qv"))).as("sim"))
 
     // --- base-layer search: EF-wide beam, all rounds distributed,
     // entered at the driver-descent seeds

@@ -21,8 +21,7 @@ object SqlOps {
   /** Orders priced above their customer's decimal-exact average order
     * price — correlated scalar subquery, decorrelated by Catalyst. */
   def subqueryScalar(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.registerViews(spark, sfDir)
-    spark.sql(subqueryScalarSql)
+    Tables.withViews(spark, sfDir)(_.sql(subqueryScalarSql))
   }
 
   val subqueryScalarSql: String =
@@ -36,8 +35,7 @@ object SqlOps {
   /** Customers with at least one urgent order — IN subquery, planned
     * as a left-semi join. */
   def subqueryIn(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.registerViews(spark, sfDir)
-    spark.sql(subqueryInSql)
+    Tables.withViews(spark, sfDir)(_.sql(subqueryInSql))
   }
 
   val subqueryInSql: String =
@@ -56,8 +54,7 @@ object SqlOps {
     * in the dense fixture, so the unqualified form passed vacuously
     * with 0 rows. */
   def subqueryNotExists(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.registerViews(spark, sfDir)
-    spark.sql(subqueryNotExistsSql)
+    Tables.withViews(spark, sfDir)(_.sql(subqueryNotExistsSql))
   }
 
   val subqueryNotExistsSql: String =
@@ -81,8 +78,7 @@ object SqlOps {
     * operator in the physical plan. Both engines implement standard
     * SQL three-valued NOT IN, so one SQL string serves both. */
   def subqueryNotIn(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.registerViews(spark, sfDir)
-    spark.sql(subqueryNotInSql)
+    Tables.withViews(spark, sfDir)(_.sql(subqueryNotInSql))
   }
 
   val subqueryNotInSql: String =
@@ -101,10 +97,11 @@ object SqlOps {
     * part never touches the fact table, so the plan at 100 TB is one
     * scan + one small join. */
   def recursiveCte(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.registerViews(spark, sfDir)
-    // Same query as the oracle; only the integer-division spelling
-    // differs by dialect (Spark `div`, DuckDB `//`).
-    spark.sql(recursiveCteSql.replace("n // 12", "n div 12"))
+    Tables.withViews(spark, sfDir) { spark =>
+      // Same query as the oracle; only the integer-division spelling
+      // differs by dialect (Spark `div`, DuckDB `//`).
+      spark.sql(recursiveCteSql.replace("n // 12", "n div 12"))
+    }
   }
 
   val recursiveCteSql: String =
@@ -131,8 +128,7 @@ object SqlOps {
     * pattern LATERAL expresses directly. Catalyst decorrelates this
     * into a window-style plan rather than executing per-row. */
   def lateralJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.registerViews(spark, sfDir)
-    spark.sql(lateralJoinSql)
+    Tables.withViews(spark, sfDir)(_.sql(lateralJoinSql))
   }
 
   val lateralJoinSql: String =
@@ -157,15 +153,16 @@ object SqlOps {
     * oracle is the same query with the bindings inlined — bind-time
     * substitution is exactly the semantics under test. */
   def sqlParams(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.registerViews(spark, sfDir)
-    spark.sql(
-      s"""SELECT o_orderpriority, COUNT(*) AS n,
-         |  ${sqlXsum("o_totalprice")} AS rev
-         |FROM orders
-         |WHERE o_totalprice > :minprice
-         |  AND o_orderdate >= CAST(:fromdate AS TIMESTAMP)
-         |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
-      Map("minprice" -> PARAM_MINPRICE, "fromdate" -> PARAM_FROMDATE))
+    Tables.withViews(spark, sfDir) { spark =>
+      spark.sql(
+        s"""SELECT o_orderpriority, COUNT(*) AS n,
+           |  ${sqlXsum("o_totalprice")} AS rev
+           |FROM orders
+           |WHERE o_totalprice > :minprice
+           |  AND o_orderdate >= CAST(:fromdate AS TIMESTAMP)
+           |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
+        Map("minprice" -> PARAM_MINPRICE, "fromdate" -> PARAM_FROMDATE))
+    }
   }
 
   val sqlParamsSql: String =
@@ -185,14 +182,15 @@ object SqlOps {
     * the oracle IS that nested form — equality is the semantics
     * proof. */
   def sqlPipe(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.registerViews(spark, sfDir)
-    spark.sql(
-      s"""FROM orders
-         ||> WHERE o_totalprice > 1000.0
-         ||> AGGREGATE COUNT(*) AS n, ${sqlXsum("o_totalprice")} AS rev
-         |   GROUP BY o_orderpriority
-         ||> WHERE n > 5
-         ||> ORDER BY o_orderpriority""".stripMargin)
+    Tables.withViews(spark, sfDir) { spark =>
+      spark.sql(
+        s"""FROM orders
+           ||> WHERE o_totalprice > 1000.0
+           ||> AGGREGATE COUNT(*) AS n, ${sqlXsum("o_totalprice")} AS rev
+           |   GROUP BY o_orderpriority
+           ||> WHERE n > 5
+           ||> ORDER BY o_orderpriority""".stripMargin)
+    }
   }
 
   val sqlPipeSql: String =
@@ -213,18 +211,19 @@ object SqlOps {
     * same arithmetic — which is literally what Spark's analyzer does
     * with the function body. */
   def sqlUdf(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.registerViews(spark, sfDir)
-    spark.sql(
-      """CREATE OR REPLACE TEMPORARY FUNCTION graft_net_line(
-        |  price DOUBLE, disc DOUBLE, tax DOUBLE)
-        |RETURNS DOUBLE
-        |RETURN price * (1.0 - disc) * (1.0 + tax)""".stripMargin)
-    spark.sql(
-      s"""SELECT l_returnflag, COUNT(*) AS n,
-         |  ${sqlXsum("graft_net_line(l_extendedprice, l_discount, l_tax)")}
-         |    AS net_rev
-         |FROM lineitem
-         |GROUP BY 1 ORDER BY l_returnflag""".stripMargin)
+    Tables.withViews(spark, sfDir) { spark =>
+      spark.sql(
+        """CREATE OR REPLACE TEMPORARY FUNCTION graft_net_line(
+          |  price DOUBLE, disc DOUBLE, tax DOUBLE)
+          |RETURNS DOUBLE
+          |RETURN price * (1.0 - disc) * (1.0 + tax)""".stripMargin)
+      spark.sql(
+        s"""SELECT l_returnflag, COUNT(*) AS n,
+           |  ${sqlXsum("graft_net_line(l_extendedprice, l_discount, l_tax)")}
+           |    AS net_rev
+           |FROM lineitem
+           |GROUP BY 1 ORDER BY l_returnflag""".stripMargin)
+    }
   }
 
   val sqlUdfSql: String =
@@ -243,14 +242,15 @@ object SqlOps {
     * same syntax — the oracle uses it directly, making this a
     * two-engine semantics check of the inference rule itself. */
   def sqlGroupByAll(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.registerViews(spark, sfDir)
-    spark.sql(
-      s"""SELECT l_returnflag, l_linestatus,
-         |  YEAR(l_shipdate) AS ship_year,
-         |  COUNT(*) AS n, ${sqlXsum("l_quantity")} AS sum_qty
-         |FROM lineitem
-         |GROUP BY ALL
-         |ORDER BY l_returnflag, l_linestatus, ship_year""".stripMargin)
+    Tables.withViews(spark, sfDir) { spark =>
+      spark.sql(
+        s"""SELECT l_returnflag, l_linestatus,
+           |  YEAR(l_shipdate) AS ship_year,
+           |  COUNT(*) AS n, ${sqlXsum("l_quantity")} AS sum_qty
+           |FROM lineitem
+           |GROUP BY ALL
+           |ORDER BY l_returnflag, l_linestatus, ship_year""".stripMargin)
+    }
   }
 
   val sqlGroupByAllSql: String =
@@ -303,8 +303,7 @@ object SqlOps {
     * natively, so the two engines parse the identical text — the
     * strongest cross-engine check a SQL front end can get. */
   def sqlQualify(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.registerViews(spark, sfDir)
-    graft.plans.QualifySql.sql(spark, qualifyText)
+    Tables.withViews(spark, sfDir)(graft.plans.QualifySql.sql(_, qualifyText))
   }
 
   private val qualifyText: String =

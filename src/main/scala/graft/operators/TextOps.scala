@@ -404,10 +404,9 @@ object TextOps {
     // native codegen kernel — one primitive loop per row instead of a
     // per-character array + two interpreted lambdas (same fold, same
     // oracle; see RollingHashExpression)
-    graft.functions.RollingHash.register(spark)
     Tables.documents(spark, sfDir)
       .select($"doc_id",
-        expr("graft_rolling_hash(text)").as("fingerprint"),
+        graft.functions.RollingHash(col("text")).as("fingerprint"),
         length($"text").as("n_len"))
       .orderBy($"doc_id")
   }

@@ -470,7 +470,6 @@ object TxnOps {
     * table in one query. */
   def txnCatalogRead(spark: SparkSession, sfDir: String): DataFrame =
     QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
-      import spark.implicits._
       val root = ttTable(spark, sfDir)
       val ident = GraftCatalog.ident(root)
       spark.sql(
@@ -638,7 +637,7 @@ object TxnOps {
 
   /** INCREMENTAL MATERIALIZED-VIEW MAINTENANCE pinned to the
     * transaction log — the maintenance side of
-    * [[graft.plans.MvRewriteRule]]'s consumption side: a per-bucket
+    * [[graft.plans.MvRewrite]]'s consumption side: a per-bucket
     * summary (users, total balance, bucket = key % 10) maintained
     * from the commit DELTAS ALONE. Round-10 rewrite: the old form
     * re-read snapshot v−1 once per version to derive retractions —
@@ -1336,7 +1335,6 @@ object TxnOps {
     * instead of deleting the wrong rows. */
   def txnSqlDelete(spark: SparkSession, sfDir: String): DataFrame =
     QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
-      import spark.implicits._
       val root = DfCache.scratch(spark, sfDir, "sqldelete")
       TxnLog.destroy(root)
       TxnLog.init(root)
@@ -1566,7 +1564,6 @@ object TxnOps {
     * `n_versions` pins one commit for the whole DML. */
   def txnSqlUpdate(spark: SparkSession, sfDir: String): DataFrame =
     QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
-      import spark.implicits._
       val root = DfCache.scratch(spark, sfDir, "sqlupdate")
       TxnLog.destroy(root)
       TxnLog.init(root)
@@ -1640,7 +1637,6 @@ object TxnOps {
     * latest read rides along for contrast. */
   def txnTimeTravelTs(spark: SparkSession, sfDir: String): DataFrame =
     QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
-      import spark.implicits._
       val root = DfCache.scratch(spark, sfDir, "ttts")
       TxnLog.destroy(root)
       TxnLog.init(root)
@@ -1784,7 +1780,6 @@ object TxnOps {
     * the Delta/Iceberg added-with-default semantic end to end. */
   def txnSqlAddDefault(spark: SparkSession, sfDir: String): DataFrame =
     QuerySession(spark, Seq(GraftCatalog.Conf)) { spark =>
-      import spark.implicits._
       val root = DfCache.scratch(spark, sfDir, "sqladddef")
       TxnLog.destroy(root)
       TxnLog.init(root)

@@ -64,21 +64,15 @@ object WindowOps {
 
   /** [[rankTopN]] rewritten AUTOMATICALLY: the query is the verbatim
     * idiomatic window formulation — no custom API call — and
-    * [[graft.plans.TopKRewriteRule]] transforms its
+    * [[graft.plans.TopKRewrite]] transforms its
     * `row_number() <= 3` filter-over-window into [[graft.plans
-    * .TopKPerKeyPlan]] (here applied directly to the analyzed plan;
-    * the same rule injects into the optimizer via GraftExtensions
-    * behind spark.graft.topk.rewrite, exercised in Round5Spec). Same
-    * oracle as both siblings: three formulations, one semantics. */
+    * .TopKPerKeyPlan]], applied to the analyzed plan. Same oracle as
+    * both siblings: three formulations, one semantics. */
   def rankTopNAuto(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    graft.plans.TopKPerKey.register(spark)
     val win = rankTopN(spark, sfDir)
-    val rewritten = graft.plans.TopKRewriteRule.force(
+    graft.plans.TopKPerKey.frame(spark, graft.plans.TopKRewrite(
       win.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-        .queryExecution.analyzed)
-    org.apache.spark.sql.graft.Bridge.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], rewritten)
+        .queryExecution.analyzed))
   }
 
   val rankTopNAutoSql: String = rankTopNSql

@@ -219,28 +219,21 @@ object Cbo {
     left.join(buildSide, keys)
   }
 
-  /** Session override for the broadcast budget used by EVERY
-    * stats-driven join decision here ([[join]], [[joinDerived]],
-    * [[reorderJoin]], [[reorderJoinBushy]]) — one knob, so a spec (or
-    * an operator) forcing the shuffle fallback steers every code
-    * path, not just one. Unset → the session's OWN
-    * `spark.sql.autoBroadcastJoinThreshold` (so a session that tunes
-    * Spark's threshold steers the stats-driven joins identically;
-    * a session that DISABLES auto-broadcast with -1 disables
-    * stats-driven broadcasts too). An explicit `broadcastBytes`
-    * argument still wins over the conf. */
-  val BROADCAST_BYTES_CONF = "graft.cbo.broadcastBytes"
-
   /** Sentinel default for broadcastBytes parameters: resolve from the
     * session conf at call time. */
   val USE_CONF_BUDGET: Long = -1L
 
-  def broadcastBudget(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption(BROADCAST_BYTES_CONF)
-      .map(_.toLong).getOrElse {
-        val t = spark.sessionState.conf.autoBroadcastJoinThreshold
-        if (t > 0L) t else 0L // -1 = broadcast disabled → budget 0
-      }
+  /** The broadcast budget of EVERY stats-driven join decision here
+    * ([[join]], [[joinDerived]], [[reorderJoin]], [[reorderJoinBushy]])
+    * unless a call passes its own: the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, so a session that tunes
+    * Spark's threshold (a clone, for a spec forcing the shuffle
+    * fallback) steers every stats-driven join identically, and one
+    * that disables auto-broadcast with -1 disables them too. */
+  def broadcastBudget(spark: org.apache.spark.sql.SparkSession): Long = {
+    val t = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (t > 0L) t else 0L // -1 = broadcast disabled → budget 0
+  }
 
   private def resolveBudget(anyFrame: DataFrame, explicit: Long): Long =
     if (explicit >= 0L) explicit else broadcastBudget(anyFrame.sparkSession)

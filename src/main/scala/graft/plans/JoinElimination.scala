@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** PK-FK JOIN ELIMINATION (the classic constraint-based optimizer
@@ -24,8 +22,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *
   * Conservative by construction — the rewrite fires only when ALL of:
   *  - the join is INNER with a single `fk = pk` equality condition
-  *    matching a REGISTERED [[FkDef]] (registration is the RELY
-  *    declaration: the engine trusts, and the fixture guarantees,
+  *    matching a declared [[FkDef]] (the declaration is the RELY
+  *    constraint: the engine trusts, and the fixture guarantees,
   *    totality + uniqueness + non-null);
   *  - the parent side is a BARE scan of the declared PK table
   *    (column-pruning projections and aliases only — any Filter
@@ -34,27 +32,15 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    references only child-side columns.
   * Anything else bails to the original plan untouched.
   *
-  * Injection mirrors [[MvRewriteRule]]: conf-gated
-  * (`spark.graft.fk.elim=true`) via `experimental
-  * .extraOptimizations`, or applied directly with [[force]]. */
-object JoinEliminationRule extends Rule[LogicalPlan] {
-
-  private[graft] val FLAG = "spark.graft.fk.elim"
+  * A plain function of the analyzed plan and the declared edges,
+  * applied by the key that wants it, like [[MvRewrite]]. */
+object JoinElimination {
 
   /** A declared referential-integrity edge: `fkSuffix.fkCol`
     * references `pkSuffix.pkCol`, with the FK total and non-null and
-    * the PK unique (the registrar's RELY contract). */
+    * the PK unique (the declarer's RELY contract). */
   final case class FkDef(fkSuffix: String, fkCol: String,
       pkSuffix: String, pkCol: String)
-
-  private val defs =
-    new java.util.concurrent.atomic.AtomicReference[Seq[FkDef]](Nil)
-
-  def register(d: FkDef): Unit = {
-    defs.updateAndGet(s => s.filterNot(_ == d) :+ d)
-    ()
-  }
-  def clear(): Unit = defs.set(Nil)
 
   /** Bare scan of a file relation whose path ends in `suffix`,
     * looking through pruning projections and aliases only. */
@@ -84,48 +70,38 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
       case _ => false
     }
 
-  /** The child-side subtree iff `j` is an eliminable declared PK-FK
-    * join (either orientation, either condition order). */
-  private[graft] def fkChildOf(j: Join): Option[LogicalPlan] = j match {
-    case Join(l, r, Inner,
-        Some(EqualTo(a: AttributeReference, b: AttributeReference)), _) =>
-      def orient(fkSide: LogicalPlan, pkSide: LogicalPlan,
-          fa: AttributeReference, pa: AttributeReference): Option[LogicalPlan] =
-        defs.get().collectFirst {
-          case d if fa.name == d.fkCol && pa.name == d.pkCol &&
-            fkSide.outputSet.contains(fa) && pkSide.outputSet.contains(pa) &&
-            isBareScanOf(pkSide, d.pkSuffix) &&
-            readsSuffix(fkSide, d.fkSuffix) => fkSide
-        }
-      orient(l, r, a, b).orElse(orient(l, r, b, a))
-        .orElse(orient(r, l, a, b)).orElse(orient(r, l, b, a))
-    case _ => None
-  }
-
-  private[graft] def force(plan: LogicalPlan): LogicalPlan =
-    plan.transformUp {
-      case p @ Project(_, j: Join) =>
-        fkChildOf(j).filter(fk => p.references.subsetOf(fk.outputSet))
-          .map(fk => p.copy(child = fk)).getOrElse(p)
-      case a @ Aggregate(_, _, j: Join, _) =>
-        fkChildOf(j).filter(fk => a.references.subsetOf(fk.outputSet))
-          .map(fk => a.copy(child = fk)).getOrElse(a)
-      case f @ Filter(_, j: Join) =>
-        fkChildOf(j).filter(fk => f.references.subsetOf(fk.outputSet))
-          .map(fk => f.copy(child = fk)).getOrElse(f)
+  /** The child-side subtree iff `j` is a PK-FK join of one of `defs`
+    * (either orientation, either condition order). */
+  private def fkChildOf(defs: Seq[FkDef], j: Join): Option[LogicalPlan] =
+    j match {
+      case Join(l, r, Inner,
+          Some(EqualTo(a: AttributeReference, b: AttributeReference)), _) =>
+        def orient(fkSide: LogicalPlan, pkSide: LogicalPlan,
+            fa: AttributeReference, pa: AttributeReference)
+            : Option[LogicalPlan] =
+          defs.collectFirst {
+            case d if fa.name == d.fkCol && pa.name == d.pkCol &&
+              fkSide.outputSet.contains(fa) && pkSide.outputSet.contains(pa) &&
+              isBareScanOf(pkSide, d.pkSuffix) &&
+              readsSuffix(fkSide, d.fkSuffix) => fkSide
+          }
+        orient(l, r, a, b).orElse(orient(l, r, b, a))
+          .orElse(orient(r, l, a, b)).orElse(orient(r, l, b, a))
+      case _ => None
     }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString(FLAG, "false") != "true") plan
-    else force(plan)
-}
-
-object JoinElimination {
-  /** Optimizer injection twin of [[MvRewrite.register]]. */
-  def register(spark: SparkSession): Unit = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cs.experimental.extraOptimizations.contains(JoinEliminationRule))
-      cs.experimental.extraOptimizations =
-        cs.experimental.extraOptimizations :+ JoinEliminationRule
-  }
+  /** `plan` with each join of a declared edge in `defs` that nothing
+    * above it reads the parent side of replaced by its child side. */
+  def apply(defs: Seq[FkDef])(plan: LogicalPlan): LogicalPlan =
+    plan.transformUp {
+      case p @ Project(_, j: Join) =>
+        fkChildOf(defs, j).filter(fk => p.references.subsetOf(fk.outputSet))
+          .map(fk => p.copy(child = fk)).getOrElse(p)
+      case a @ Aggregate(_, _, j: Join, _) =>
+        fkChildOf(defs, j).filter(fk => a.references.subsetOf(fk.outputSet))
+          .map(fk => a.copy(child = fk)).getOrElse(a)
+      case f @ Filter(_, j: Join) =>
+        fkChildOf(defs, j).filter(fk => f.references.subsetOf(fk.outputSet))
+          .map(fk => f.copy(child = fk)).getOrElse(f)
+    }
 }

@@ -62,8 +62,6 @@ object MatchRecognize {
       afterMatch: AfterMatchSkip = SkipPastLastRow,
       measuresFor: Seq[String] = Nil): DataFrame = {
     require(define.nonEmpty && define.size <= 26, "1..26 variables")
-    val spark = df.sparkSession
-    import spark.implicits._
 
     val varChar: Map[String, Char] =
       define.zipWithIndex.map { case ((n, _), i) =>

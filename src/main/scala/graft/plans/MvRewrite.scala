@@ -4,14 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{DecimalType, IntegerType}
 
 /** MATERIALIZED-VIEW REWRITE (aggregate navigation — the classic
   * OLAP summary-table answer, Calcite's `MaterializedViewRule`
-  * family re-expressed as one conservative Catalyst rule): an
-  * `Aggregate` over the registered FACT scan whose grouping keys are
+  * family re-expressed as one conservative plan rewrite): an
+  * `Aggregate` over a declared FACT scan whose grouping keys are
   * a SUBSET of a summary table's keys, and whose aggregates are all
   * derivable from the summary's partials (`COUNT(*)` → `SUM(cnt)`,
   * decimal-exact `SUM(col)` → `SUM(sum_col)`), is rewritten to
@@ -29,19 +28,18 @@ import org.apache.spark.sql.types.{DecimalType, IntegerType}
   * not recognize, a Filter between aggregate and scan) bails to the
   * original plan untouched.
   *
-  * Freshness is the registrar's contract (the demo builds the MV
+  * Freshness is the declarer's contract (the demo builds the MV
   * write-once against the immutable fixture; a production table
   * format would pin the MV to a txn-log version and invalidate on
   * commit — see TxnLog's IVM key for the maintenance side).
   *
-  * Injection mirrors [[TopKRewriteRule]]: conf-gated
-  * (`spark.graft.mv.rewrite=true`) via `experimental
-  * .extraOptimizations`, or applied directly with [[force]]. */
-object MvRewriteRule extends Rule[LogicalPlan] {
+  * A plain function of the analyzed plan and the summaries it may
+  * use: the key that wants the rewrite applies it (like
+  * [[TopKRewrite]] and [[JoinElimination]]); no session's optimizer
+  * runs it. */
+object MvRewrite {
 
-  private[graft] val FLAG = "spark.graft.mv.rewrite"
-
-  /** A registered summary table: `mvPath` holds one row per `keys`
+  /** A declared summary table: `mvPath` holds one row per `keys`
     * combination with `cntCol` = COUNT(*) and, per (factCol →
     * mvCol) in `sums`, SUM(CAST(factCol AS DECIMAL(38,6))). */
   final case class MvDef(
@@ -50,15 +48,6 @@ object MvRewriteRule extends Rule[LogicalPlan] {
       keys: Seq[String],
       cntCol: String,
       sums: Map[String, String])
-
-  private val mvs =
-    new java.util.concurrent.atomic.AtomicReference[Seq[MvDef]](Nil)
-
-  def register(mv: MvDef): Unit = {
-    mvs.updateAndGet(s => s.filterNot(_.mvPath == mv.mvPath) :+ mv)
-    ()
-  }
-  def clear(): Unit = mvs.set(Nil)
 
   private val XD = DecimalType(38, 6)
 
@@ -158,28 +147,17 @@ object MvRewriteRule extends Rule[LogicalPlan] {
     Some(Aggregate(groupExprs, outExprs, mvPlan))
   }
 
-  private[graft] def force(plan: LogicalPlan): LogicalPlan =
+  /** `plan` with each aggregate over the fact scan of one of `mvs`
+    * that its summary can answer rewritten to aggregate the summary
+    * instead; any other plan comes back unchanged. */
+  def apply(mvs: Seq[MvDef])(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case agg: Aggregate =>
         bareScan(agg.child) match {
           case Some(lr) =>
-            mvs.get().find(scansFact(lr, _))
+            mvs.find(scansFact(lr, _))
               .flatMap(rewriteOne(agg, _)).getOrElse(agg)
           case None => agg
         }
     }
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString(FLAG, "false") != "true") plan
-    else force(plan)
-}
-
-object MvRewrite {
-  /** Optimizer injection twin of [[TopKRewrite.register]]. */
-  def register(spark: SparkSession): Unit = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cs.experimental.extraOptimizations.contains(MvRewriteRule))
-      cs.experimental.extraOptimizations =
-        cs.experimental.extraOptimizations :+ MvRewriteRule
-  }
 }

@@ -68,7 +68,9 @@ object QualifySql {
   }
 
   /** Rewrite and run `text` against `spark` (tables must already be
-    * resolvable — register views first). Throws
+    * resolvable, e.g. inside [[graft.engine.Tables.withViews]]). A
+    * trailing ORDER BY / LIMIT runs over a helper temp view created in
+    * `spark`, so pass a session of your own, like that clone. Throws
     * IllegalArgumentException on anything outside the declared
     * grammar rather than guessing. */
   def sql(spark: SparkSession, text: String): DataFrame = {

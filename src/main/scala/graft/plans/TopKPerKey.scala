@@ -161,8 +161,6 @@ object TopKPerKeyStrategy extends SparkStrategy {
 }
 
 object TopKPerKey {
-  import scala.jdk.CollectionConverters._
-
   /** Cap on distinct keys held in one partition's partial heap map
     * (see [[PartialTopKPerKeyExec]]); settable per session for tests
     * and for memory-constrained deployments. */
@@ -203,14 +201,20 @@ object TopKPerKey {
     map
   }
 
-  /** Idempotent per-session strategy registration (same pattern as
-    * [[graft.functions.CosineSim.register]]; also injectable at build
-    * time via [[graft.functions.GraftExtensions]]). */
-  def register(spark: SparkSession): Unit = {
+  /** `plan`, which holds a [[TopKPerKeyPlan]], as a frame of `spark`,
+    * with [[TopKPerKeyStrategy]] added to `spark`'s planner once. This
+    * is the one write graft makes to a caller's session: the frame
+    * plans on the session it is bound to, and a caller who goes on to
+    * transform it (recsys's neighbour predictions do) binds the result
+    * to its own session, whose planner must know the node. */
+  private[graft] def frame(spark: SparkSession, plan: LogicalPlan): DataFrame = {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cs.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      cs.experimental.extraStrategies =
-        cs.experimental.extraStrategies :+ TopKPerKeyStrategy
+    val x = cs.experimental
+    x.synchronized {
+      if (!x.extraStrategies.contains(TopKPerKeyStrategy))
+        x.extraStrategies = x.extraStrategies :+ TopKPerKeyStrategy
+    }
+    org.apache.spark.sql.graft.Bridge.ofRows(cs, plan)
   }
 
   /** Public operator surface: top `k` rows per `keyCols`, ordered by
@@ -221,8 +225,6 @@ object TopKPerKey {
       rankName: String = "rk",
       finalPartitions: Option[Int] = None): DataFrame = {
     val cdf = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    val spark = cdf.sparkSession
-    register(spark)
     val analyzed = cdf.queryExecution.analyzed
     def attr(name: String): Attribute = analyzed.output
       .find(_.name == name)
@@ -234,7 +236,7 @@ object TopKPerKey {
         else org.apache.spark.sql.catalyst.expressions.Descending)
     }
     val rankAttr = AttributeReference(rankName, IntegerType, nullable = false)()
-    org.apache.spark.sql.graft.Bridge.ofRows(spark,
+    frame(cdf.sparkSession,
       TopKPerKeyPlan(keys, order, k, rankAttr, analyzed, finalPartitions))
   }
 }

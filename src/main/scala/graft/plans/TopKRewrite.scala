@@ -1,12 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
 
-/** Optimizer rule completing the custom-operator ladder: rewrite the
+/** Plan rewrite completing the custom-operator ladder: rewrite the
   * ubiquitous `row_number() OVER (PARTITION BY k ORDER BY o) <= n`
   * filter-over-window pattern into [[TopKPerKeyPlan]], so the partial/
   * final bounded-heap operator kicks in TRANSPARENTLY — users keep
@@ -36,15 +34,13 @@ import org.apache.spark.sql.types.IntegerType
   * resolve unchanged; [[TopKPerKeyPlan]] output order (child.output
   * :+ rank) equals the Window's.
   *
-  * Injection: opt-in via `spark.graft.topk.rewrite=true` with the
-  * rule injected by [[graft.functions.GraftExtensions]] or
-  * [[TopKRewrite.register]]. Conf-gated because a silently changed
-  * physical plan for every window query in a shared session is the
-  * kind of surprise a library should not spring; the specs exercise
-  * both the injected path and direct application. */
-object TopKRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
+  * A plain function of the analyzed plan, applied by the key that
+  * wants it ([[graft.operators.WindowOps.rankTopNAuto]]): a silently
+  * changed physical plan for every window query in a shared session
+  * is the kind of surprise a library should not spring, so no
+  * session's optimizer runs it. */
+object TopKRewrite extends PredicateHelper {
 
-  private val FLAG = "spark.graft.topk.rewrite"
   private[graft] val MAX_K = 1000
 
   private def bound(e: Expression, rank: Attribute): Option[Int] = e match {
@@ -108,28 +104,10 @@ object TopKRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
          else Filter(rest.reduce(And), projected))
   }
 
-  /** Unconditional application — for callers that hand-apply the
-    * rewrite to one plan ([[graft.operators.WindowOps.rankTopNAuto]])
-    * instead of flipping the session-wide flag. */
-  private[graft] def force(plan: LogicalPlan): LogicalPlan =
+  /** `plan` with each matched filter-over-window replaced by
+    * [[TopKPerKeyPlan]]; plan it with [[TopKPerKey.frame]]. */
+  def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case f: Filter => rewrite(f).getOrElse(f)
     }
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString(FLAG, "false") != "true") plan
-    else force(plan)
-}
-
-object TopKRewrite {
-  /** Idempotent per-session injection of the rule + the strategy it
-    * plans through (same pattern as [[TopKPerKey.register]]). The
-    * rule stays inert until `spark.graft.topk.rewrite=true`. */
-  def register(spark: SparkSession): Unit = {
-    TopKPerKey.register(spark)
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cs.experimental.extraOptimizations.contains(TopKRewriteRule))
-      cs.experimental.extraOptimizations =
-        cs.experimental.extraOptimizations :+ TopKRewriteRule
-  }
 }

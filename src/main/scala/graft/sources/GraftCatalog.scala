@@ -843,7 +843,6 @@ private[graft] class TxnBatchWrite(root: String,
     writeSchema: StructType, truncate: Boolean = false)
     extends org.apache.spark.sql.connector.write.BatchWrite {
   import org.apache.spark.sql.connector.write._
-  import org.apache.spark.sql.catalyst.InternalRow
 
   private val stageDir = new File(root,
     s".insert_stage_${java.util.UUID.randomUUID()}")
@@ -1009,7 +1008,6 @@ private[graft] class TxnDeltaBatchWrite(root: String,
     writeSchema: StructType, scannedVersion: Long)
     extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
   import org.apache.spark.sql.connector.write._
-  import org.apache.spark.sql.catalyst.InternalRow
 
   private val stageDir = new File(root,
     s".rlo_stage_${java.util.UUID.randomUUID()}")

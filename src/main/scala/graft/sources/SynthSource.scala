@@ -12,8 +12,8 @@ import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection,
   SortOrder => V2SortOrder}
 import org.apache.spark.sql.connector.expressions.{Expression => V2Expression,
   NamedReference}
-import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc,
-  Aggregation, Count, CountStar, Max, Min, Sum}
+import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation,
+  Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.expressions.Expressions
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey,
   InputPartition, PartitionReader,

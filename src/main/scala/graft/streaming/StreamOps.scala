@@ -379,14 +379,13 @@ object StreamOps {
     * oracle). */
   def streamKmv(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.KmvAgg.register(spark)
     val P31 = Int.MaxValue.toLong
     runStreamOffsets(spark, sfDir, OutputMode.Complete()) { ds =>
       ds.select($"event_type",
           expr(s"CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15), 16, 10) AS BIGINT) % $P31")
             .as("h"))
         .groupBy($"event_type")
-        .agg(expr(s"graft_kmv(h, $STREAM_KMV_K)").as("mins"))
+        .agg(graft.functions.KmvAgg(col("h"), STREAM_KMV_K).as("mins"))
         // mirror the oracle's `rn = k` inner join: groups that never
         // accumulated k distinct hashes have no kth minimum
         .where(size($"mins") === STREAM_KMV_K)
@@ -1015,8 +1014,11 @@ object StreamOps {
       |WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
       |ORDER BY user_id, event_id""".stripMargin
 
-  /** Closed-session row emitted by [[TimerSessionProc]]. */
-  private case class SessOut(user_id: Long, start_us: Long,
+  /** Closed-session row emitted by [[TimerSessionProc]]. Not private:
+    * the generated serializer reads its fields through the class, and
+    * for a private class that code fails to compile, so Spark would
+    * run the stage interpreted. */
+  case class SessOut(user_id: Long, start_us: Long,
       n_events: Long, sum_value: Double, by_timer: Boolean)
 
   /** Event-time TIMER sessionization on transformWithState — the API

@@ -2,9 +2,11 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.SparkListenerInterface
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{Dataset, SparkSession, StreamingQueryManager}
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession,
+  StreamingQueryManager}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
@@ -14,7 +16,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** Minimal bridge to Spark's `private[sql]` entry points, so it lives
   * in the sql namespace (the established pattern for Spark-native
   * extension libraries): `ofRows` (a hand-built [[LogicalPlan]] as a
-  * DataFrame), `cloneSession` (see `graft.engine.QuerySession`),
+  * DataFrame), `column` (a hand-built Catalyst expression as a
+  * Column: graft's native functions), `cloneSession` (see
+  * `graft.engine.QuerySession`),
   * `rebind`, which takes the command-executed plan so a frame made by
   * an INSERT or DELETE statement is not executed again, the two
   * hooks `graft.engine.QueryMetrics` reads events through, and the
@@ -22,6 +26,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): Dataset[Row] =
     Dataset.ofRows(spark, plan)
+
+  /** The column of the expression `node` builds over `args`' own
+    * expressions: a native function call the analyzer resolves like a
+    * built-in, with no function registry. */
+  def column(args: Column*)(node: Seq[Expression] => Expression): Column =
+    ExpressionUtils.column(node(args.map(ExpressionUtils.expression)))
 
   def cloneSession(spark: SparkSession): SparkSession = spark.cloneSession()
 

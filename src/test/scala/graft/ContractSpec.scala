@@ -11,27 +11,66 @@ import org.apache.spark.sql.types._
   */
 class ContractSpec extends SparkSpec {
 
-  private def conf: Map[String, String] = spark.conf.getAll
+  /** What a key may not change on the caller's session: its conf,
+    * its temp views (name to view object, so a REPLACED view shows as
+    * well as an added one), its temp functions and its optimizer and
+    * planner extensions. [[graft.plans.TopKPerKeyStrategy]], the
+    * planner for graft's own logical node, is the one strategy a key
+    * may add: a frame holding that node plans on the caller's
+    * session. */
+  private final class Observed(val conf: Map[String, String],
+      val views: Map[String, AnyRef], val functions: Set[String],
+      val optimizations: Seq[AnyRef], val strategies: Seq[AnyRef])
+
+  private def observe(): Observed = {
+    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val catalog = cs.sessionState.catalog
+    new Observed(spark.conf.getAll,
+      catalog.getTempViewNames().map(n => n -> catalog.getRawTempView(n).orNull)
+        .toMap,
+      cs.sessionState.functionRegistry.listFunction().map(_.unquotedString)
+        .toSet,
+      cs.experimental.extraOptimizations,
+      cs.experimental.extraStrategies
+        .filterNot(_ eq graft.plans.TopKPerKeyStrategy))
+  }
 
   /** Every key built once at sf0.001: its schema (or the build's
-    * failure) and the session conf before and after the build.
+    * failure) and the caller's session before and after the build.
     * Streaming queries execute eagerly even on schema access, so each
     * plan is built once (cheap at sf0.001) and shared by the tests. */
   private lazy val builds: Seq[(String, Either[Throwable, StructType],
-      Map[String, String], Map[String, String])] =
+      Observed, Observed)] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val before = conf
+      val before = observe()
       val schema =
         try Right(fn(spark, sf).schema)
         catch { case e: Throwable => Left(e) }
-      (name, schema, before, conf)
+      (name, schema, before, observe())
     }
 
-  private def confDiff(before: Map[String, String],
-      after: Map[String, String]): String =
-    (before.keySet ++ after.keySet).toSeq.sorted
-      .filter(k => before.get(k) != after.get(k))
-      .map(k => s"$k: ${before.get(k)} -> ${after.get(k)}").mkString(", ")
+  /** The changes from `before` to `after`, empty when there are none. */
+  private def diff(before: Observed, after: Observed): String = {
+    val conf = (before.conf.keySet ++ after.conf.keySet).toSeq.sorted
+      .filter(k => before.conf.get(k) != after.conf.get(k))
+      .map(k => s"conf $k: ${before.conf.get(k)} -> ${after.conf.get(k)}")
+    val views = (before.views.keySet ++ after.views.keySet).toSeq.sorted
+      .filter(n => !before.views.get(n).exists(v => after.views.get(n).exists(_ eq v)))
+      .map(n => s"temp view $n " + (if (!after.views.contains(n)) "dropped"
+        else if (before.views.contains(n)) "replaced" else "added"))
+    val functions = (after.functions -- before.functions).toSeq.sorted
+      .map(f => s"temp function $f added") ++
+      (before.functions -- after.functions).toSeq.sorted
+        .map(f => s"temp function $f dropped")
+    val extensions =
+      (if (before.optimizations == after.optimizations) Nil
+       else Seq(s"extraOptimizations ${before.optimizations} -> " +
+         s"${after.optimizations}")) ++
+      (if (before.strategies == after.strategies) Nil
+       else Seq(s"extraStrategies ${before.strategies} -> " +
+         s"${after.strategies}"))
+    (conf ++ views ++ functions ++ extensions).mkString(", ")
+  }
 
   test("every query's output schema is atomic-only (comparator-hashable)") {
     val offenders = builds.flatMap { case (name, built, _, _) =>
@@ -50,24 +89,26 @@ class ContractSpec extends SparkSpec {
   }
 
   test("no key's build or action changes the caller's session conf") {
-    val writers = builds.collect {
-      case (name, _, before, after) if before != after =>
-        s"$name (${confDiff(before, after)})"
+    // conf, temp views, temp functions and optimizer/planner
+    // extensions (see [[Observed]]): a key builds on a clone of the
+    // caller's session when it needs any of them
+    val writers = builds.flatMap { case (name, _, before, after) =>
+      Some(diff(before, after)).filter(_.nonEmpty).map(d => s"$name ($d)")
     }
     assert(writers.isEmpty,
-      s"keys whose build wrote session conf: ${writers.mkString("; ")}")
+      s"keys whose build changed the caller's session: ${writers.mkString("; ")}")
     // one action each: the returned frame may plan under its own
     // session's confs, never by writing the caller's
     val actions = Seq("q_graph_pagerank", "q_cf_als", "q_simsearch_hnsw",
       "q_stream_session", "q_stream_file_source", "q_source_spj_join",
-      "q_catalog_scan", "q_txn_commit").flatMap { name =>
-      val before = conf
+      "q_catalog_scan", "q_txn_commit", "q_sql_qualify",
+      "q_win_rank_topn_auto").flatMap { name =>
+      val before = observe()
       SparkEntry.queries(name)(spark, sf).collect()
-      val after = conf
-      if (before == after) None else Some(s"$name (${confDiff(before, after)})")
+      Some(diff(before, observe())).filter(_.nonEmpty).map(d => s"$name ($d)")
     }
     assert(actions.isEmpty,
-      s"keys whose action wrote session conf: ${actions.mkString("; ")}")
+      s"keys whose action changed the caller's session: ${actions.mkString("; ")}")
   }
 
   test("every oracleSql key has a queries entry") {

@@ -44,12 +44,11 @@ class CosineSpec extends SparkSpec {
 
   test("native CosineSim expression matches the HOF double fold bit-for-bit") {
     import spark.implicits._
-    graft.functions.CosineSim.register(spark)
     val e = graft.engine.Tables.embeddings(spark, sf).limit(100)
     val q = e.filter($"vec_id" === 1).select($"embedding".as("qv"))
     val rows = e.crossJoin(broadcast(q))
       .select($"vec_id",
-        expr("graft_cosine_sim(embedding, qv)").as("native"),
+        graft.functions.CosineSim(col("embedding"), col("qv")).as("native"),
         expr(Udfs.cosSimDblExpr("embedding", "qv")).as("hof"))
       .collect()
     assert(rows.nonEmpty)
@@ -61,13 +60,12 @@ class CosineSpec extends SparkSpec {
 
   test("native CosineSim propagates NULL for null array elements") {
     import spark.implicits._
-    graft.functions.CosineSim.register(spark)
     val df = Seq(
       (1L, Seq[java.lang.Float](1f, 2f), Seq[java.lang.Float](1f, 2f)),
       (2L, Seq[java.lang.Float](1f, null), Seq[java.lang.Float](1f, 2f)),
       (3L, Seq[java.lang.Float](1f, 2f), Seq[java.lang.Float](null, 2f)))
       .toDF("id", "a", "b")
-    val rows = df.select($"id", expr("graft_cosine_sim(a, b)").as("c"))
+    val rows = df.select($"id", graft.functions.CosineSim(col("a"), col("b")).as("c"))
       .orderBy($"id").collect()
     assert(!rows(0).isNullAt(1) && math.abs(rows(0).getDouble(1) - 1.0) < 1e-9)
     assert(rows(1).isNullAt(1), "null element in left must propagate NULL")
@@ -76,10 +74,9 @@ class CosineSpec extends SparkSpec {
 
   test("native RollingHash matches the interpreted HOF fold exactly") {
     import spark.implicits._
-    graft.functions.RollingHash.register(spark)
     val rows = graft.engine.Tables.documents(spark, sf).limit(200)
       .select($"doc_id",
-        expr("graft_rolling_hash(text)").as("native"),
+        graft.functions.RollingHash(col("text")).as("native"),
         expr(
           """aggregate(transform(split(text, ''), c -> ascii(c)),
             |  cast(0 as bigint),
@@ -92,8 +89,7 @@ class CosineSpec extends SparkSpec {
     }
     // sanity on edge cases
     val edge = Seq("", "a", "ab", "aa bb").toDF("text")
-    graft.functions.RollingHash.register(spark)
-    val e = edge.select(expr("graft_rolling_hash(text)").as("h")).collect()
+    val e = edge.select(graft.functions.RollingHash(col("text")).as("h")).collect()
     assert(e(0).getLong(0) == 0L)           // empty string folds to 0
     assert(e(1).getLong(0) == 'a'.toLong)   // single char is its codepoint
   }

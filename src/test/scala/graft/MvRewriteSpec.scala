@@ -4,13 +4,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.engine.{Exact, Tables}
 import graft.operators.MvOps
-import graft.plans.{MvRewrite, MvRewriteRule}
+import graft.plans.MvRewrite
 
 /** Materialized-view rewrite semantics: byte-equality with the fact
-  * query, plan actually reads the summary, conf-gated injection, and
-  * the conservative bail-outs (filter / unknown aggregate / non-key
-  * grouping must leave the plan untouched). Detection everywhere via
-  * [[MvRewriteRule.readsPath]] — LogicalRelation.toString never
+  * query, plan actually reads the summary, the rewrite applied to an
+  * idiomatic query, and the conservative bail-outs (filter / unknown
+  * aggregate / non-key grouping must leave the plan untouched).
+  * Detection everywhere via [[MvRewrite.readsPath]] — LogicalRelation.toString never
   * prints the scan path, so a toString grep is always false. */
 class MvRewriteSpec extends SparkSpec {
 
@@ -34,40 +34,31 @@ class MvRewriteSpec extends SparkSpec {
   test("the rewritten plan scans the MV, never the fact") {
     val df = MvOps.mvRewrite(spark, sf)
     val plan = classic(df).queryExecution.optimizedPlan
-    assert(MvRewriteRule.readsPath(plan, "lineitem_mv_flag_status"))
-    assert(!MvRewriteRule.readsPath(plan, "lineitem.parquet"),
+    assert(MvRewrite.readsPath(plan, "lineitem_mv_flag_status"))
+    assert(!MvRewrite.readsPath(plan, "lineitem.parquet"),
       "the fact table must not appear anywhere in the rewritten plan")
   }
 
-  test("conf-gated optimizer injection rewrites transparently") {
+  test("direct application rewrites the idiomatic two-key query") {
     import spark.implicits._
-    MvRewriteRule.register(MvOps.mvDef(spark, sf))
-    MvRewrite.register(spark)
     val q = Tables.lineitem(spark, sf)
       .groupBy($"l_returnflag", $"l_linestatus")
       .agg(count(lit(1)).as("n"),
         sum($"l_quantity".cast(DecimalType(38, 6))).as("sq"))
-    spark.conf.set("spark.graft.mv.rewrite", "true")
-    try {
-      val on = classic(q).queryExecution.optimizedPlan
-      assert(MvRewriteRule.readsPath(on, "lineitem_mv_flag_status"),
-        "flag on: the injected rule must fire on the idiomatic query")
-    } finally spark.conf.set("spark.graft.mv.rewrite", "false")
-    // flag off: a FRESH identical query plans against the fact
-    val q2 = Tables.lineitem(spark, sf)
-      .groupBy($"l_returnflag", $"l_linestatus")
-      .agg(count(lit(1)).as("n"),
-        sum($"l_quantity".cast(DecimalType(38, 6))).as("sq"))
-    val off = classic(q2).queryExecution.optimizedPlan
-    assert(!MvRewriteRule.readsPath(off, "lineitem_mv_flag_status"))
+    val rewritten = MvRewrite(Seq(MvOps.mvDef(spark, sf)))(
+      classic(q).queryExecution.analyzed)
+    assert(MvRewrite.readsPath(rewritten, "lineitem_mv_flag_status"),
+      "the rewrite must fire on the idiomatic query")
+    // the query's own plan is untouched: nothing rewrites it unasked
+    assert(!MvRewrite.readsPath(classic(q).queryExecution.optimizedPlan,
+      "lineitem_mv_flag_status"))
   }
 
   test("conservative bail-outs leave non-derivable queries untouched") {
     import spark.implicits._
-    MvRewriteRule.register(MvOps.mvDef(spark, sf))
     def fires(df: org.apache.spark.sql.DataFrame): Boolean =
-      MvRewriteRule.readsPath(
-        MvRewriteRule.force(classic(df).queryExecution.analyzed),
+      MvRewrite.readsPath(
+        MvRewrite(Seq(MvOps.mvDef(spark, sf)))(classic(df).queryExecution.analyzed),
         "lineitem_mv_flag_status")
     val li = Tables.lineitem(spark, sf)
     // filter between aggregate and scan: MV rows cannot answer it

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.engine.Tables
 import graft.operators.{ScanOps, SourceOps, SqlOps}
 import graft.plans.QualifySql
 
@@ -12,34 +13,32 @@ class Round11Spec extends SparkSpec
     with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   test("QUALIFY desugars to exactly the hand-written window subquery") {
-    graft.engine.Tables.registerViews(spark, sf)
-    val viaQualify = QualifySql.sql(spark,
+    val viaQualify = Tables.withViews(spark, sf)(QualifySql.sql(_,
       """SELECT o_custkey, o_orderkey, o_totalprice
         |FROM orders
         |QUALIFY ROW_NUMBER() OVER (PARTITION BY o_custkey
         |  ORDER BY o_totalprice DESC, o_orderkey) <= 2
-        |ORDER BY o_custkey, o_totalprice DESC, o_orderkey""".stripMargin)
+        |ORDER BY o_custkey, o_totalprice DESC, o_orderkey""".stripMargin))
       .collect().toSeq
-    val byHand = spark.sql(
+    val byHand = Tables.withViews(spark, sf)(_.sql(
       """SELECT o_custkey, o_orderkey, o_totalprice FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    ROW_NUMBER() OVER (PARTITION BY o_custkey
         |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
         |  FROM orders) WHERE rn <= 2
-        |ORDER BY o_custkey, o_totalprice DESC, o_orderkey""".stripMargin)
+        |ORDER BY o_custkey, o_totalprice DESC, o_orderkey""".stripMargin))
       .collect().toSeq
     assert(viaQualify == byHand)
     assert(viaQualify.nonEmpty)
   }
 
   test("QUALIFY honors a trailing LIMIT and plain WHERE coexistence") {
-    graft.engine.Tables.registerViews(spark, sf)
-    val out = QualifySql.sql(spark,
+    val out = Tables.withViews(spark, sf)(QualifySql.sql(_,
       """SELECT o_custkey, o_totalprice
         |FROM orders
         |WHERE o_totalprice > 1000.0
         |QUALIFY RANK() OVER (ORDER BY o_totalprice DESC, o_orderkey) <= 7
-        |ORDER BY o_totalprice DESC, o_custkey LIMIT 5""".stripMargin)
+        |ORDER BY o_totalprice DESC, o_custkey LIMIT 5""".stripMargin))
       .collect()
     assert(out.length == 5)
     // descending by construction
@@ -48,7 +47,6 @@ class Round11Spec extends SparkSpec
   }
 
   test("QUALIFY rejects malformed statements loudly") {
-    graft.engine.Tables.registerViews(spark, sf)
     // no QUALIFY at all
     intercept[IllegalArgumentException] {
       QualifySql.sql(spark, "SELECT 1")
@@ -74,13 +72,12 @@ class Round11Spec extends SparkSpec
   }
 
   test("QUALIFY keyword detection ignores quoted text and parens") {
-    graft.engine.Tables.registerViews(spark, sf)
     // the word QUALIFY inside a string literal must not count
-    val out = QualifySql.sql(spark,
+    val out = Tables.withViews(spark, sf)(QualifySql.sql(_,
       """SELECT o_custkey, 'QUALIFY' AS tag, o_totalprice
         |FROM orders
         |QUALIFY ROW_NUMBER() OVER (ORDER BY o_totalprice DESC,
-        |  o_orderkey) = 1""".stripMargin).collect()
+        |  o_orderkey) = 1""".stripMargin)).collect()
     assert(out.length == 1 && out.head.getString(1) == "QUALIFY")
   }
 
@@ -110,11 +107,10 @@ class Round11Spec extends SparkSpec
 
   test("join elimination: fires on the declared edge, bails on every unsafe variant") {
     import spark.implicits._
-    import graft.plans.{JoinEliminationRule => JE}
-    import graft.plans.MvRewriteRule.readsPath
-    import graft.engine.Tables
-    JE.register(JE.FkDef(
-      "lineitem.parquet", "l_orderkey", "orders.parquet", "o_orderkey"))
+    import graft.plans.JoinElimination
+    import graft.plans.MvRewrite.readsPath
+    val eliminate = JoinElimination(Seq(JoinElimination.FkDef(
+      "lineitem.parquet", "l_orderkey", "orders.parquet", "o_orderkey"))) _
     def analyzed(df: org.apache.spark.sql.DataFrame) =
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[
         org.apache.spark.sql.Row]].queryExecution.analyzed
@@ -132,7 +128,7 @@ class Round11Spec extends SparkSpec
     assert(viaRule == executed)
 
     // a filter on the PK side makes the join selective — must bail
-    val filtered = JE.force(analyzed(
+    val filtered = eliminate(analyzed(
       li.join(ord.filter($"o_totalprice" > 1000.0),
           $"l_orderkey" === $"o_orderkey")
         .groupBy($"l_returnflag").agg(count(lit(1)).as("n"))))
@@ -140,20 +136,20 @@ class Round11Spec extends SparkSpec
       "a filtered parent must not be eliminated")
 
     // projecting a parent column above the join — must bail
-    val keepsParent = JE.force(analyzed(
+    val keepsParent = eliminate(analyzed(
       li.join(ord, $"l_orderkey" === $"o_orderkey")
         .select($"l_returnflag", $"o_orderstatus")))
     assert(readsPath(keepsParent, "orders.parquet"),
       "a consumer of parent columns must keep the join")
 
     // an undeclared edge (suppkey) — must bail
-    val undeclared = JE.force(analyzed(
+    val undeclared = eliminate(analyzed(
       li.join(Tables.supplier(spark, sf), $"l_suppkey" === $"s_suppkey")
         .groupBy($"l_returnflag").agg(count(lit(1)).as("n"))))
     assert(readsPath(undeclared, "supplier.parquet"))
 
     // outer joins are out of scope — must bail
-    val outer = JE.force(analyzed(
+    val outer = eliminate(analyzed(
       li.join(ord, $"l_orderkey" === $"o_orderkey", "left")
         .groupBy($"l_returnflag").agg(count(lit(1)).as("n"))))
     assert(readsPath(outer, "orders.parquet"))

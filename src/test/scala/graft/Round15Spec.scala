@@ -150,6 +150,38 @@ class Round15Spec extends SparkSpec {
       }
   }
 
+  test("q_stream_tws_timers compiles its whole-stage code: no failed " +
+      "CodeGenerator compile is logged while it runs") {
+    // a failed compile is not an error to the query: Spark logs it and
+    // falls back to interpreted evaluation, so only the log shows it
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // the session first: Spark's logging set-up replaces the log4j
+    // configuration, appenders included, when the first one starts
+    val session = spark
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("codegen-errors", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.ERROR))
+          errors.add(e.getMessage.getFormattedMessage +
+            Option(e.getThrown).fold("")(t => s" ${t.getMessage}"))
+    }
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator")
+      .asInstanceOf[Logger]
+    appender.start()
+    logger.addAppender(appender)
+    val rows =
+      try SparkEntry.queries("q_stream_tws_timers")(session, sf).collect()
+      finally { logger.removeAppender(appender); appender.stop() }
+    assert(rows.nonEmpty)
+    assert(errors.isEmpty,
+      s"${errors.size} failed compiles, first: ${errors.peek()}")
+  }
+
   test("offset source tails a LIVE directory: batches staged after the " +
       "query started are admitted with checkpointed offsets") {
     import spark.implicits._

@@ -68,7 +68,6 @@ class Round16Spec extends SparkSpec {
       "(full degree >= minPts is the SAME predicate on both)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.CosineSim.register(spark)
     val e = graft.engine.Tables.embeddings(spark, sf)
     // exact full-degree per vector (all-pairs is fine at sf0.001 in a
     // spec — this is the reference the operator's sampling approximates)
@@ -76,7 +75,7 @@ class Round16Spec extends SparkSpec {
       .crossJoin(e.select($"vec_id".as("vb"), $"embedding".as("eb")))
       .filter($"va" =!= $"vb")
       .filter(graft.functions.Udfs.rnd6(
-        expr("graft_cosine_sim(ea, eb)")) >= 0.25)
+        graft.functions.CosineSim(col("ea"), col("eb"))) >= 0.25)
       .groupBy($"va").agg(count(lit(1)).as("deg"))
       .filter($"deg" >= 12 && $"va" % 3 === 0)
       .select($"va").as[Long].collect().toSet

@@ -10,11 +10,12 @@ import org.apache.spark.sql.DataFrame
   * broadcast plan's result. */
 class Round18Spec extends SparkSpec {
 
-  private def withBudget[A](bytes: Long)(body: => A): A = {
-    spark.conf.set(graft.plans.Cbo.BROADCAST_BYTES_CONF, bytes.toString)
-    try body
-    finally spark.conf.unset(graft.plans.Cbo.BROADCAST_BYTES_CONF)
-  }
+  /** `body` on a clone of the suite's session whose broadcast
+    * threshold, the stats-driven joins' budget, is `bytes`. */
+  private def withBudget[A](bytes: Long)(
+      body: org.apache.spark.sql.SparkSession => A): A =
+    body(graft.engine.QuerySession.session(spark,
+      Seq("spark.sql.autoBroadcastJoinThreshold" -> bytes.toString)))
 
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -24,13 +25,13 @@ class Round18Spec extends SparkSpec {
     // explicit generous budget for the broadcast phase: the estimates
     // sit legitimately near the 10 MB default at fixture scale, and a
     // fixture regeneration must not flip a plan assertion
-    val (rowsBroad, pBroad) = withBudget(1L << 30) {
+    val (rowsBroad, pBroad) = withBudget(1L << 30) { spark =>
       val broad = graft.operators.DedupOps.dedupPrefixFilter(spark, sf)
       (broad.collect().toSeq, plan(broad))
     }
     assert(pBroad.contains("BroadcastHashJoin"),
       s"generous budget must keep the broadcast build sides:\n$pBroad")
-    val (rowsShuf, pShuf) = withBudget(1L) {
+    val (rowsShuf, pShuf) = withBudget(1L) { spark =>
       val shuf = graft.operators.DedupOps.dedupPrefixFilter(spark, sf)
       (shuf.collect().toSeq, plan(shuf))
     }
@@ -53,14 +54,14 @@ class Round18Spec extends SparkSpec {
     // explicit generous budget: the seen-pairs estimate is within a
     // few percent of the 10 MB default at sf0.1, so the spec must not
     // be load-bearing on that margin
-    val (rowsBroad, pBroad) = withBudget(1L << 30) {
+    val (rowsBroad, pBroad) = withBudget(1L << 30) { spark =>
       val broad = graft.operators.CfOps.cfNegativeSamples(spark, sf)
       (broad.collect().toSeq, plan(broad))
     }
     assert(pBroad.contains("BroadcastHashJoin") &&
         pBroad.contains("LeftAnti"),
       s"generous budget must broadcast the seen set for the anti join:\n$pBroad")
-    val (rowsShuf, pShuf) = withBudget(1L) {
+    val (rowsShuf, pShuf) = withBudget(1L) { spark =>
       val shuf = graft.operators.CfOps.cfNegativeSamples(spark, sf)
       (shuf.collect().toSeq, plan(shuf))
     }

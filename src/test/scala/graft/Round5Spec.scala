@@ -105,9 +105,9 @@ class Round5Spec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("topk rewrite rule swaps row_number<=k windows for the custom operator") {
-    import spark.implicits._
     import graft.operators.WindowOps
-    // direct-application path (what q_win_rank_topn_auto registers)
+    // the rewrite applied to the window query's plan, as
+    // q_win_rank_topn_auto applies it
     val auto = WindowOps.rankTopNAuto(spark, sf)
     val plan = { auto.collect(); auto.queryExecution.executedPlan }
     assert(collectWithSubqueries(plan) {
@@ -116,27 +116,13 @@ class Round5Spec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(collectWithSubqueries(plan) {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, "rewrite left a WindowExec behind")
-    assert(auto.collect().toSeq == WindowOps.rankTopN(spark, sf).collect().toSeq,
+    val window = WindowOps.rankTopN(spark, sf)
+    assert(auto.collect().toSeq == window.collect().toSeq,
       "rewritten plan changed the result")
-
-    // injected path: rule registered in the optimizer, gated by conf —
-    // the VERBATIM window query plans through the custom operator
-    graft.plans.TopKRewrite.register(spark)
-    spark.conf.set("spark.graft.topk.rewrite", "true")
-    try {
-      val df = WindowOps.rankTopN(spark, sf)
-      df.collect()
-      val p2 = df.queryExecution.executedPlan
-      assert(collectWithSubqueries(p2) {
-        case e: graft.plans.TopKPerKeyExec => e
-      }.nonEmpty, s"injected rule did not fire under the flag:\n$p2")
-    } finally spark.conf.unset("spark.graft.topk.rewrite")
-    // flag off (default): the window plan is untouched
-    val off = WindowOps.rankTopN(spark, sf)
-    off.collect()
-    assert(collectWithSubqueries(off.queryExecution.executedPlan) {
+    // the verbatim window query is left alone: nothing rewrites it unasked
+    assert(collectWithSubqueries(window.queryExecution.executedPlan) {
       case e: graft.plans.TopKPerKeyExec => e
-    }.isEmpty, "rule fired without the opt-in flag")
+    }.isEmpty, "the window query planned through the custom operator")
   }
 
   test("topk rewrite declines tie-capable ranks and unpartitioned windows") {
@@ -146,7 +132,7 @@ class Round5Spec extends SparkSpec with AdaptiveSparkPlanHelper {
     val base = graft.engine.Tables.orders(spark, sf)
       .select($"o_custkey", $"o_orderkey", $"o_totalprice")
     def forced(df: org.apache.spark.sql.DataFrame) =
-      graft.plans.TopKRewriteRule.force(
+      graft.plans.TopKRewrite(
         df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
           .queryExecution.analyzed)
     // dense_rank ties can exceed k rows per key — a size-k heap must not apply

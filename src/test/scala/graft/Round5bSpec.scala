@@ -209,10 +209,9 @@ class Round5bSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         s"tile id is not the high-bit interleave at ($x,$y)")
     }
     // codegen path (DataFrame eval) matches the reference on a grid
-    ZOrder.register(spark)
     val rows = spark.range(0, 4096).toDF("i")
-      .selectExpr("i div 64 as x", "i % 64 as y",
-        "graft_zorder(i div 64, i % 64) as z")
+      .select(expr("i div 64").as("x"), expr("i % 64").as("y"),
+        ZOrder(expr("i div 64"), expr("i % 64")).as("z"))
       .collect()
     rows.foreach { r =>
       assert(r.getLong(2) == ZOrder.interleave8(r.getLong(0), r.getLong(1)),

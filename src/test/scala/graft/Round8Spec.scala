@@ -144,13 +144,12 @@ class Round8Spec extends SparkSpec {
 
   test("kmv sketch: partition-layout-proof, bounded error, mergeable state") {
     import spark.implicits._
-    graft.functions.KmvAgg.register(spark)
     val base = graft.engine.Tables.lineitem(spark, sf)
       .select($"l_partkey",
         expr(s"CAST(conv(substring(md5(CAST(l_partkey AS STRING)), 1, 15), 16, 10) AS BIGINT) % ${Int.MaxValue}")
           .as("h"))
     def minsOf(parts: Int): Seq[Long] =
-      base.repartition(parts).agg(expr("graft_kmv(h, 64)"))
+      base.repartition(parts).agg(graft.functions.KmvAgg(col("h"), 64))
         .head.getSeq[Long](0)
     val m1 = minsOf(1)
     // different partitionings → different partial merges → same minima

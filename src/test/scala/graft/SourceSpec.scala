@@ -246,25 +246,6 @@ class SourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     MemSinkRegistry.clear(table)
   }
 
-  test("graft extension-path function builders validate arity and foldability") {
-    // the SparkSessionExtensions injectFunction registrations share the
-    // companions' checked builders: malformed calls fail with the
-    // descriptive IllegalArgumentException, not an index/cast error
-    intercept[IllegalArgumentException] {
-      graft.functions.KmvAgg.builder(Seq.empty)
-    }
-    intercept[IllegalArgumentException] {
-      graft.functions.CosineSim.builder(
-        Seq(org.apache.spark.sql.catalyst.expressions.Literal(1)))
-    }
-    intercept[IllegalArgumentException] {
-      graft.functions.KmvAgg.builder(Seq(
-        org.apache.spark.sql.catalyst.expressions.Literal(1L),
-        org.apache.spark.sql.catalyst.expressions
-          .AttributeReference("k", org.apache.spark.sql.types.IntegerType)()))
-    }
-  }
-
   test("q_sink_v2 round-trips the aggregate through the V2 write protocol") {
     import spark.implicits._
     val out = SourceOps.sinkV2(spark, sf).collect()
