@@ -1,5 +1,5 @@
 package graft
-import graft.engine.QueryMetrics
+import graft.engine.{DfCache, QueryMetrics}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -36,12 +36,11 @@ object Verify {
     } + "\""
     // __SFDIR__ lets a file-reading oracle (read_blob for the
     // binaryFile source) target the sweep's own fixture directory;
-    // __SCRATCH__ resolves to the sweep's derived-layout scratch dir
-    // (same tag rule as ScanOps.scratch) so a file-granular oracle
-    // can read the layout the query itself derived. Table-only
-    // oracles are unaffected.
-    val scratchDir =
-      "/tmp/graft_scratch/" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+    // __SCRATCH__ resolves to the root of the sweep's derived layouts
+    // (DfCache.layoutRoot) so a file-granular oracle can read the
+    // layout the query itself derived. Table-only oracles are
+    // unaffected.
+    val scratchDir = DfCache.layoutRoot(sfDir)
     val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
       .map { case (k, v) =>
         s"${q(k)}: ${q(v.replace("__SFDIR__", sfDir)

@@ -1,6 +1,8 @@
 package graft.engine
 
 import java.io.File
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, StandardOpenOption}
 
 import scala.util.control.NonFatal
 
@@ -9,7 +11,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** The one owner of per-(application, sfDir) session state: persisted
   * intermediates, memoized values (base relations, build-once txn
-  * fixtures, staged stream layouts) and fixed scratch directories.
+  * fixtures, staged stream layouts), fixed scratch directories, and
+  * the write-once layouts derived from a fixture.
   *
   * Motivation for caching at all: Catalyst does not deduplicate
   * repeated logical subtrees, so a shared intermediate (normalized
@@ -38,7 +41,13 @@ import org.apache.spark.storage.StorageLevel
   * is removed by the first scratch use of a later JVM once it is
   * [[StaleScratchMillis]] old. Deletes go through [[TxnLog.destroy]],
   * which never follows a symlink (a shallow clone links its source's
-  * snapshots). */
+  * snapshots).
+  *
+  * Layouts: a file layout derived from fixture files (a clustered or
+  * partitioned copy, a stats sidecar, a summary table) is written once
+  * under `/tmp/graft_scratch/<tag>/<name>/`, shared by every JVM on
+  * that fixture, through [[layout]] — the one copy of the freshness
+  * rule and the one rebuild. */
 object DfCache {
 
   private final case class Entry(value: Any, persisted: Option[DataFrame])
@@ -118,5 +127,63 @@ object DfCache {
     parent.setLastModified(System.currentTimeMillis())
     if (liveParents.add(parent.getAbsolutePath)) cleanupAtExit
     new File(parent, s"${tag}_${safe(sfDir)}").getAbsolutePath
+  }
+
+  /** Root of the layouts derived from fixture `sfDir`. Oracles that
+    * read a layout's files (Verify's `__SCRATCH__`) resolve here. */
+  def layoutRoot(sfDir: String): String =
+    "/tmp/graft_scratch/" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+
+  /** A layout's commit marker, written last: its content is the spec
+    * the layout was built under. [[graft.sources.GraftCatalog]] keys
+    * its resolution cache on it. */
+  private[graft] val SpecFile = "_GRAFT_SPEC"
+
+  private def newestUnder(f: File): Long =
+    if (f.isDirectory)
+      (f.lastModified() +: Option(f.listFiles()).getOrElse(Array.empty)
+        .map(newestUnder).toSeq).max
+    else f.lastModified()
+
+  /** Fresh: the spec file holds `spec` and is no older than the newest
+    * file under every source. */
+  private def fresh(dir: File, spec: String, sources: Seq[String]): Boolean = {
+    val marker = new File(dir, SpecFile)
+    marker.exists() && Files.readString(marker.toPath) == spec &&
+      sources.forall(s => newestUnder(new File(s)) <= marker.lastModified())
+  }
+
+  private val layoutLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** The directory of layout `name` derived from fixture `sfDir`,
+    * (re)built by `write(dir)` unless fresh. `spec` names everything
+    * besides `sources` that the files depend on (columns, clustering,
+    * read semantics): a code change to the layout must change it.
+    * `write` gets an absent directory and writes every part of the
+    * layout under it (sidecars included), so a rebuild replaces them
+    * together. A rebuild holds a JVM lock and a file lock (other JVMs
+    * share the directory), re-checks freshness under them, clears the
+    * directory (marker first) and writes the marker last. */
+  def layout(sfDir: String, name: String, spec: String,
+      sources: Seq[String])(write: String => Unit): String = {
+    val dir = new File(layoutRoot(sfDir), name)
+    if (!fresh(dir, spec, sources)) {
+      dir.getParentFile.mkdirs()
+      layoutLocks.computeIfAbsent(dir.getPath, _ => new AnyRef).synchronized {
+        val ch = FileChannel.open(new File(dir.getParentFile, s"$name.lock")
+          .toPath, StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+        try {
+          ch.lock()
+          if (!fresh(dir, spec, sources)) {
+            new File(dir, SpecFile).delete()
+            TxnLog.destroy(dir.getPath)
+            write(dir.getPath)
+            Files.writeString(new File(dir, SpecFile).toPath, spec)
+          }
+        } finally ch.close() // releases the file lock
+      }
+    }
+    dir.getPath
   }
 }

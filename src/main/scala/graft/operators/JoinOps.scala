@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{DfCache, Tables}
 
 /** Joins (SURVEY.md §2.3).
   *
@@ -164,79 +164,41 @@ object JoinOps {
     * the pre-partitioned layout satisfies the join's distribution, so
     * the plan has no Exchange under the join (asserted in PlanSpec).
     * This is the 100 TB answer to a repeated big-big join: pay the
-    * shuffle once at write time, never again at read time. Bucket
-    * tables are created once per (session, sf) in the local warehouse. */
+    * shuffle once at write time, never again at read time. The bucket
+    * files are write-once layouts ([[DfCache.layout]]); a session
+    * attaches them as EXTERNAL bucketed tables (metadata only). */
   def joinBucketed(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    val ot = s"bkt_orders$tag"
-    val lt = s"bkt_lineitem$tag"
-    if (!spark.catalog.tableExists(ot)) {
-      // The catalog is in-memory but the warehouse dir persists across
-      // JVMs: when the bucketed files are already on disk and newer
-      // than their source, re-attach them as an EXTERNAL bucketed
-      // table (metadata-only, saves the ~full rewrite every session);
-      // otherwise clear any stale location and write them.
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val whPath = if (wh.contains(":")) new java.net.URI(wh).getPath else wh
-      def newestUnder(f: java.io.File): Long =
-        if (f.isDirectory) (f.lastModified() +: f.listFiles().map(newestUnder)).max
-        else f.lastModified()
-      // Freshness = source mtime vs _SUCCESS, AND the on-disk layout
-      // fingerprint (_SPEC: declared columns + bucket spec) matching
-      // this build's DDL — a code change to bucket count or projected
-      // columns must force a rewrite, not silently re-attach a stale
-      // layout with wrong bucket pruning.
-      def isFresh(table: String, src: String, spec: String): Boolean = {
-        val dir = new java.io.File(whPath, table)
-        val marker = new java.io.File(dir, "_SUCCESS")
-        val specFile = new java.io.File(dir, "_SPEC")
-        marker.exists() &&
-          newestUnder(new java.io.File(src)) <= marker.lastModified() &&
-          specFile.exists() &&
-          new String(java.nio.file.Files.readAllBytes(specFile.toPath),
-            java.nio.charset.StandardCharsets.UTF_8) == spec
-      }
-      def writeSpec(table: String, spec: String): Unit =
-        java.nio.file.Files.write(
-          new java.io.File(new java.io.File(whPath, table), "_SPEC").toPath,
-          spec.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      def clearStale(table: String): Unit = {
+    // The spec carries the declared columns + bucket spec: a code
+    // change to either must force a rewrite, not re-attach a stale
+    // layout with wrong bucket pruning.
+    def bucketed(name: String, src: String, cols: String, key: String)(
+        df: => DataFrame): DataFrame = {
+      val table = name + sfDir.replaceAll("[^A-Za-z0-9]", "_")
+      val dir = DfCache.layout(sfDir, name,
+          s"$cols|bucketBy(8,$key)|sortBy($key)", Seq(src)) { dir =>
         spark.sql(s"DROP TABLE IF EXISTS $table")
-        graft.engine.TxnLog.destroy(new java.io.File(whPath, table).getPath)
+        df.write.bucketBy(8, key).sortBy(key).option("path", dir)
+          .saveAsTable(table)
       }
-      def attach(table: String, cols: String, key: String): Unit =
+      if (!spark.catalog.tableExists(table))
         spark.sql(
           s"""CREATE TABLE $table ($cols) USING PARQUET
              |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
-             |LOCATION '${new java.io.File(whPath, table).getAbsolutePath}'
-             |""".stripMargin)
-      val oCols = "o_orderkey BIGINT, o_orderpriority STRING"
-      val oSpec = s"$oCols|bucketBy(8,o_orderkey)|sortBy(o_orderkey)"
-      if (isFresh(ot, s"$sfDir/orders.parquet", oSpec))
-        attach(ot, oCols, "o_orderkey")
-      else {
-        clearStale(ot)
-        Tables.orders(spark, sfDir).select($"o_orderkey", $"o_orderpriority")
-          .write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-          .saveAsTable(ot)
-        writeSpec(ot, oSpec)
-      }
-      val lCols = "l_orderkey BIGINT, l_extendedprice DOUBLE, l_discount DOUBLE"
-      val lSpec = s"$lCols|bucketBy(8,l_orderkey)|sortBy(l_orderkey)"
-      if (isFresh(lt, s"$sfDir/lineitem.parquet", lSpec))
-        attach(lt, lCols, "l_orderkey")
-      else {
-        clearStale(lt)
-        Tables.lineitem(spark, sfDir)
-          .select($"l_orderkey", $"l_extendedprice", $"l_discount")
-          .write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .saveAsTable(lt)
-        writeSpec(lt, lSpec)
-      }
+             |LOCATION '$dir'""".stripMargin)
+      spark.table(table)
     }
-    spark.table(ot)
-      .join(spark.table(lt), $"o_orderkey" === $"l_orderkey")
+    val o = bucketed("bkt_orders", s"$sfDir/orders.parquet",
+        "o_orderkey BIGINT, o_orderpriority STRING", "o_orderkey") {
+      Tables.orders(spark, sfDir).select($"o_orderkey", $"o_orderpriority")
+    }
+    val l = bucketed("bkt_lineitem", s"$sfDir/lineitem.parquet",
+        "l_orderkey BIGINT, l_extendedprice DOUBLE, l_discount DOUBLE",
+        "l_orderkey") {
+      Tables.lineitem(spark, sfDir)
+        .select($"l_orderkey", $"l_extendedprice", $"l_discount")
+    }
+    o.join(l, $"o_orderkey" === $"l_orderkey")
       .groupBy($"o_orderpriority")
       .agg(graft.engine.Exact.xsum($"l_extendedprice" * (lit(1.0) - $"l_discount"))
         .as("revenue"), count(lit(1)).as("n"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.engine.Tables
+import graft.engine.{DfCache, Tables}
 import graft.plans.MvRewrite
 
 /** Materialized-view (summary-table) operators — the consumption
@@ -17,24 +17,13 @@ object MvOps {
 
   private val XD = DecimalType(38, 6)
 
-  /** Write-once summary table (same freshness contract as every
-    * derived layout: _SUCCESS mtime vs source + _GRAFT_SPEC). One
+  /** Write-once summary table ([[graft.engine.DfCache.layout]]). One
     * row per (l_returnflag, l_linestatus) — metadata-scale at any
     * fact size, which is the entire point of aggregate navigation. */
-  private[graft] def mvDir(spark: SparkSession, sfDir: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"/tmp/graft_scratch/$tag/lineitem_mv_flag_status"
-    val marker = new java.io.File(path, "_SUCCESS")
-    val spec = new java.io.File(path, "_GRAFT_SPEC")
-    val want = "v1|keys=l_returnflag,l_linestatus|cnt+sum_qty+sum_price dec(38,6)"
-    val src = new java.io.File(s"$sfDir/lineitem.parquet")
-    def newestUnder(f: java.io.File): Long =
-      if (f.isDirectory) (f.lastModified() +: f.listFiles().map(newestUnder)).max
-      else f.lastModified()
-    val fresh = marker.exists() && spec.exists() &&
-      newestUnder(src) <= marker.lastModified() &&
-      java.nio.file.Files.readString(spec.toPath) == want
-    if (!fresh) {
+  private[graft] def mvDir(spark: SparkSession, sfDir: String): String =
+    DfCache.layout(sfDir, "lineitem_mv_flag_status",
+        "v1|keys=l_returnflag,l_linestatus|cnt+sum_qty+sum_price dec(38,6)",
+        Seq(s"$sfDir/lineitem.parquet")) { dir =>
       import spark.implicits._
       Tables.lineitem(spark, sfDir)
         .groupBy($"l_returnflag", $"l_linestatus")
@@ -42,11 +31,8 @@ object MvOps {
           sum($"l_quantity".cast(XD)).as("sum_qty"),
           sum($"l_extendedprice".cast(XD)).as("sum_price"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(path)
-      java.nio.file.Files.writeString(spec.toPath, want)
+        .write.parquet(dir)
     }
-    path
-  }
 
   private[graft] def mvDef(spark: SparkSession, sfDir: String)
       : MvRewrite.MvDef =

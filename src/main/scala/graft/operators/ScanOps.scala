@@ -2,25 +2,22 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{QuerySession, Tables}
+import graft.engine.{DfCache, QuerySession, Tables}
 import graft.sources.GraftCatalog
 
 /** Scans / sources / sinks (SURVEY.md §2.1).
   *
   * Scale notes: all reads are plain parquet scans through the vectorized
   * reader; projection/filter reach the scan node (asserted in
-  * PlanShapeSpec). The csv/parquet round-trips write to a per-sf temp dir
-  * and read back with an explicit schema — at cluster scale these become
-  * distributed writes (no coalesce except in the harness sink).
+  * PlanShapeSpec). The round-trip and sink keys write on every build,
+  * so they write to this application's scratch ([[DfCache.scratch]]):
+  * two processes on one fixture never share a directory they rewrite.
+  * The derived layouts (partitioned, clustered, stats and bloom
+  * sidecars) are written once per fixture through [[DfCache.layout]].
+  * At cluster scale both become distributed writes (no coalesce
+  * except in the harness sink).
   */
 object ScanOps {
-
-  /** Stable scratch dir per scale-factor dir (round-trips must not
-    * collide across sf runs in one process). */
-  private def scratch(sfDir: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"/tmp/graft_scratch/$tag"
-  }
 
   /** Full scan. lineitem has NO unique key (dup (orderkey, linenumber)
     * pairs exist) — the canonical order must cover every column. */
@@ -82,7 +79,7 @@ object ScanOps {
     * original — proves the csv source preserves values. */
   def scanCsvRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val path = scratch(sfDir) + "/part_csv"
+    val path = DfCache.scratch(spark, sfDir, "part_csv")
     Tables.part(spark, sfDir).write.mode("overwrite")
       .option("header", "true").csv(path)
     spark.read.schema(Tables.partSchema)
@@ -99,7 +96,7 @@ object ScanOps {
     * the identical double. */
   def scanJsonRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val path = scratch(sfDir) + "/supplier_json"
+    val path = DfCache.scratch(spark, sfDir, "supplier_json")
     Tables.supplier(spark, sfDir).write.mode("overwrite").json(path)
     spark.read.schema(Tables.supplierSchema).json(path)
       .orderBy($"s_suppkey")
@@ -114,7 +111,7 @@ object ScanOps {
     * lossless. */
   def scanTextRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val path = scratch(sfDir) + "/part_text"
+    val path = DfCache.scratch(spark, sfDir, "part_text")
     Tables.part(spark, sfDir).select($"p_name".as("value"))
       .write.mode("overwrite").text(path)
     spark.read.text(path).select($"value".as("p_name"))
@@ -130,7 +127,7 @@ object ScanOps {
     * with the parquet-sourced result IS the round-trip property). */
   def scanOrcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val path = scratch(sfDir) + "/nation_orc"
+    val path = DfCache.scratch(spark, sfDir, "nation_orc")
     Tables.nation(spark, sfDir).write.mode("overwrite").orc(path)
     spark.read.schema(Tables.nationSchema).orc(path)
       .orderBy($"n_nationkey")
@@ -147,7 +144,7 @@ object ScanOps {
     * ORC). */
   def scanXmlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val path = scratch(sfDir) + "/region_xml"
+    val path = DfCache.scratch(spark, sfDir, "region_xml")
     Tables.region(spark, sfDir).write.mode("overwrite")
       .option("rowTag", "region").xml(path)
     spark.read.schema(Tables.regionSchema)
@@ -177,7 +174,7 @@ object ScanOps {
   def scanCsvDirty(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.engine.Exact.xsum
-    val path = scratch(sfDir) + "/orders_dirty_csv"
+    val path = DfCache.scratch(spark, sfDir, "orders_dirty_csv")
     val o = Tables.orders(spark, sfDir)
     val good = o.filter($"o_orderkey" % 10 < 3)
       .select(concat_ws(",", $"o_orderkey",
@@ -219,35 +216,21 @@ object ScanOps {
     * filter; at 100 TB this is the layout decision that turns a full
     * sweep into a 1/N-cost read). Values are identical to filtering
     * the flat table, which is exactly what the oracle does. */
-  /** The events table re-laid-out Hive-partitioned by event_type in
-    * the scratch dir (built once, rebuilt if the source is newer —
-    * stale derived data must never outlive its source). Shared by the
+  /** The events table re-laid-out Hive-partitioned by event_type, a
+    * write-once layout (rebuilt if the source is newer — stale derived
+    * data must never outlive its source). Shared by the
     * static-pruning scan and the dynamic-partition-pruning join. */
   def eventsByType(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = scratch(sfDir) + "/events_by_type"
-    val marker = new java.io.File(path, "_SUCCESS")
-    def newestUnder(f: java.io.File): Long =
-      if (f.isDirectory) (f.lastModified() +: f.listFiles().map(newestUnder)).max
-      else f.lastModified()
-    val src = new java.io.File(s"$sfDir/events.parquet")
-    // Layout fingerprint (the bucketed-join _SPEC discipline): the
-    // derived data is only valid for the READ SEMANTICS it was built
-    // under. The fixture's ts unit has flipped across driver
-    // generations (ns → µs); an mtime check alone cannot catch a
-    // regenerated source with a preserved timestamp, and caught-but-
-    // rebuilt-by-buggy-reader layouts poison every downstream read.
-    val spec = new java.io.File(path, "_GRAFT_SPEC")
-    val want =
-      s"v2|tsIsNanos=${Tables.eventsTsIsNanos(spark, sfDir)}"
-    val specOk = spec.exists() &&
-      java.nio.file.Files.readString(spec.toPath) == want
-    if (!marker.exists() || !specOk ||
-        newestUnder(src) > marker.lastModified()) {
-      Tables.events(spark, sfDir)
-        .write.mode("overwrite").partitionBy("event_type").parquet(path)
-      java.nio.file.Files.writeString(spec.toPath, want)
-    }
-    spark.read.parquet(path)
+    // The spec carries the READ SEMANTICS the layout was built under:
+    // the fixture's ts unit has flipped across driver generations
+    // (ns → µs); an mtime check alone cannot catch a regenerated
+    // source with a preserved timestamp, and a layout rebuilt by a
+    // buggy reader poisons every downstream read.
+    val spec = s"v2|tsIsNanos=${Tables.eventsTsIsNanos(spark, sfDir)}"
+    spark.read.parquet(DfCache.layout(sfDir, "events_by_type", spec,
+        Seq(s"$sfDir/events.parquet")) { dir =>
+      Tables.events(spark, sfDir).write.partitionBy("event_type").parquet(dir)
+    })
   }
 
   def scanPartitionPruning(spark: SparkSession, sfDir: String): DataFrame = {
@@ -306,7 +289,7 @@ object ScanOps {
     * The oracle recomputes the same filter from the source table. */
   def sinkParquet(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val path = scratch(sfDir) + "/lineitem_sink"
+    val path = DfCache.scratch(spark, sfDir, "lineitem_sink")
     Tables.lineitem(spark, sfDir)
       .filter($"l_returnflag" === "R")
       .write.mode("overwrite").parquet(path)
@@ -330,7 +313,7 @@ object ScanOps {
     * documented production practice for evolving tables). */
   def scanMergeSchema(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = scratch(sfDir) + "/nation_evolved"
+    val root = DfCache.scratch(spark, sfDir, "nation_evolved")
     Tables.nation(spark, sfDir)
       .select($"n_nationkey", $"n_name")
       .write.mode("overwrite").parquet(s"$root/gen=1")
@@ -377,7 +360,7 @@ object ScanOps {
   def sinkPartitioned(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.engine.Exact._
-    val path = scratch(sfDir) + "/orders_by_status"
+    val path = DfCache.scratch(spark, sfDir, "orders_by_status")
     Tables.orders(spark, sfDir)
       .repartition($"o_orderstatus")
       .sortWithinPartitions($"o_orderstatus", $"o_orderdate", $"o_orderkey")
@@ -440,25 +423,15 @@ object ScanOps {
   /** Write-once Z-ORDER clustered lineitem layout: each row's
     * (l_orderkey % 256, l_partkey % 256) cell maps through the codegen'd
     * [[graft.functions.ZOrder]] Morton key to a tile directory
-    * `zb = z >> 10`. Same freshness contract as every derived layout
-    * (_SUCCESS mtime vs source + _GRAFT_SPEC fingerprint). */
-  private[graft] def zorderLayoutDir(spark: SparkSession, sfDir: String): String = {
-    val path = scratch(sfDir) + "/lineitem_zorder"
-    val marker = new java.io.File(path, "_SUCCESS")
-    val spec = new java.io.File(path, "_GRAFT_SPEC")
+    * `zb = z >> 10`. */
+  private[graft] def zorderLayoutDir(spark: SparkSession, sfDir: String): String =
     // (l_orderkey, l_partkey) cells: both spread across the full
     // 0..255 residue range at EVERY fixture SF (l_suppkey's domain is
     // only 0..9 at sf0.001 — a y coordinate built on it leaves most
     // tiles empty at small scale).
-    val want = s"v2|x=l_orderkey%256|y=l_partkey%256|zb=z>>$Z_SHIFT"
-    val src = new java.io.File(s"$sfDir/lineitem.parquet")
-    def newestUnder(f: java.io.File): Long =
-      if (f.isDirectory) (f.lastModified() +: f.listFiles().map(newestUnder)).max
-      else f.lastModified()
-    val fresh = marker.exists() && spec.exists() &&
-      newestUnder(src) <= marker.lastModified() &&
-      java.nio.file.Files.readString(spec.toPath) == want
-    if (!fresh) {
+    DfCache.layout(sfDir, "lineitem_zorder",
+        s"v2|x=l_orderkey%256|y=l_partkey%256|zb=z>>$Z_SHIFT",
+        Seq(s"$sfDir/lineitem.parquet")) { dir =>
       // repartition BY tile before the partitioned write — one file
       // per directory, not (shuffle partitions × tiles) fragments.
       Tables.lineitem(spark, sfDir)
@@ -467,11 +440,8 @@ object ScanOps {
         .withColumn("zb", shiftright(graft.functions.ZOrder(col("zx"),
           col("zy")), Z_SHIFT).cast("int"))
         .repartition(col("zb"))
-        .write.mode("overwrite").partitionBy("zb").parquet(path)
-      java.nio.file.Files.writeString(spec.toPath, want)
+        .write.partitionBy("zb").parquet(dir)
     }
-    path
-  }
 
   /** Box bounds for [[scanZorder]] — deliberately NOT tile-aligned, so
     * the pruned tile set (4 of 64) still needs the residual cell
@@ -518,39 +488,31 @@ object ScanOps {
     * stats sidecar — the Delta/Iceberg data-skipping mechanics
     * (manifest file stats) on plain parquet. `repartitionByRange`
     * clusters rows by `l_shipdate` into 16 files with tight,
-    * near-disjoint date ranges; one extra pass collects each file's
-    * (min, max) into a one-file sidecar table. Same freshness
-    * contract as every derived layout. */
+    * near-disjoint date ranges, directly in the layout directory
+    * (`q_scan_file_metadata`'s oracle globs them there); one extra
+    * pass collects each file's (min, max) into the one-file `_stats`
+    * sidecar, and one more builds the per-file Bloom index `_bloom`
+    * ([[writeBloomIndex]]). Spark's file listing skips `_`-prefixed
+    * entries, so reading the directory reads the 16 data files. */
   private[graft] def statsLayoutDir(spark: SparkSession,
-      sfDir: String): String = {
-    val path = scratch(sfDir) + "/lineitem_statskip"
-    val marker = new java.io.File(path, "_SUCCESS")
-    val spec = new java.io.File(path, "_GRAFT_SPEC")
-    val statsMarker = new java.io.File(path + "_stats", "_SUCCESS")
-    val want = "v1|cluster=l_shipdate|files=16|stats=min_max_per_file"
-    val src = new java.io.File(s"$sfDir/lineitem.parquet")
-    def newestUnder(f: java.io.File): Long =
-      if (f.isDirectory) (f.lastModified() +: f.listFiles().map(newestUnder)).max
-      else f.lastModified()
-    val fresh = marker.exists() && spec.exists() && statsMarker.exists() &&
-      newestUnder(src) <= marker.lastModified() &&
-      java.nio.file.Files.readString(spec.toPath) == want
-    if (!fresh) {
+      sfDir: String): String =
+    DfCache.layout(sfDir, "lineitem_statskip",
+        "v2|cluster=l_shipdate|files=16|stats=min_max_per_file" +
+          s"|bloom=bits=$BLOOM_BITS,k=$BLOOM_K,key=l_orderkey",
+        Seq(s"$sfDir/lineitem.parquet")) { dir =>
       Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_shipdate"), col("l_quantity"),
           col("l_returnflag"))
         .repartitionByRange(16, col("l_shipdate"))
-        .write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+        .write.parquet(dir)
+      spark.read.parquet(dir)
         .groupBy(input_file_name().as("file"))
         .agg(min(col("l_shipdate")).as("min_d"),
           max(col("l_shipdate")).as("max_d"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(path + "_stats")
-      java.nio.file.Files.writeString(spec.toPath, want)
+        .write.parquet(s"$dir/_stats")
+      writeBloomIndex(spark, dir)
     }
-    path
-  }
 
   /** Date-range bounds for [[scanStatsSkipping]] — half a year out of
     * the fixture's ~7-year l_shipdate span, so stats pruning keeps
@@ -573,7 +535,7 @@ object ScanOps {
     val dir = statsLayoutDir(spark, sfDir)
     val lo = to_timestamp(lit(skipLo))
     val hi = to_timestamp(lit(skipHi))
-    val files = spark.read.parquet(dir + "_stats")
+    val files = spark.read.parquet(s"$dir/_stats")
       .filter($"max_d" >= lo && $"min_d" <= hi)
       .select($"file").collect().map(_.getString(0))
     require(files.nonEmpty, "stats pruning removed every file")
@@ -594,28 +556,17 @@ object ScanOps {
        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin
 
   /** Write-once MORTON-CLUSTERED flat-file layout + TWO-column
-    * per-file min/max sidecar: rows ordered by the codegen'd
+    * per-file min/max sidecar `_stats`: rows ordered by the codegen'd
     * [[graft.functions.ZOrder]] key of (l_orderkey%256, l_partkey%256)
     * and range-split into 16 files, so each file's (x, y) bounding
     * box is tight in BOTH dimensions — the property that makes
     * multi-column stats skipping work from ONE clustering order
-    * (Delta/Iceberg `OPTIMIZE ZORDER BY` + manifest column stats).
-    * Same freshness contract as every derived layout. */
+    * (Delta/Iceberg `OPTIMIZE ZORDER BY` + manifest column stats). */
   private[graft] def stats2dLayoutDir(spark: SparkSession,
-      sfDir: String): String = {
-    val path = scratch(sfDir) + "/lineitem_statskip2d"
-    val marker = new java.io.File(path, "_SUCCESS")
-    val spec = new java.io.File(path, "_GRAFT_SPEC")
-    val statsMarker = new java.io.File(path + "_stats", "_SUCCESS")
-    val want = "v1|cluster=zorder(l_orderkey%256,l_partkey%256)|files=16|stats=2d_min_max"
-    val src = new java.io.File(s"$sfDir/lineitem.parquet")
-    def newestUnder(f: java.io.File): Long =
-      if (f.isDirectory) (f.lastModified() +: f.listFiles().map(newestUnder)).max
-      else f.lastModified()
-    val fresh = marker.exists() && spec.exists() && statsMarker.exists() &&
-      newestUnder(src) <= marker.lastModified() &&
-      java.nio.file.Files.readString(spec.toPath) == want
-    if (!fresh) {
+      sfDir: String): String =
+    DfCache.layout(sfDir, "lineitem_statskip2d",
+        "v2|cluster=zorder(l_orderkey%256,l_partkey%256)|files=16|stats=2d_min_max",
+        Seq(s"$sfDir/lineitem.parquet")) { dir =>
       Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"),
           col("l_returnflag"))
@@ -624,17 +575,14 @@ object ScanOps {
         .withColumn("z", graft.functions.ZOrder(col("zx"), col("zy")))
         .repartitionByRange(16, col("z"))
         .drop("z")
-        .write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+        .write.parquet(dir)
+      spark.read.parquet(dir)
         .groupBy(input_file_name().as("file"))
         .agg(min(col("zx")).as("min_x"), max(col("zx")).as("max_x"),
           min(col("zy")).as("min_y"), max(col("zy")).as("max_y"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(path + "_stats")
-      java.nio.file.Files.writeString(spec.toPath, want)
+        .write.parquet(s"$dir/_stats")
     }
-    path
-  }
 
   /** 2-D box bounds for [[scanStatsSkipping2d]] — same box as the
     * Z-order directory key, so the two pruning mechanisms (partition
@@ -657,7 +605,7 @@ object ScanOps {
   def scanStatsSkipping2d(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val dir = stats2dLayoutDir(spark, sfDir)
-    val files = spark.read.parquet(dir + "_stats")
+    val files = spark.read.parquet(s"$dir/_stats")
       .filter($"max_x" >= s2Xlo && $"min_x" <= s2Xhi &&
         $"max_y" >= s2Ylo && $"min_y" <= s2Yhi)
       .select($"file").collect().map(_.getString(0))
@@ -688,19 +636,10 @@ object ScanOps {
     * row's stable physical address (Iceberg's `(_file, _pos)`),
     * immune to read-order nondeterminism because it is stored, not
     * derived. Delete "waves" never touch these files. */
-  private[graft] def dvLayoutDir(spark: SparkSession, sfDir: String): String = {
-    val path = scratch(sfDir) + "/lineitem_dv_base"
-    val marker = new java.io.File(path, "_SUCCESS")
-    val spec = new java.io.File(path, "_GRAFT_SPEC")
-    val want = s"v1|buckets=$DV_BUCKETS|pos=row_number_at_write"
-    val src = new java.io.File(s"$sfDir/lineitem.parquet")
-    def newestUnder(f: java.io.File): Long =
-      if (f.isDirectory) (f.lastModified() +: f.listFiles().map(newestUnder)).max
-      else f.lastModified()
-    val fresh = marker.exists() && spec.exists() &&
-      newestUnder(src) <= marker.lastModified() &&
-      java.nio.file.Files.readString(spec.toPath) == want
-    if (!fresh) {
+  private[graft] def dvLayoutDir(spark: SparkSession, sfDir: String): String =
+    DfCache.layout(sfDir, "lineitem_dv_base",
+        s"v1|buckets=$DV_BUCKETS|pos=row_number_at_write",
+        Seq(s"$sfDir/lineitem.parquet")) { dir =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("bucket"))
         .orderBy(col("l_orderkey"), col("l_linenumber"),
@@ -714,11 +653,8 @@ object ScanOps {
           pmod(hash(col("l_orderkey")), lit(DV_BUCKETS)).cast("int"))
         .withColumn("pos", (row_number().over(w) - 1).cast("long"))
         .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(path)
-      java.nio.file.Files.writeString(spec.toPath, want)
+        .write.partitionBy("bucket").parquet(dir)
     }
-    path
-  }
 
   /** DELETION VECTORS (merge-on-read deletes — Delta DVs / Iceberg
     * positional delete files): two delete waves are committed as
@@ -800,39 +736,27 @@ object ScanOps {
   }
 
   /** Two-generation layout for PARTITION-SPEC EVOLUTION: generation 1
-    * (orderkey < 750) is partitioned by ship month alone; generation
-    * 2 (the "later ingest") by (l_returnflag, ship_month) — the
-    * evolved, finer spec. Old files are never rewritten when the
-    * spec changes (the Iceberg rule); each generation prunes under
-    * ITS OWN spec. Same freshness contract as every derived layout. */
+    * (orderkey < 750, `pspec1/`) is partitioned by ship month alone;
+    * generation 2 (the "later ingest", `pspec2/`) by (l_returnflag,
+    * ship_month) — the evolved, finer spec. Old files are never
+    * rewritten when the spec changes (the Iceberg rule); each
+    * generation prunes under ITS OWN spec. Both generations are one
+    * layout, so a rebuild replaces them together. */
   private[graft] def partitionEvolutionDirs(spark: SparkSession,
       sfDir: String): (String, String) = {
-    val g1 = scratch(sfDir) + "/lineitem_pspec1"
-    val g2 = scratch(sfDir) + "/lineitem_pspec2"
-    val m1 = new java.io.File(g1, "_SUCCESS")
-    val m2 = new java.io.File(g2, "_SUCCESS")
-    val spec = new java.io.File(g1, "_GRAFT_SPEC")
-    val want = "v2|gen1=month(l_shipdate)|gen2=(l_returnflag,month)|split=750"
-    val src = new java.io.File(s"$sfDir/lineitem.parquet")
-    def newestUnder(f: java.io.File): Long =
-      if (f.isDirectory) (f.lastModified() +: f.listFiles().map(newestUnder)).max
-      else f.lastModified()
-    val fresh = m1.exists() && m2.exists() && spec.exists() &&
-      newestUnder(src) <= math.min(m1.lastModified(), m2.lastModified()) &&
-      java.nio.file.Files.readString(spec.toPath) == want
-    if (!fresh) {
+    val root = DfCache.layout(sfDir, "lineitem_pspec",
+        "v2|gen1=month(l_shipdate)|gen2=(l_returnflag,month)|split=750",
+        Seq(s"$sfDir/lineitem.parquet")) { dir =>
       val base = Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
           col("l_shipdate"))
         .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
       base.filter(col("l_orderkey") < 750L)
-        .write.mode("overwrite").partitionBy("ship_month").parquet(g1)
+        .write.partitionBy("ship_month").parquet(s"$dir/pspec1")
       base.filter(col("l_orderkey") >= 750L)
-        .write.mode("overwrite")
-        .partitionBy("l_returnflag", "ship_month").parquet(g2)
-      java.nio.file.Files.writeString(spec.toPath, want)
+        .write.partitionBy("l_returnflag", "ship_month").parquet(s"$dir/pspec2")
     }
-    (g1, g2)
+    (s"$root/pspec1", s"$root/pspec2")
   }
 
   /** PARTITION-SPEC EVOLUTION (Iceberg's headline metadata feature):
@@ -879,41 +803,27 @@ object ScanOps {
   private val BLOOM_BITS = 1 << 15
   private val BLOOM_K = 4
 
-  /** PER-FILE BLOOM INDEX sidecar over the 16-file range layout: for
-    * every (file, key, seed) the key's bit is OR-ed into the file's
-    * 512-word bit array (the same distributed `bit_or` trick the
-    * deletion vectors use — the whole build is one aggregation, no
-    * driver loop). Sidecar size is BLOOM_BITS/8 bytes per file —
-    * metadata-scale forever (4 KB per file at ANY row count), which
-    * is what distinguishes a Bloom index from an exact inverted
-    * index at 100 TB. Same freshness contract as the other layouts. */
-  private[graft] def bloomIndexDir(spark: SparkSession, sfDir: String)
-      : String = {
-    val layout = statsLayoutDir(spark, sfDir)
-    val path = layout + "_bloom"
-    val marker = new java.io.File(path, "_SUCCESS")
-    val spec = new java.io.File(path, "_GRAFT_SPEC")
-    val want = s"v1|bits=$BLOOM_BITS|k=$BLOOM_K|key=l_orderkey"
-    val layoutMarker = new java.io.File(layout, "_SUCCESS")
-    val fresh = marker.exists() && spec.exists() &&
-      layoutMarker.lastModified() <= marker.lastModified() &&
-      java.nio.file.Files.readString(spec.toPath) == want
-    if (!fresh) {
-      import spark.implicits._
-      val keys = spark.read.parquet(layout)
-        .select(input_file_name().as("file"), $"l_orderkey")
-      val bits = (0 until BLOOM_K).map { s =>
-        val pos = pmod(xxhash64($"l_orderkey", lit(s)), lit(BLOOM_BITS.toLong))
-        keys.select($"file", shiftright(pos, 6).as("word"), pos.as("pos"))
-          .select($"file", $"word",
-            expr("shiftleft(1L, cast(pmod(pos, 64) as int))").as("mask"))
-      }.reduce(_ unionByName _)
-      bits.groupBy($"file", $"word").agg(bit_or($"mask").as("bits"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(path)
-      java.nio.file.Files.writeString(spec.toPath, want)
-    }
-    path
+  /** PER-FILE BLOOM INDEX sidecar `_bloom` of the 16-file range layout
+    * ([[statsLayoutDir]], which calls this): for every (file, key, seed)
+    * the key's bit is OR-ed into the file's 512-word bit array (the
+    * same distributed `bit_or` trick the deletion vectors use — the
+    * whole build is one aggregation, no driver loop). Sidecar size is
+    * BLOOM_BITS/8 bytes per file — metadata-scale forever (4 KB per
+    * file at ANY row count), which is what distinguishes a Bloom index
+    * from an exact inverted index at 100 TB. */
+  private def writeBloomIndex(spark: SparkSession, layout: String): Unit = {
+    import spark.implicits._
+    val keys = spark.read.parquet(layout)
+      .select(input_file_name().as("file"), $"l_orderkey")
+    val bits = (0 until BLOOM_K).map { s =>
+      val pos = pmod(xxhash64($"l_orderkey", lit(s)), lit(BLOOM_BITS.toLong))
+      keys.select($"file", shiftright(pos, 6).as("word"), pos.as("pos"))
+        .select($"file", $"word",
+          expr("shiftleft(1L, cast(pmod(pos, 64) as int))").as("mask"))
+    }.reduce(_ unionByName _)
+    bits.groupBy($"file", $"word").agg(bit_or($"mask").as("bits"))
+      .coalesce(1)
+      .write.parquet(s"$layout/_bloom")
   }
 
   /** Point-lookup keys for [[scanBloomIndex]] — inside the orderkey
@@ -937,7 +847,7 @@ object ScanOps {
   private[graft] def bloomCandidates(spark: SparkSession, sfDir: String,
       keys: Seq[Long]): Seq[String] = {
     import spark.implicits._
-    val idx = spark.read.parquet(bloomIndexDir(spark, sfDir))
+    val idx = spark.read.parquet(s"${statsLayoutDir(spark, sfDir)}/_bloom")
     val probes = keys.toDF("k")
     val probeBits = (0 until BLOOM_K).map { s =>
       val pos = pmod(xxhash64($"k", lit(s)), lit(BLOOM_BITS.toLong))
@@ -981,35 +891,25 @@ object ScanOps {
       |GROUP BY 1 ORDER BY min_d, file_name""".stripMargin
 
   /** Write-once p_name-clustered layout + TRUNCATED-STRING per-file
-    * stats sidecar: 8 range-clustered files, each with an 8-char
-    * prefix MIN (a lower bound by prefix order) and, for the MAX, the
-    * 8-char prefix with its last character incremented — a STRICT
-    * upper bound on every string in the file. This is the Parquet/
-    * Iceberg string-stats subtlety: raw string min/max on long
+    * stats sidecar `_stats`: 8 range-clustered files, each with an
+    * 8-char prefix MIN (a lower bound by prefix order) and, for the
+    * MAX, the 8-char prefix with its last character incremented — a
+    * STRICT upper bound on every string in the file. This is the
+    * Parquet/Iceberg string-stats subtlety: raw string min/max on long
     * values bloats the manifest, so real formats store truncated
     * bounds, and truncation is only CORRECT if the max is rounded UP
     * (a truncated max taken verbatim would under-bound and skip files
-    * that hold matches). Same freshness contract as every layout. */
+    * that hold matches). */
   private[graft] def stringStatsLayoutDir(spark: SparkSession,
-      sfDir: String): String = {
-    val path = scratch(sfDir) + "/part_statskip_str"
-    val marker = new java.io.File(path, "_SUCCESS")
-    val spec = new java.io.File(path, "_GRAFT_SPEC")
-    val statsMarker = new java.io.File(path + "_stats", "_SUCCESS")
-    val want = "v1|cluster=p_name|files=8|stats=trunc8_min_maxub"
-    val src = new java.io.File(s"$sfDir/part.parquet")
-    def newestUnder(f: java.io.File): Long =
-      if (f.isDirectory) (f.lastModified() +: f.listFiles().map(newestUnder)).max
-      else f.lastModified()
-    val fresh = marker.exists() && spec.exists() && statsMarker.exists() &&
-      newestUnder(src) <= marker.lastModified() &&
-      java.nio.file.Files.readString(spec.toPath) == want
-    if (!fresh) {
+      sfDir: String): String =
+    DfCache.layout(sfDir, "part_statskip_str",
+        "v2|cluster=p_name|files=8|stats=trunc8_min_maxub",
+        Seq(s"$sfDir/part.parquet")) { dir =>
       Tables.part(spark, sfDir)
         .select(col("p_partkey"), col("p_name"), col("p_retailprice"))
         .repartitionByRange(8, col("p_name"))
-        .write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+        .write.parquet(dir)
+      spark.read.parquet(dir)
         .groupBy(input_file_name().as("file"))
         .agg(min(col("p_name")).as("mn"), max(col("p_name")).as("mx"))
         .select(col("file"),
@@ -1019,11 +919,8 @@ object ScanOps {
               expr("char(ascii(substring(mx, 8, 1)) + 1)")))
             .as("max_ub"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(path + "_stats")
-      java.nio.file.Files.writeString(spec.toPath, want)
+        .write.parquet(s"$dir/_stats")
     }
-    path
-  }
 
   /** Name-range bounds for [[scanStatsSkippingString]] — first
     * letters h..n out of the fixture's {b,c,h,l,n,o,r,s} palette, so
@@ -1045,7 +942,7 @@ object ScanOps {
       sfDir: String): DataFrame = {
     import spark.implicits._
     val dir = stringStatsLayoutDir(spark, sfDir)
-    val files = spark.read.parquet(dir + "_stats")
+    val files = spark.read.parquet(s"$dir/_stats")
       .filter($"max_ub" >= strSkipLo && $"min_t" < strSkipHi)
       .select($"file").collect().map(_.getString(0))
     require(files.nonEmpty, "string stats pruning removed every file")

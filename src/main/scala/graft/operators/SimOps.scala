@@ -271,30 +271,14 @@ object SimOps {
       .orderBy($"query_id", $"rk")
   }
 
-  /** Write-once bucket-partitioned embedding layout under the local
-    * warehouse (same freshness contract as the bucketed-join tables:
-    * _SUCCESS newer than the source AND a _SPEC fingerprint matching
-    * this build's layout definition, else rewrite). ≤ 2^LSH_PLANES
-    * directories; at cluster scale this is the one-off write that
-    * converts every later probe from full-scan+filter to a
-    * partition-pruned read. */
-  private[graft] def lshLayoutDir(spark: SparkSession, sfDir: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val whPath = if (wh.contains(":")) new java.net.URI(wh).getPath else wh
-    val dir = new java.io.File(whPath, s"emb_lsh$tag")
-    val spec = s"vec_id,label,embedding|partitionBy(bucket)|planes=$LSH_PLANES"
-    val marker = new java.io.File(dir, "_SUCCESS")
-    val specFile = new java.io.File(dir, "_SPEC")
-    val src = new java.io.File(s"$sfDir/embeddings.parquet")
-    def newestUnder(f: java.io.File): Long =
-      if (f.isDirectory) (f.lastModified() +: f.listFiles().map(newestUnder)).max
-      else f.lastModified()
-    val fresh = marker.exists() && specFile.exists() &&
-      newestUnder(src) <= marker.lastModified() &&
-      new String(java.nio.file.Files.readAllBytes(specFile.toPath),
-        java.nio.charset.StandardCharsets.UTF_8) == spec
-    if (!fresh) {
+  /** Write-once bucket-partitioned embedding layout
+    * ([[graft.engine.DfCache.layout]]). ≤ 2^LSH_PLANES directories; at
+    * cluster scale this is the one-off write that converts every later
+    * probe from full-scan+filter to a partition-pruned read. */
+  private[graft] def lshLayoutDir(spark: SparkSession, sfDir: String): String =
+    DfCache.layout(sfDir, "emb_lsh",
+        s"vec_id,label,embedding|partitionBy(bucket)|planes=$LSH_PLANES",
+        Seq(s"$sfDir/embeddings.parquet")) { dir =>
       // repartition BY bucket before the partitioned write: one file
       // per bucket directory instead of (shuffle partitions × buckets)
       // fragments — file-listing and open() cost dominate small-probe
@@ -303,13 +287,8 @@ object SimOps {
       Tables.embeddings(spark, sfDir)
         .withColumn("bucket", expr(lshSigExpr("embedding")))
         .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(dir.getAbsolutePath)
-      java.nio.file.Files.write(specFile.toPath,
-        spec.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .write.partitionBy("bucket").parquet(dir)
     }
-    dir.getAbsolutePath
-  }
 
   /** Per-label stats over the array column ("multimodal columns"):
     * count, mean L2 norm, centroid L2 norm, mean of dim 1 — all via

@@ -38,7 +38,8 @@ import org.apache.spark.sql.types.IntegerType
   * speculation cannot change bytes. */
 case class TopKPerKeyPlan(keys: Seq[Expression], order: Seq[SortOrder],
     k: Int, rankAttr: AttributeReference, child: LogicalPlan,
-    finalPartitions: Option[Int] = None)
+    finalPartitions: Option[Int] = None,
+    maxPartialKeys: Int = TopKPerKey.MaxPartialKeys)
   extends UnaryNode {
   override def output: Seq[Attribute] = child.output :+ rankAttr
   // rankAttr is born here, not read from the child
@@ -53,7 +54,7 @@ case class TopKPerKeyPlan(keys: Seq[Expression], order: Seq[SortOrder],
   * runs before the exchange like partial aggregation.
   *
   * Bounded state: the per-partition heap map is capped at
-  * [[TopKPerKey.MAX_PARTIAL_KEYS_CONF]] distinct keys (default 2^20).
+  * `maxPartialKeys` distinct keys ([[TopKPerKey.MaxPartialKeys]]).
   * Once the cap is hit, rows of UNSEEN keys stream straight through to
   * the exchange un-pruned — partial pruning is an optimization, the
   * final exec re-prunes every key, so the fallback only costs shuffle
@@ -63,16 +64,16 @@ case class TopKPerKeyPlan(keys: Seq[Expression], order: Seq[SortOrder],
   * the TaskMemoryManager is the heavier alternative). Keys already
   * heaped keep pruning after the cap. */
 case class PartialTopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder],
-    k: Int, child: SparkPlan) extends UnaryExecNode {
+    k: Int, child: SparkPlan,
+    maxPartialKeys: Int = TopKPerKey.MaxPartialKeys) extends UnaryExecNode {
   import scala.jdk.CollectionConverters._
   override def output: Seq[Attribute] = child.output
   override def outputPartitioning = child.outputPartitioning
   override def requiredChildDistribution: Seq[Distribution] =
     UnspecifiedDistribution :: Nil
   protected override def doExecute(): RDD[InternalRow] = {
-    val (keysB, orderB, childOut, kk) = (keys, order, child.output, k)
-    val maxKeys = conf.getConfString(
-      TopKPerKey.MAX_PARTIAL_KEYS_CONF, (1 << 20).toString).toInt
+    val (keysB, orderB, childOut, kk, maxKeys) =
+      (keys, order, child.output, k, maxPartialKeys)
     child.execute().mapPartitions({ iter =>
       val keyProj = UnsafeProjection.create(keysB, childOut)
       val ord = GenerateOrdering.generate(orderB, childOut)
@@ -152,19 +153,20 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder],
 /** Planner hook: one logical node → partial + final pair. */
 object TopKPerKeyStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerKeyPlan(keys, order, k, rankAttr, child, finalParts) =>
+    case TopKPerKeyPlan(keys, order, k, rankAttr, child, finalParts, maxKeys) =>
       TopKPerKeyExec(keys, order, k, rankAttr,
-        PartialTopKPerKeyExec(keys, order, k, planLater(child)),
+        PartialTopKPerKeyExec(keys, order, k, planLater(child), maxKeys),
         finalParts) :: Nil
     case _ => Nil
   }
 }
 
 object TopKPerKey {
-  /** Cap on distinct keys held in one partition's partial heap map
-    * (see [[PartialTopKPerKeyExec]]); settable per session for tests
-    * and for memory-constrained deployments. */
-  val MAX_PARTIAL_KEYS_CONF = "spark.graft.topk.maxPartialKeys"
+  /** Default cap on distinct keys held in one partition's partial
+    * heap map (see [[PartialTopKPerKeyExec]]). [[topK]] does not
+    * expose it; graft code (a spec forcing the pass-through path)
+    * sets it on the plan node. */
+  private[graft] val MaxPartialKeys: Int = 1 << 20
 
   /** Size-k heap per key over one partition. PQ comparator is the
     * REVERSED row order so poll() evicts the worst row; a row that
@@ -173,7 +175,7 @@ object TopKPerKey {
     * Memory caveat: the map holds O(distinct keys per partition × k)
     * copied rows ON HEAP, outside Spark's task memory manager — it
     * cannot spill. The PARTIAL side bounds this with the
-    * [[TopKPerKey.MAX_PARTIAL_KEYS_CONF]] pass-through cap; this
+    * [[MaxPartialKeys]] pass-through cap; this
     * helper now serves the FINAL side, where clustering means the
     * per-partition key set is total-keys/partitions (the same state
     * bound as any hash aggregation) and the retained rows are ≤ k per

@@ -5,6 +5,8 @@ import java.util
 
 import scala.collection.concurrent.TrieMap
 
+import graft.engine.DfCache
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
@@ -35,8 +37,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * a catalog once per session and never re-reads its options.
   *
   * Resolution is cached per (path, layout fingerprint): the
-  * fingerprint is the directory's `_GRAFT_SPEC` content when present
-  * (the derived-layout discipline — a layout rebuilt under different
+  * fingerprint is the directory's layout spec
+  * ([[graft.engine.DfCache.SpecFile]]) when present (the
+  * derived-layout discipline — a layout rebuilt under different
   * read semantics gets a fresh `Table`, the stale resolution dies),
   * else the data file's mtime (a regenerated fixture invalidates
   * too). Tables delegate to Spark's own `ParquetTable`, so scans
@@ -76,10 +79,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   private def fileOf(ident: Identifier): File =
     new File(dirOf(ident.namespace()), s"${ident.name()}.parquet")
 
-  /** Layout fingerprint: `_GRAFT_SPEC` content if the directory
-    * declares one, else the newest mtime under the table path. */
+  /** Layout fingerprint: the layout spec file's content if the
+    * directory declares one, else the newest mtime under the table
+    * path. */
   private def fingerprint(dir: File, table: File): String = {
-    val spec = new File(dir, "_GRAFT_SPEC")
+    val spec = new File(dir, DfCache.SpecFile)
     if (spec.exists())
       new String(java.nio.file.Files.readAllBytes(spec.toPath),
         java.nio.charset.StandardCharsets.UTF_8)

@@ -14,6 +14,7 @@ import graft.operators.{CfOps, ContentOps, DedupOps, MlOps, TxnOps}
   * intermediates, relations, fixtures and staged layouts, never an
   * unbounded accumulation. Dropping never deletes a directory a
   * returned frame may still read; stale scratch of dead JVMs is swept.
+  * Write-once derived layouts are rebuilt exactly when stale, once.
   * (The registry's unpersist-on-eviction is also pinned in
   * Round5Spec.) */
 class CacheLifecycleSpec extends SparkSpec {
@@ -147,6 +148,101 @@ class CacheLifecycleSpec extends SparkSpec {
       "sweeping a clone must drop the link, not the source's snapshot")
     assert(foreign.exists())
     TxnLog.destroy(root.getPath)
+  }
+
+  /** A fixture dir holding one source file, a counting layout write
+    * (one data file per build) and the layout call under test. */
+  private final class LayoutProbe {
+    val sfDir: String = Files.createTempDirectory("graft_layout").toString
+    val src: File = new File(sfDir, "t.parquet")
+    Files.write(src.toPath, Array[Byte](1))
+    val writes = new java.util.concurrent.atomic.AtomicInteger()
+    def build(spec: String = "v1", pause: Long = 0L): String =
+      DfCache.layout(sfDir, "probe", spec, Seq(src.getPath)) { dir =>
+        writes.incrementAndGet()
+        Thread.sleep(pause)
+        new File(dir).mkdirs()
+        Files.write(new File(dir, "part-0.parquet").toPath, Array[Byte](2))
+      }
+    def marker: File = new File(DfCache.layoutRoot(sfDir), s"probe/${DfCache.SpecFile}")
+    def close(): Unit = {
+      TxnLog.destroy(DfCache.layoutRoot(sfDir)); TxnLog.destroy(sfDir)
+    }
+  }
+
+  private def withProbe(body: LayoutProbe => Unit): Unit = {
+    val p = new LayoutProbe
+    try body(p) finally p.close()
+  }
+
+  private def mtimes(dir: String): Map[String, Long] =
+    new File(dir).listFiles().map(f => f.getName -> f.lastModified()).toMap
+
+  test("a fresh derived layout is not rewritten and its files keep their mtimes") {
+    withProbe { p =>
+      val dir = p.build()
+      assert(p.writes.get == 1)
+      assert(Files.readString(p.marker.toPath) == "v1")
+      val before = mtimes(dir)
+      assert(before.keySet == Set("part-0.parquet", DfCache.SpecFile))
+      Thread.sleep(20)
+      assert(p.build() == dir)
+      assert(p.writes.get == 1, "a fresh layout must not be rewritten")
+      assert(mtimes(dir) == before)
+    }
+  }
+
+  test("a changed layout spec rebuilds the layout") {
+    withProbe { p =>
+      p.build()
+      p.build("v2")
+      assert(p.writes.get == 2)
+      assert(Files.readString(p.marker.toPath) == "v2")
+    }
+  }
+
+  test("a source touched newer than the layout rebuilds it") {
+    withProbe { p =>
+      p.build()
+      // the source touched 10 s after the build: age the build instead
+      // of dating the source into the future
+      assert(p.marker.setLastModified(p.src.lastModified() - 10000L))
+      p.build()
+      assert(p.writes.get == 2)
+      assert(p.marker.lastModified() >= p.src.lastModified())
+      p.build()
+      assert(p.writes.get == 2, "the rebuilt layout is fresh again")
+    }
+  }
+
+  test("a layout with data but no spec marker (an interrupted write) is rebuilt") {
+    withProbe { p =>
+      val dir = p.build()
+      assert(p.marker.delete())
+      Files.write(new File(dir, "part-9.parquet").toPath, Array[Byte](3))
+      p.build()
+      assert(p.writes.get == 2)
+      assert(mtimes(dir).keySet == Set("part-0.parquet", DfCache.SpecFile),
+        "a rebuild must clear the interrupted write's files")
+    }
+  }
+
+  test("four threads on one stale layout run its write exactly once") {
+    withProbe { p =>
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      try {
+        val dirs = (1 to 4).map { _ =>
+          pool.submit(new java.util.concurrent.Callable[String] {
+            def call(): String = { start.await(); p.build(pause = 200L) }
+          })
+        }
+        start.countDown()
+        assert(dirs.map(_.get()).distinct.size == 1)
+      } finally pool.shutdown()
+      assert(p.writes.get == 1, s"write ran ${p.writes.get} times")
+      assert(Files.readString(p.marker.toPath) == "v1")
+    }
   }
 
   test("ALS calls leave no factor RDDs persisted") {

@@ -69,7 +69,7 @@ class Round10Spec extends SparkSpec {
     import graft.operators.ScanOps
     ScanOps.scanStatsSkipping2d(spark, sf).collect()
     val dir = ScanOps.stats2dLayoutDir(spark, sf)
-    val stats = spark.read.parquet(dir + "_stats")
+    val stats = spark.read.parquet(s"$dir/_stats")
     assert(stats.count() == 16, "one stats row per Morton-clustered file")
     val (xlo, xhi, ylo, yhi) =
       (ScanOps.s2Xlo, ScanOps.s2Xhi, ScanOps.s2Ylo, ScanOps.s2Yhi)

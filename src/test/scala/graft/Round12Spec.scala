@@ -76,7 +76,7 @@ class Round12Spec extends SparkSpec {
 
   test("string stats skipping cuts files and loses no qualifying rows") {
     val dir = ScanOps.stringStatsLayoutDir(spark, sf)
-    val stats = spark.read.parquet(dir + "_stats")
+    val stats = spark.read.parquet(s"$dir/_stats")
     val total = stats.count()
     val kept = stats
       .filter(col("max_ub") >= ScanOps.strSkipLo &&
@@ -106,7 +106,7 @@ class Round12Spec extends SparkSpec {
     val truth = spark.read.parquet(dir)
       .groupBy(input_file_name().as("file"))
       .agg(min("p_name").as("tmn"), max("p_name").as("tmx"))
-    val bad = spark.read.parquet(dir + "_stats")
+    val bad = spark.read.parquet(s"$dir/_stats")
       .join(truth, "file")
       .filter(col("min_t") > col("tmn") || col("max_ub") < col("tmx") ||
         (length(col("tmx")) > 8 && col("max_ub") <= col("tmx")))

@@ -365,8 +365,7 @@ class Round5Spec extends SparkSpec with AdaptiveSparkPlanHelper {
     // materialize the layout (also oracle-checked as q_sink_partitioned)
     graft.operators.ScanOps.sinkPartitioned(spark, sf).collect()
     val root = new java.io.File(
-      "/tmp/graft_scratch/" + sf.replaceAll("[^A-Za-z0-9.]", "_")
-        + "/orders_by_status")
+      graft.engine.DfCache.scratch(spark, sf, "orders_by_status"))
     val dirs = root.listFiles().filter(f =>
       f.isDirectory && f.getName.startsWith("o_orderstatus="))
     assert(dirs.nonEmpty, s"no partition dirs under $root")

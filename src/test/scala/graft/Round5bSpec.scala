@@ -221,17 +221,20 @@ class Round5bSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("TopKPerKey partial-state cap: pass-through fallback is result-identical") {
     import graft.operators.WindowOps
-    import graft.plans.TopKPerKey
-    val dflt = WindowOps.rankTopNNative(spark, sf).collect().toSeq
+    import graft.plans.{PartialTopKPerKeyExec, TopKPerKey, TopKPerKeyPlan}
+    val native = WindowOps.rankTopNNative(spark, sf)
+    val dflt = native.collect().toSeq
     // cap of 2 distinct keys per partition forces almost every row of
     // every map partition through the un-pruned pass-through path —
     // the final exec must still produce byte-identical top-k
-    spark.conf.set(TopKPerKey.MAX_PARTIAL_KEYS_CONF, "2")
-    try {
-      val capped = WindowOps.rankTopNNative(spark, sf).collect().toSeq
-      assert(capped == dflt,
-        "partial-heap cap changed the operator's results")
-    } finally spark.conf.unset(TopKPerKey.MAX_PARTIAL_KEYS_CONF)
+    val cappedDf = TopKPerKey.frame(spark, native.queryExecution.analyzed
+      .transform { case p: TopKPerKeyPlan => p.copy(maxPartialKeys = 2) })
+    assert(collectWithSubqueries(cappedDf.queryExecution.executedPlan) {
+      case p: PartialTopKPerKeyExec => p.maxPartialKeys
+    } == Seq(2), "the cap must reach the partial exec")
+    val capped = cappedDf.collect().toSeq
+    assert(capped == dflt,
+      "partial-heap cap changed the operator's results")
   }
 
   test("q_upsert_merge: replaying the change feed is idempotent; actions consistent with the diff") {

@@ -16,7 +16,7 @@ class Round9Spec extends SparkSpec {
   test("stats skipping: sidecar covers all 16 files, predicate keeps few") {
     import spark.implicits._
     val dir = ScanOps.statsLayoutDir(spark, sf)
-    val stats = spark.read.parquet(dir + "_stats")
+    val stats = spark.read.parquet(s"$dir/_stats")
     assert(stats.count() == 16, "one stats row per range-clustered file")
     val lo = to_timestamp(lit(ScanOps.skipLo))
     val hi = to_timestamp(lit(ScanOps.skipHi))
